@@ -30,7 +30,7 @@ from alexandria_pipeline_spark.functions.checkpoints import (
     persistent_rdd_ids,
     unpersist_rdd_ids,
 )
-from alexandria_pipeline_spark.registry import query, scoped_persist
+from alexandria_pipeline_spark.registry import env_int, query, scoped_persist
 
 PR_ITERS = 3
 DAMP_MICRO = 850_000
@@ -1231,8 +1231,7 @@ def _ra_adj_limit() -> int:
     that normally routes _tri_edge_rows (and oracle-verify the forced
     path). A plan selector only — both sides of the gate compute
     identical values, pinned by the forced-path identity tests."""
-    v = os.environ.get("SPARK_GRAFT_RA_ADJ_LIMIT")
-    return int(v) if v else RA_ADJ_BROADCAST_LIMIT
+    return env_int("SPARK_GRAFT_RA_ADJ_LIMIT", RA_ADJ_BROADCAST_LIMIT)
 
 
 @query(

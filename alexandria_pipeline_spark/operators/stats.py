@@ -1123,8 +1123,20 @@ def orders_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join emits days²/2 ≈ a few million slope rows forever, and
     each slope is pre-truncated to integer millicents/day BEFORE the
     median (identical truncation both engines → the floored exact
-    median is hash-stable). One fact shuffle to per-day rows; the
-    pair join broadcasts the (tiny) per-day frame on both sides.
+    median is hash-stable).
+
+    The query is ONE lazy plan: the builder runs no Spark job and the
+    sink runs it once. Nothing is cached — recomputing the ~2,400-day
+    broadcast nested-loop join for its two readers costs less than
+    persisting ~2.9M slopes and re-reading them. AQE coalesces the
+    calendar-bounded per_day aggregate into ONE partition, so the
+    join's stream side is round-robin spread to defaultParallelism, a
+    plan-time constant (spread_to_cores would probe the partition
+    count, i.e. run the aggregate, inside the builder). The division is
+    guarded by `CASE WHEN db > da`: Catalyst pushes the band join's
+    inferred `isnotnull(band)` into the pair join's condition ahead of
+    `db > da`, so unguarded, ANSI raises DIVIDE_BY_ZERO on the da == db
+    candidates; on joined rows the guard never fires.
 
     The median itself is TWO-PHASE BANDED (r5 verdict #5 — the
     single-group exact percentile gathered all ~2.9M slopes into one
@@ -1136,42 +1148,33 @@ def orders_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(quantile_cont) == arithmetic-shift mean of the two middles
     (both exact: |v1+v2| < 2^53), so the oracle is unchanged."""
     o = load_table(spark, sf_dir, "orders")
-    from pyspark import StorageLevel
-
-    per_day = (
-        o.groupBy(
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-            )
-            .cast("long")
-            .alias("d")
+    per_day = o.groupBy(
+        F.datediff(
+            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
         )
-        .agg(
-            F.expr(
-                "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            ).alias("rev")
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cast("long")
+        .alias("d")
+    ).agg(
+        F.expr(
+            "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
+        ).alias("rev")
     )
-    a = per_day.select(F.col("d").alias("da"), F.col("rev").alias("ra"))
+    a = per_day.select(F.col("d").alias("da"), F.col("rev").alias("ra")).repartition(
+        spark.sparkContext.defaultParallelism
+    )
     b = per_day.select(F.col("d").alias("db"), F.col("rev").alias("rb"))
     slopes = (
         a.join(F.broadcast(b), F.col("db") > F.col("da"))
-        .select(F.expr("CAST(1000 * (rb - ra) div (db - da) AS BIGINT)").alias("s"))
+        .select(
+            F.expr("CASE WHEN db > da THEN 1000 * (rb - ra) div (db - da) END").alias("s")
+        )
         .select("s", F.shiftright("s", THEILSEN_BAND_SHIFT).alias("band"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # r12 optimization round: the band cumulative, the TOTAL, and the
-    # middle ranks all come out of ONE pass over the (tiny,
-    # value-bounded) bands frame — the r5 form ran a separate 1-row
-    # total aggregate and crossJoined it back, which cost an extra
-    # broadcast-job barrier in an already barrier-dominated eager
-    # query (6+ sequential jobs for ~2.9M rows of work; measured
-    # sf0.1 bench wall 3.47 → 2.30 s). Both windows share the same
-    # global band sort (Catalyst plans them in one Window operator),
-    # so this is still the two-phase banded median — no data-sized
-    # single-partition op appears: the unpartitioned window runs over
-    # band VALUES, whose cardinality the band shift bounds.
+    # The band cumulative, the TOTAL and the middle ranks come out of
+    # ONE pass over the bands frame: both windows share one global band
+    # sort, the plan's only unpartitioned window. It runs over band
+    # VALUES, whose cardinality the band shift bounds, so no data-sized
+    # single-partition operator appears.
     bands = slopes.groupBy("band").agg(F.count(F.lit(1)).alias("cnt"))
     w_cum = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
     w_all = Window.orderBy("band").rowsBetween(
@@ -1218,7 +1221,7 @@ def orders_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("np"), F.lit(0)).alias("n_pairs"),
     )
     n_days = per_day.agg(F.count(F.lit(1)).alias("n_days"))
-    out = (
+    return (
         F.broadcast(n_days)
         .crossJoin(med)
         .select(
@@ -1227,11 +1230,6 @@ def orders_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "theilsen_millicents_per_day",
         )
     )
-    # 1-row read-out: eager checkpoint, then release the two caches.
-    out = out.localCheckpoint(eager=True)
-    slopes.unpersist()
-    per_day.unpersist()
-    return out
 
 
 @query(

@@ -60,6 +60,21 @@ def scoped_persist(df: DataFrame, level=None) -> DataFrame:
     return df
 
 
+def env_int(name: str, default: int) -> int:
+    """Integer value of env var `name`, or `default` when it is unset,
+    empty or malformed — a bad measurement override falls back with a
+    stderr message instead of failing the query that reads it."""
+    import os
+    import sys
+
+    v = os.environ.get(name, "").strip()
+    try:
+        return int(v) if v else default
+    except ValueError:
+        print(f"{name}={v!r} is not an integer; using {default}", file=sys.stderr)
+        return default
+
+
 def persist_if_source_large(
     df: DataFrame, sf_dir: str, table: str = "documents",
     min_bytes: int | None = None,
@@ -79,11 +94,15 @@ def persist_if_source_large(
     an order of magnitude above the largest scale where replay has
     been MEASURED cheaper (sf1, ~6 MB/50 k docs), and two below the
     ~10^7-doc point the r12 analysis called for the persist.
-    SPARK_GRAFT_PERSIST_MIN_BYTES overrides for A/B measurement."""
+    SPARK_GRAFT_PERSIST_MIN_BYTES overrides the default for A/B
+    measurement; an explicit min_bytes overrides both."""
     import os
 
-    env = os.environ.get("SPARK_GRAFT_PERSIST_MIN_BYTES")
-    gate = int(env) if env else (min_bytes or 256 * 1024 * 1024)
+    gate = (
+        min_bytes
+        if min_bytes is not None
+        else env_int("SPARK_GRAFT_PERSIST_MIN_BYTES", 256 * 1024 * 1024)
+    )
     src = os.path.join(sf_dir, f"{table}.parquet")
     size = 0
     try:

@@ -19,10 +19,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Timed numbers must be produced under the same UTC calendar the
-# oracles assume — fail loudly rather than benchmark divergent plans.
-os.environ.setdefault("SPARK_GRAFT_REQUIRE_UTC", "1")
-
 from alexandria_pipeline_spark import QUERIES, get_spark, register_all
 from alexandria_pipeline_spark.registry import release_persisted
 
@@ -250,7 +246,30 @@ def chunk_queries(
     return chunks
 
 
+def write_self_record(out: dict, cpus: str | None, repo_dir: str) -> str | None:
+    """Write the complete record to BENCH_SELF.json (and
+    BENCH_SELF_c<cpus>.json when cpus is set) in repo_dir. Returns the
+    name the compact line should point at, or None when that file's
+    write failed — a stale file from an earlier run must never be
+    advertised as this run's."""
+    self_name = f"BENCH_SELF_c{cpus}.json" if cpus else "BENCH_SELF.json"
+    written = None
+    for fname in {self_name, "BENCH_SELF.json"}:
+        try:
+            with open(os.path.join(repo_dir, fname), "w") as f:
+                json.dump(out, f, indent=1)
+        except OSError as exc:  # noqa: PERF203 - never fail the bench on I/O
+            print(f"bench self-record write failed ({fname}): {exc!r}", file=sys.stderr)
+        else:
+            if fname == self_name:
+                written = self_name
+    return written
+
+
 def main() -> None:
+    # Timed numbers must be produced under the same UTC calendar the
+    # oracles assume — fail loudly rather than benchmark divergent plans.
+    os.environ.setdefault("SPARK_GRAFT_REQUIRE_UTC", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the run to a subset of the
     # headline set — the regression gate uses this for its targeted
@@ -435,15 +454,11 @@ def main() -> None:
     #      whole inside a truncated tail and a tail parser can merge
     #      every complete chunk line it sees (chunk/n_chunks say what
     #      fraction it got).
-    #   3. the compact final line names channel 1 via per_query_file.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    self_name = f"BENCH_SELF_c{cpus}.json" if cpus else "BENCH_SELF.json"
-    for fname in {self_name, "BENCH_SELF.json"}:
-        try:
-            with open(os.path.join(repo_dir, fname), "w") as f:
-                json.dump(out, f, indent=1)
-        except OSError as exc:  # noqa: PERF203 - never fail the bench on I/O
-            print(f"bench self-record write failed ({fname}): {exc!r}", file=sys.stderr)
+    #   3. the compact final line names channel 1 via per_query_file
+    #      (null when that file's write failed).
+    per_query_file = write_self_record(
+        out, cpus, os.path.dirname(os.path.abspath(__file__))
+    )
 
     for i, ch in enumerate(chunks := chunk_queries(headline, timings)):
         print(
@@ -461,7 +476,7 @@ def main() -> None:
         k: out[k]
         for k in ("metric", "value", "unit", "n_timed", "n_failed", "sf")
     }
-    compact["per_query_file"] = self_name
+    compact["per_query_file"] = per_query_file
     print(json.dumps(compact))
     spark.stop()
     sys.exit(0 if timings else 1)

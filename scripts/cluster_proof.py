@@ -32,15 +32,6 @@ import traceback
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# Must be set BEFORE the session builds. 2 workers x 2 cores x 2 GiB.
-os.environ["SPARK_GRAFT_MASTER"] = os.environ.get(
-    "SPARK_GRAFT_CLUSTER_MASTER", "local-cluster[2,2,2048]"
-)
-# The driver no longer hosts executor data; executors have their own
-# heaps. Keep the driver lean so the three JVMs fit comfortably.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
-os.environ.setdefault("SPARK_GRAFT_REQUIRE_UTC", "1")
-
 from alexandria_pipeline_spark import ORACLES, QUERIES, register_all
 from alexandria_pipeline_spark.registry import release_persisted
 from alexandria_pipeline_spark.session import get_spark
@@ -94,6 +85,14 @@ def _restart_no_dups(spark, sf_dir: str) -> str:
 
 
 def main() -> int:
+    # Must be set BEFORE the session builds. 2 workers x 2 cores x 2 GiB.
+    os.environ["SPARK_GRAFT_MASTER"] = os.environ.get(
+        "SPARK_GRAFT_CLUSTER_MASTER", "local-cluster[2,2,2048]"
+    )
+    # The driver no longer hosts executor data; executors have their own
+    # heaps. Keep the driver lean so the three JVMs fit comfortably.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+    os.environ.setdefault("SPARK_GRAFT_REQUIRE_UTC", "1")
     quick = "--quick" in sys.argv
     sf_dir = "/root/testdata/sf0.001" if quick else "/root/testdata/sf0.01"
     register_all()

@@ -27,11 +27,6 @@ import traceback
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-# Correctness path: a non-UTC session would make event-time calendar
-# extractions silently diverge from the naive-UTC DuckDB oracle, so
-# upgrade catalog's timezone warning to a hard error for this process.
-os.environ.setdefault("SPARK_GRAFT_REQUIRE_UTC", "1")
-
 from alexandria_pipeline_spark import ORACLES, QUERIES, register_all
 from alexandria_pipeline_spark.registry import release_persisted
 from alexandria_pipeline_spark.session import get_spark
@@ -39,6 +34,10 @@ from tests.oracle import compare, duck_connection
 
 
 def main() -> int:
+    # Correctness path: a non-UTC session would make event-time calendar
+    # extractions silently diverge from the naive-UTC DuckDB oracle, so
+    # upgrade catalog's timezone warning to a hard error for this process.
+    os.environ.setdefault("SPARK_GRAFT_REQUIRE_UTC", "1")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # Normalize before anything keys on the path (r10 ADVICE: a
     # trailing slash or symlink variant silently skipped the artifact

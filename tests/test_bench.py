@@ -1,0 +1,59 @@
+"""bench.py's output contract and the package's import hygiene, checked
+without starting Spark."""
+
+from __future__ import annotations
+
+import json
+import os
+import pathlib
+import subprocess
+import sys
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+import bench  # noqa: E402 - repo-root import
+
+
+def test_importing_bench_and_package_leaves_environ_unchanged():
+    """Importing bench or any package module must not touch the
+    process environment (a setdefault at import turned a later test's
+    timezone warning into a raise). Run in a fresh interpreter: this
+    process has imported everything already."""
+    probe = """
+import importlib, os, pkgutil, sys
+sys.path.insert(0, sys.argv[1])
+before = dict(os.environ)
+import alexandria_pipeline_spark as pkg
+import bench
+for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+    importlib.import_module(m.name)
+after = dict(os.environ)
+changed = sorted(k for k in before.keys() | after.keys() if before.get(k) != after.get(k))
+print(changed)
+"""
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if not k.startswith("SPARK_GRAFT_")
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", probe, str(REPO)],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=300,
+        check=True,
+    )
+    assert out.stdout.strip().splitlines()[-1] == "[]", out.stdout
+
+
+def test_self_record_pointer_is_null_when_write_fails(tmp_path, capsys):
+    out = {"metric": "headline_queries_total_sec", "value": 1.0}
+    assert bench.write_self_record(out, "8", str(tmp_path / "missing")) is None
+    assert "self-record write failed" in capsys.readouterr().err
+
+    assert bench.write_self_record(out, "8", str(tmp_path)) == "BENCH_SELF_c8.json"
+    for name in ("BENCH_SELF_c8.json", "BENCH_SELF.json"):
+        assert json.loads((tmp_path / name).read_text()) == out
+    assert bench.write_self_record(out, "", str(tmp_path)) == "BENCH_SELF.json"

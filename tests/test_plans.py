@@ -450,6 +450,7 @@ UNPART_WINDOW_BOUNDS = {
     "events_watermark_lateness_curve": "banded",
     "orders_abc_classification": "banded",
     "orders_pareto_8020": "banded",
+    "orders_theilsen_trend": "banded",
     "events_changepoint_binseg": "calendar",
     "events_cumulative_distinct_users": "calendar",
     "events_peak_concurrency_daily": "calendar",

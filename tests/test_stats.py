@@ -6,13 +6,19 @@ which only proves Spark ≡ DuckDB, not Spark ≡ math.
 
 from __future__ import annotations
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
+from alexandria_pipeline_spark import ORACLES
 from alexandria_pipeline_spark.operators.stats import (
     doc_length_gini,
     orders_cusum_changepoint,
     orders_linreg_trend,
+    orders_theilsen_trend,
 )
+from tests.conftest import SF_SMOKE
+from tests.oracle import compare
 
 
 def _orders_from_days(spark, rows):
@@ -280,3 +286,69 @@ def test_abc_classes_partition_everything(spark, monkeypatch):
     assert out["A"]["n_parts"] == 1 and out["A"]["revenue_cents"] == 800_000
     assert sum(r["n_parts"] for r in out.values()) == 5
     assert sum(r["revenue_cents"] for r in out.values()) == 1_000_000
+
+
+def test_theilsen_builder_is_one_lazy_spread_plan(spark):
+    """The builder returns a lazy plan: under its own job group it
+    launches at most the catalog's schema-inference job, the plan holds
+    no cache or checkpoint, and the pair join's stream side is
+    round-robin spread (AQE would otherwise run it in one partition)."""
+    sc = spark.sparkContext
+    group = "test_theilsen_builder_is_lazy"
+    sc.setJobGroup(group, group)
+    try:
+        df = orders_theilsen_trend(spark, SF_SMOKE)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    qe = df._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    physical = qe.executedPlan().toString()
+    for marker in ("InMemoryRelation", "LogicalRDD"):
+        assert marker not in optimized, marker
+    for marker in ("InMemoryTableScan", "ExistingRDD"):
+        assert marker not in physical, marker
+
+    lines = physical.splitlines()
+    pair_joins = [
+        i
+        for i, ln in enumerate(lines)
+        if "BroadcastNestedLoopJoin" in ln and "(db#" in ln and "> da#" in ln
+    ]
+    assert pair_joins
+    for i in pair_joins:
+        assert "BuildRight" in lines[i]
+        stream_side = lines[i + 1]  # BuildRight: the first child streams
+        assert "Exchange RoundRobinPartitioning" in stream_side, stream_side
+
+
+@pytest.mark.parametrize("n_days", [1, 2])
+def test_theilsen_few_days_matches_oracle(spark, tmp_path, n_days):
+    """One day has no pair (n_pairs = 0, NULL median); two days have
+    one. Under ANSI the pair join must not divide by a zero day gap."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    src = f"{SF_SMOKE}/orders.parquet"
+    con = duckdb.connect()
+    con.sql(
+        f"""COPY (
+          SELECT * FROM '{src}' WHERE CAST(o_orderdate AS DATE) IN (
+            SELECT DISTINCT CAST(o_orderdate AS DATE) FROM '{src}'
+            ORDER BY 1 LIMIT {n_days})
+        ) TO '{tmp_path}/orders.parquet' (FORMAT PARQUET)"""
+    )
+    con.sql(f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'")
+    df = orders_theilsen_trend(spark, str(tmp_path))
+    rows = df.collect()
+    compare(
+        df,
+        con,
+        ORACLES["orders_theilsen_trend"],
+        "orders_theilsen_trend",
+        collected=(df.columns, [tuple(r) for r in rows]),
+    )
+    assert rows[0]["n_days"] == n_days
+    assert rows[0]["n_pairs"] == n_days * (n_days - 1) // 2
+    assert (rows[0]["theilsen_millicents_per_day"] is None) == (n_days == 1)
