@@ -2,15 +2,33 @@
 
 Reference analog: the reference materializes whole Parquet files into
 pandas (`run.py:20-21`, `process.py:64-67`); here every load is a lazy
-`spark.read.parquet` scan so Catalyst gets column pruning + predicate
-pushdown for free and nothing is materialized until an action runs.
+Parquet scan so Catalyst gets column pruning + predicate pushdown for
+free and nothing is materialized until an action runs.
+
+Schema cache: a bare `spark.read.parquet` launches one Spark job to
+read the file footers before it returns, and every builder calls
+`load_table` at least once. `read_parquet` keeps one process-wide map
+from (stat digest of the path, schema-inference confs) to the inferred
+schema and, on a hit, hands it to `spark.read.schema(...)`, which runs
+no job. Freshness is the same stat rule the written-once relations use
+(`stat_digest`: absolute path, size and mtime_ns of every part file):
+Parquet writers never mutate a part file in place, so any rewrite of
+the path changes the digest and the next read infers again. The confs
+are part of the key because they change the schema inferred from the
+very same bytes (nanosAsLong turns timestamp[ns] into bigint,
+inferTimestampNTZ turns timestamp[us] no-tz into TIMESTAMP_NTZ, ...);
+a schema inferred under one setting must never be served under
+another. A path that cannot be stat'ed (a non-local filesystem) is a
+miss on every call.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -29,6 +47,58 @@ TABLES = [
 # region/nation table never grows with the fact data, so joins against
 # them must always be broadcast-hash, never shuffle.
 BROADCAST_DIMS = {"region", "nation"}
+
+# Session confs that change the schema Spark infers from a Parquet
+# footer; their values are part of the schema-cache key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def stat_digest(path: str) -> str:
+    """Stat-digest of a parquet path (file or directory of parts):
+    absolute path, then (relative path, size, mtime_ns) per file in a
+    sorted walk. Any rewrite changes mtime_ns, so a digest never
+    matches a regenerated file. Raises OSError when the path cannot be
+    stat'ed."""
+    h = hashlib.sha256()
+    h.update(os.path.abspath(path).encode())
+    if os.path.isdir(path):
+        for root, _dirs, files in sorted(os.walk(path)):
+            for name in sorted(files):
+                p = os.path.join(root, name)
+                st = os.stat(p)
+                h.update(
+                    f"{os.path.relpath(p, path)}:{st.st_size}:{st.st_mtime_ns}".encode()
+                )
+    else:
+        st = os.stat(path)
+        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:24]
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Lazy Parquet scan of `path` that runs no footer job when the
+    schema cache holds the schema for the path's current stat digest
+    under the session's current schema-inference confs (see the module
+    docstring). A miss reads as `spark.read.parquet` and stores the
+    inferred schema."""
+    try:
+        key = (stat_digest(path), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    except OSError:
+        key = None
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def _ensure_event_time_confs(spark: SparkSession) -> None:
@@ -117,6 +187,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timezone is left untouched (round-7 change; the NTZ path no longer
     needs a UTC pin).
 
+    The scan goes through read_parquet's schema cache: a repeat load of
+    an unchanged file under unchanged inference confs runs no Spark job,
+    and normalize_event_ts reads the dtype from the cached schema. A
+    rewritten file (new size or mtime_ns of any part) or a changed conf
+    (events sets nanosAsLong first) is a miss and infers afresh, so a
+    stale schema is never served.
+
     Also ships the package zip to executors on first use of any session
     (ensure_package_on_executors): every pandas-UDF operator downstream
     needs `alexandria_pipeline_spark` importable on worker Python, and
@@ -127,7 +204,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_package_on_executors(spark)
     if name == "events":
         _ensure_event_time_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.catalog import load_table, read_parquet
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.checkpoints import (
     persistent_rdd_ids,
@@ -231,10 +231,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if jsig is not None and "K" in jsig:
         loc = jsig["loc"]
-        n_edges = spark.read.parquet(os.path.join(loc, "edges")).agg(
+        n_edges = read_parquet(spark, os.path.join(loc, "edges")).agg(
             F.count(F.lit(1)).cast("long").alias("n_edges")
         )
-        tris = spark.read.parquet(os.path.join(loc, "ntri")).agg(
+        tris = read_parquet(spark, os.path.join(loc, "ntri")).agg(
             F.coalesce(F.expr("CAST(sum(n_tri) div 3 AS BIGINT)"), F.lit(0))
             .cast("long")
             .alias("n_triangles")
@@ -725,7 +725,7 @@ def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         else jaccard_sig_meta(sf_dir)
     )
     if jsig is not None and jsig.get("edges"):
-        return spark.read.parquet(os.path.join(jsig["loc"], "edges"))
+        return read_parquet(spark, os.path.join(jsig["loc"], "edges"))
     return _jaccard_edges_inline(spark, sf_dir)
 
 
@@ -900,7 +900,7 @@ def run_jaccard_sig_build_job(
     t0 = time.perf_counter()
     edges_loc = os.path.join(loc, "edges")
     _jaccard_edges_inline(spark, sf_dir).write.mode("overwrite").parquet(edges_loc)
-    edges = spark.read.parquet(edges_loc)
+    edges = read_parquet(spark, edges_loc)
     build_sec["edges"] = round(time.perf_counter() - t0, 2)
     doc["edges"] = True
     doc["build_sec"] = build_sec
@@ -1173,7 +1173,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             # materializes the 4-column scored relation instead, and
             # what remains per read is a small scan + TakeOrdered.
             K = jsig["K"]
-            scored = spark.read.parquet(os.path.join(jsig["loc"], "escores"))
+            scored = read_parquet(spark, os.path.join(jsig["loc"], "escores"))
         else:
             # Inline build. deg + mins come from ONE aggregate over the
             # flipped union of the persisted edges — the deduped set
@@ -1316,7 +1316,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         else jaccard_sig_meta(sf_dir)
     )
     if jsig is not None and "K" in jsig:
-        scored = spark.read.parquet(os.path.join(jsig["loc"], "rascores"))
+        scored = read_parquet(spark, os.path.join(jsig["loc"], "rascores"))
         return (
             scored.orderBy(F.desc("ra_e6"), F.asc("a"), F.asc("b"))
             .limit(RA_TOP_N)
@@ -1482,8 +1482,8 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shared_deg = None
     if jsig is not None and "K" in jsig:
-        edges = spark.read.parquet(os.path.join(jsig["loc"], "edges"))
-        nt = spark.read.parquet(os.path.join(jsig["loc"], "ntri"))
+        edges = read_parquet(spark, os.path.join(jsig["loc"], "edges"))
+        nt = read_parquet(spark, os.path.join(jsig["loc"], "ntri"))
     else:
         raw_pairs = (
             jsig["raw_pairs"]

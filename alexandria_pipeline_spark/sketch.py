@@ -39,14 +39,13 @@ commit succeeds).
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.catalog import load_table, read_parquet, stat_digest
 from alexandria_pipeline_spark.functions.text import shingle_codes
 
 SKETCH_MIN_TOKS = 3  # shingle_codes needs >= 3 tokens; all consumers filter so
@@ -68,27 +67,10 @@ def sketch_cache_root() -> str:
 
 
 def source_digest(sf_dir: str, table: str = "documents") -> str:
-    """Stat-digest of a source table's parquet (file or directory of
-    parts): (relative path, size, mtime_ns) per file, order-independent
-    via sorted walk. Any regeneration of the testdata changes mtime_ns,
-    so a stale sketch can never match. `table` defaults to documents
-    (the shingle sketch); the jaccard signature relation digests
-    lineitem the same way."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    h = hashlib.sha256()
-    h.update(os.path.abspath(src).encode())
-    if os.path.isdir(src):
-        for root, _dirs, files in sorted(os.walk(src)):
-            for name in sorted(files):
-                p = os.path.join(root, name)
-                st = os.stat(p)
-                h.update(
-                    f"{os.path.relpath(p, src)}:{st.st_size}:{st.st_mtime_ns}".encode()
-                )
-    else:
-        st = os.stat(src)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:24]
+    """catalog.stat_digest of a source table's parquet. `table`
+    defaults to documents (the shingle sketch); the jaccard signature
+    relation digests lineitem the same way."""
+    return stat_digest(os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def sketch_location(sf_dir: str) -> str:
@@ -162,7 +144,7 @@ def shingle_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.environ.get("SPARK_GRAFT_SKETCH_DISABLE"):
         return _inline_sketch(spark, sf_dir)
     if sketch_is_fresh(sf_dir):
-        return spark.read.parquet(sketch_location(sf_dir)).select(
+        return read_parquet(spark, sketch_location(sf_dir)).select(
             "doc_id", "lang", "n_toks", "codes"
         )
     return _inline_sketch(spark, sf_dir)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from alexandria_pipeline_spark.catalog import (
     _ensure_event_time_confs,
     normalize_event_ts,
+    read_parquet,
 )
 from alexandria_pipeline_spark.operators.relational_ext import (
     KMV_K,
@@ -56,10 +57,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # File-stream sources need an explicit schema (no inference at
     # stream start). Hard-coding one broke when the generator switched
     # ts from timestamp[ns] to timestamp[us]; instead read the CURRENT
-    # schema from the parquet footer (driver-side metadata read, no
-    # job) so the stream always matches the file, then normalize ts the
+    # schema from the parquet footer so the stream always matches the
+    # file (through the catalog's schema cache: a footer job only when
+    # the file or the inference confs changed), then normalize ts the
     # same way the batch path does.
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

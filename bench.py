@@ -235,11 +235,12 @@ def chunk_queries(
     for name in headline:
         if name not in timings:
             continue
-        entry = len(name) + 12  # quotes, colon, comma, 2-decimal value
+        value = round(timings[name], 2)
+        entry = len(json.dumps({name: value}))  # exact, at any magnitude
         if chunk and size + entry > budget:
             chunks.append(chunk)
             chunk, size = {}, 0
-        chunk[name] = round(timings[name], 2)
+        chunk[name] = value
         size += entry
     if chunk:
         chunks.append(chunk)

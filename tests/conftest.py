@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +22,18 @@ def spark():
     s = get_spark("alexandria-pipeline-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
     s.stop()
+
+
+def count_jobs(spark, fn):
+    """Run fn() under a job group of its own; return (fn's result, the
+    number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

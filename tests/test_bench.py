@@ -57,3 +57,24 @@ def test_self_record_pointer_is_null_when_write_fails(tmp_path, capsys):
     for name in ("BENCH_SELF_c8.json", "BENCH_SELF.json"):
         assert json.loads((tmp_path / name).read_text()) == out
     assert bench.write_self_record(out, "", str(tmp_path)) == "BENCH_SELF.json"
+
+
+def test_chunk_lines_stay_under_budget_for_huge_timings():
+    """A pathological timing (above 99999 s) widens every value; each
+    chunk must still serialize within the budget, and the chunks must
+    merge back to the full map in headline order."""
+    headline = [f"query_with_a_long_name_{i:03d}" for i in range(200)]
+    timings = {name: 123456789.126 + i for i, name in enumerate(headline)}
+    budget = 1200
+    chunks = bench.chunk_queries(headline, timings, budget)
+    assert len(chunks) > 1
+    for ch in chunks:
+        assert len(json.dumps(ch)) <= budget, len(json.dumps(ch))
+        line = json.dumps(
+            {"metric": "headline_queries_chunk", "chunk": 1, "n_chunks": 1, "queries": ch},
+            separators=(",", ":"),
+        )
+        assert len(line) < 1600, len(line)
+    merged = {k: v for ch in chunks for k, v in ch.items()}
+    assert list(merged) == headline
+    assert merged == {k: round(v, 2) for k, v in timings.items()}

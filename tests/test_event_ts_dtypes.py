@@ -21,6 +21,8 @@ import pytest
 from alexandria_pipeline_spark.catalog import load_table
 from alexandria_pipeline_spark.streaming.stream_events import read_events_stream
 
+from tests.conftest import count_jobs
+
 # Epoch-microsecond instants (UTC), incl. a sub-millisecond component
 # so µs precision loss would be caught.
 TS_US = [1704067798778549, 1704068166738090, 1735689600000001]
@@ -60,28 +62,34 @@ def _write_variant(tmp_path, name: str) -> str:
 
 @pytest.mark.parametrize("variant", sorted(VARIANTS))
 def test_load_table_normalizes_every_ts_encoding(spark, tmp_path, variant):
+    """Twice per variant: the first load infers the schema, the second
+    is served from the catalog's schema cache and runs no Spark job."""
     sf_dir = _write_variant(tmp_path, variant)
-    df = load_table(spark, sf_dir, "events")
-    assert dict(df.dtypes)["ts"] == "timestamp", (
-        f"{variant}: expected TIMESTAMP, got {dict(df.dtypes)['ts']}"
-    )
-    got = [
-        r["us"]
-        for r in df.selectExpr("unix_micros(ts) AS us")
-        .orderBy("us")
-        .collect()
-    ]
-    assert got == sorted(TS_US), f"{variant}: instants differ: {got}"
+    for attempt in ("miss", "hit"):
+        df, jobs = count_jobs(spark, lambda: load_table(spark, sf_dir, "events"))
+        if attempt == "hit":
+            assert jobs == 0, f"{variant}: warm load ran {jobs} jobs"
+        assert dict(df.dtypes)["ts"] == "timestamp", (
+            f"{variant} ({attempt}): expected TIMESTAMP, got {dict(df.dtypes)['ts']}"
+        )
+        got = [
+            r["us"]
+            for r in df.selectExpr("unix_micros(ts) AS us")
+            .orderBy("us")
+            .collect()
+        ]
+        assert got == sorted(TS_US), f"{variant} ({attempt}): instants differ: {got}"
 
 
 @pytest.mark.parametrize("variant", sorted(VARIANTS))
 def test_stream_schema_normalized_every_ts_encoding(spark, tmp_path, variant):
     sf_dir = _write_variant(tmp_path, variant)
-    stream = read_events_stream(spark, sf_dir)
-    assert stream.isStreaming
-    assert dict(stream.dtypes)["ts"] == "timestamp", (
-        f"{variant}: stream ts dtype {dict(stream.dtypes)['ts']}"
-    )
+    for attempt in ("miss", "hit"):
+        stream = read_events_stream(spark, sf_dir)
+        assert stream.isStreaming
+        assert dict(stream.dtypes)["ts"] == "timestamp", (
+            f"{variant} ({attempt}): stream ts dtype {dict(stream.dtypes)['ts']}"
+        )
 
 
 def test_stream_values_match_batch_for_legacy_ns(spark, tmp_path):

@@ -7,14 +7,32 @@ though correctness passes: at 100 TB the plan IS the product.
 
 from __future__ import annotations
 
+import pytest
+
 from alexandria_pipeline_spark import QUERIES
 from alexandria_pipeline_spark.plans.explain import (
     formatted_plan,
     has_broadcast_join,
     read_schema_columns,
 )
+from alexandria_pipeline_spark.registry import release_persisted
 
 from tests.conftest import SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark):
+    """Every registered query built once at SF_SMOKE, for the
+    registry-wide walks: name -> (output schema, formatted plan). A
+    streaming query carries no plan. Frames a builder persisted are
+    released after its plan is taken, as the bench does per query."""
+    built = {}
+    for name, fn in sorted(QUERIES.items()):
+        df = fn(spark, SF_SMOKE)
+        plan = None if name.startswith("stream_") else formatted_plan(df)
+        built[name] = (df.schema, plan)
+        release_persisted()
+    return built
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -139,7 +157,7 @@ def test_quantize_map_only(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_no_complex_types_in_any_query_output(spark):
+def test_no_complex_types_in_any_query_output(registry_plans):
     """Harness contract: every registered query's OUTPUT schema is
     scalar-only. Downstream canonicalizers (the correctness driver's
     included) sort and hash result columns; array/map/struct values are
@@ -148,9 +166,9 @@ def test_no_complex_types_in_any_query_output(spark):
     Builds all plans (no execution), so this also smoke-checks that
     every registered callable constructs against the smoke-scale data."""
     offenders = []
-    for name, fn in QUERIES.items():
-        df = fn(spark, SF_SMOKE)
-        for field in df.schema.fields:
+    for name in QUERIES:
+        schema, _plan = registry_plans[name]
+        for field in schema.fields:
             kind = field.dataType.typeName()
             if kind in ("array", "map", "struct"):
                 offenders.append(f"{name}.{field.name}: {kind}")
@@ -293,7 +311,7 @@ def test_window_distribution_has_no_unpartitioned_window(spark):
             ) or "s_nationkey" in inner.split("specifiedwindowframe")[0], ln
 
 
-def test_no_python_eval_outside_declared_seams(spark):
+def test_no_python_eval_outside_declared_seams(registry_plans):
     """GLOBAL invariant over the whole registered surface: the only
     physical plans allowed to contain Python evaluation nodes are the
     declared multimodal decode seams (Python-bound by nature, Arrow-
@@ -341,12 +359,12 @@ def test_no_python_eval_outside_declared_seams(spark):
     }  # side-effecting (knn_ivf_kmeans un-skipped in r9: now a pure
     # lazy Lloyd's plan, no MLlib fit)
     offenders = []
-    for name, fn in sorted(QUERIES.items()):
+    for name in sorted(QUERIES):
         if name.startswith("stream_") or name in skip:
             continue
         if name.startswith(allowed_prefixes) or name in allowed:
             continue
-        plan = formatted_plan(fn(spark, SF_SMOKE))
+        plan = registry_plans[name][1]
         if any(m in plan for m in py_markers):
             offenders.append(name)
     assert not offenders, f"Python eval nodes in JVM-only plans: {offenders}"
@@ -490,7 +508,7 @@ def _unpartitioned_specs(plan: str) -> list[str]:
     return out
 
 
-def test_registry_unpartitioned_windows_are_declared_bounded(spark):
+def test_registry_unpartitioned_windows_are_declared_bounded(registry_plans):
     from alexandria_pipeline_spark import register_all
 
     register_all()
@@ -500,10 +518,10 @@ def test_registry_unpartitioned_windows_are_declared_bounded(spark):
     }  # side-effecting (knn_ivf_kmeans un-skipped in r9: now a pure
     # lazy Lloyd's plan, no MLlib fit)
     undeclared, stale, misclassified = [], [], []
-    for name, fn in sorted(QUERIES.items()):
+    for name in sorted(QUERIES):
         if name.startswith("stream_") or name in skip:
             continue
-        plan = formatted_plan(fn(spark, SF_SMOKE))
+        plan = registry_plans[name][1]
         specs = _unpartitioned_specs(plan)
         kind = UNPART_WINDOW_BOUNDS.get(name)
         if specs and kind is None:

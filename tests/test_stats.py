@@ -17,7 +17,7 @@ from alexandria_pipeline_spark.operators.stats import (
     orders_linreg_trend,
     orders_theilsen_trend,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 from tests.oracle import compare
 
 
@@ -293,16 +293,8 @@ def test_theilsen_builder_is_one_lazy_spread_plan(spark):
     launches at most the catalog's schema-inference job, the plan holds
     no cache or checkpoint, and the pair join's stream side is
     round-robin spread (AQE would otherwise run it in one partition)."""
-    sc = spark.sparkContext
-    group = "test_theilsen_builder_is_lazy"
-    sc.setJobGroup(group, group)
-    try:
-        df = orders_theilsen_trend(spark, SF_SMOKE)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    df, jobs = count_jobs(spark, lambda: orders_theilsen_trend(spark, SF_SMOKE))
+    assert jobs <= 1
 
     qe = df._jdf.queryExecution()
     optimized = qe.optimizedPlan().toString()
