@@ -12,6 +12,7 @@ Layout:
   session     SparkSession factory tuned for the workload
   catalog     table loading over the driver testdata star schema
   registry    query + oracle-SQL registry (the driver contract surface)
+  materialize written-once relations (shingle sketch, jsig graph family)
   operators/  relational, pipeline, dedup, similarity, events, text
   functions/  reusable column expressions (vectors, text, featurizer)
   sources/    parquet readers / sharded writers

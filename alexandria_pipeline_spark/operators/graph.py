@@ -18,12 +18,13 @@ applies the same pattern per-iteration in its convergence loop."""
 
 from __future__ import annotations
 
-import json
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from alexandria_pipeline_spark import materialize
 from alexandria_pipeline_spark.catalog import load_table, read_parquet
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.checkpoints import (
@@ -215,20 +216,15 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     a<b<c three-way join, so the oriented rewrite must be
     count-invisible.
 
-    Since r12 a fresh written-once materialization (the escores
-    precedent — run_jaccard_sig_build_job) reduces the read to two
-    tiny scans: n_edges is a count of the 2-column edge parquet,
-    n_triangles is sum(n_tri) div 3 over the per-node `ntri` relation
-    (each triangle credits its three corners once, so the sum is
-    exactly 3·T). Values identical to inline — ntri is built by the
-    same degree-oriented edge-iterator this query's above-gate branch
-    runs; stale/absent materializations fall back inline and
-    SPARK_GRAFT_JACCARD_SIG_DISABLE forces inline."""
-    jsig = (
-        None
-        if os.environ.get("SPARK_GRAFT_JACCARD_SIG_DISABLE")
-        else jaccard_sig_meta(sf_dir)
-    )
+    Since r12 a served JSIG materialization (the escores precedent —
+    _build_jsig) reduces the read to two tiny scans: n_edges is a
+    count of the 2-column edge parquet, n_triangles is sum(n_tri) div
+    3 over the per-node `ntri` relation (each triangle credits its
+    three corners once, so the sum is exactly 3·T). Values identical
+    to inline — ntri is built by the same degree-oriented
+    edge-iterator this query's above-gate branch runs; otherwise the
+    query runs inline."""
+    jsig = materialize.serve(JSIG, sf_dir)
     if jsig is not None and "K" in jsig:
         loc = jsig["loc"]
         n_edges = read_parquet(spark, os.path.join(loc, "edges")).agg(
@@ -367,31 +363,23 @@ JACCARD_SKETCH_K = 64
 # graphs.
 JACCARD_K_HALVE_PAIRS = 50_000_000
 
-# --- written-once jaccard signature relation (r11, r10 verdict #3) ---
-# Above the gate, the deduped half-direction edge list and the per-node
-# deg + K-minima packed signatures are deterministic functions of
-# lineitem — the same written-once, content-addressed economics as the
-# shingle sketch (sketch.py): at 100 TB the edge build + signature
-# aggregate dominate every read, and production computes them ONCE.
-# The build job writes both as parquet keyed by lineitem's stat digest;
-# the query reads them when fresh, else computes inline
-# (bitwise-identical values — the build writes exactly the inline
-# frames). Below the gate the gate operand (raw_pairs) and — since r12
-# session 2 — the shared edge parquet are recorded, so consumers skip
-# the gate's lineitem scan and the per-query edge rebuild; the scored
-# relations stay above-gate-only (see run_jaccard_sig_build_job).
-# SPARK_GRAFT_JACCARD_SIG_DISABLE=1 forces the inline path (A/B, tests).
-_JSIG_META = "_jsig_meta.json"
-
-# Format stamp for the materialization (ADVICE r11): freshness is
-# source digest AND format — without the stamp, a change to any
-# constant, hash, scoring expression, or output schema below would
-# silently serve stale pre-change caches on any host with a warm
-# cache (the 'bitwise-identical to inline' invariant would break with
-# no test catching it, since sweeps run below the gate where no
-# payload parquet exists). Encodes every knob the written relations
-# depend on; bump the leading version on any change the string can't
-# see (hash function, estimator math, orientation rule).
+# --- written-once jaccard signature relation (the JSIG registration) ---
+# The deduped half-direction edge list and, above the gate, the scored
+# relations are deterministic functions of lineitem: at 100 TB the edge
+# build + signature aggregate dominate every read, so they are a
+# written-once relation keyed by lineitem (materialize.py). Below the
+# gate the gate operand (raw_pairs) and the shared edge parquet are
+# recorded, so consumers skip the gate's lineitem scan and the
+# per-query edge rebuild; the scored relations stay above-gate-only
+# (see _build_jsig).
+#
+# Format stamp: without it, a change to any constant, hash, scoring
+# expression or output schema below would serve pre-change values from
+# a warm cache, and no value test would catch it (sweeps run below the
+# gate, where no scored parquet exists). The stamp encodes every knob
+# the written relations depend on; bump the leading version on any
+# change the string can't see (hash function, estimator math,
+# orientation rule).
 _JSIG_FORMAT = (
     f"v3:K{JACCARD_SKETCH_K}:halve{JACCARD_K_HALVE_PAIRS}"
     f":gate{BROADCAST_EDGE_LIMIT}:edges-any-gate(a,b)"
@@ -646,39 +634,6 @@ def _ra_from_edge_rows(rows: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_sig_location(sf_dir: str) -> str:
-    from alexandria_pipeline_spark.sketch import sketch_cache_root, source_digest
-
-    return os.path.join(
-        sketch_cache_root(), "jsig-" + source_digest(sf_dir, "lineitem")
-    )
-
-
-def jaccard_sig_meta(sf_dir: str) -> dict | None:
-    """Fresh materialization's meta (with its location added), else
-    None. Freshness is implied by the digest-keyed location plus a
-    recorded-digest check (stat-based — never re-reads lineitem) AND a
-    format-stamp check (ADVICE r11: a pipeline-constant or schema
-    change must invalidate warm caches, not silently serve pre-change
-    scores). A missing/unstatable source (fixture-injected tables in
-    tests) is simply 'no materialization' — consumers fall back
-    inline."""
-    from alexandria_pipeline_spark.sketch import source_digest
-
-    try:
-        loc = jaccard_sig_location(sf_dir)
-        with open(os.path.join(loc, _JSIG_META)) as f:
-            meta = json.load(f)
-        if meta.get("digest") != source_digest(sf_dir, "lineitem"):
-            return None
-        if meta.get("format") != _JSIG_FORMAT:
-            return None
-    except (OSError, ValueError):
-        return None
-    meta["loc"] = loc
-    return meta
-
-
 def _jaccard_raw_pairs(spark: SparkSession, sf_dir: str) -> int:
     """The sketch-path gate operand: sum c·(c-1)/2 over per-order ROW
     counts — a conservative upper bound on distinct edges AND on the
@@ -705,25 +660,18 @@ def _jaccard_K(raw_pairs: int) -> int:
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduped half-direction (a < b) co-purchase edge list — the ONE
     shared frame every graph-family query builds on (triangle, RA,
-    LCC, kcore, assortativity, LPA/modularity). Served from the
-    written-once materialization when fresh (r12 session 2: the build
-    job now writes the edge parquet at ANY gate, not just above it —
-    the shingle-sketch economics applied to the graph family's shared
-    derived input: at every scale the collect_set + packed-distinct
+    LCC, kcore, assortativity, LPA/modularity). Read from the JSIG
+    materialization when it is served (the build writes the edge
+    parquet at ANY gate: at every scale the collect_set + packed-distinct
     build over lineitem was re-run per consumer, ~7x per bench pass,
     and production writes the ~16 B/edge relation ONCE). Inline
     fallback (_jaccard_edges_inline) is bitwise-identical — the build
-    job writes exactly that frame — and SPARK_GRAFT_JACCARD_SIG_DISABLE
-    forces it (A/B, tests). The SCORED relations (escores/rascores/
+    writes exactly that frame. The SCORED relations (escores/rascores/
     ntri) remain above-gate-only: they are query RESULTS, and
     materializing results where the exact plans are cheap would make
     the below-gate queries pure read-outs; the edge list is shared
     INPUT, which every consumer still computes on."""
-    jsig = (
-        None
-        if os.environ.get("SPARK_GRAFT_JACCARD_SIG_DISABLE")
-        else jaccard_sig_meta(sf_dir)
-    )
+    jsig = materialize.serve(JSIG, sf_dir)
     if jsig is not None and jsig.get("edges"):
         return read_parquet(spark, os.path.join(jsig["loc"], "edges"))
     return _jaccard_edges_inline(spark, sf_dir)
@@ -842,60 +790,34 @@ def _jaccard_scored(paired: DataFrame, K: int, NP: int) -> DataFrame:
     )
 
 
-def run_jaccard_sig_build_job(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
-    """Build-once job for the co-purchase graph's derived relations.
+def _build_jsig(spark: SparkSession, sf_dir: str, loc: str) -> dict:
+    """The JSIG build: the co-purchase graph's derived relations.
     Above the gate, writes (1) the deduped edge parquet, (2) `escores`
     — every edge SCORED with the MinHash jaccard estimate: (a, b,
     n_common, jaccard_ppm), zero-overlap rows excluded (they are
     excluded from every read-out anyway: the oracle's wedge GROUP BY
     never emits them), (3) `rascores` — every edge's EXACT
     resource-allocation score (a, b, n_common, ra_e6) from the
-    degree-oriented triangle triples (r12, the escores precedent: RA
-    is a deterministic function of the same edge set), and (4) `ntri`
-    — per-node exact triangle participation counts (node, n_tri),
-    read by graph_triangle_count (sum div 3) and
-    graph_local_clustering. The r11 stress session measured the
-    jaccard alternatives at sf10: inline 295.6 s; materialized
-    signatures (join per read) 260.8 s; materialized pre-joined
-    signature pairs 216.5 s — scanning edge-sized signature payloads
-    is the floor, so the build runs each whole pipeline once and
-    persists the small scored/count relations the consumers actually
-    re-read (any top-k, any threshold). Below the gate, the EDGE
-    parquet is still written (r12 session 2 — every graph consumer
+    degree-oriented triangle triples (the escores precedent: RA is a
+    deterministic function of the same edge set), and (4) `ntri` —
+    per-node exact triangle participation counts (node, n_tri), read
+    by graph_triangle_count (sum div 3) and graph_local_clustering.
+    The r11 stress run measured the jaccard alternatives at sf10:
+    inline 295.6 s; materialized signatures (join per read) 260.8 s;
+    materialized pre-joined signature pairs 216.5 s — scanning
+    edge-sized signature payloads is the floor, so the build runs each
+    whole pipeline once and persists the small scored/count relations
+    the consumers actually re-read (any top-k, any threshold). Below
+    the gate, the EDGE parquet is still written (every graph consumer
     re-derived the identical frame from lineitem, ~7 rebuilds per
-    bench pass; the shared derived INPUT follows the shingle-sketch
-    economics at any scale) but the scored relations are NOT: below
-    the gate the exact plans are the cheap path and materializing
-    their RESULTS would reduce the queries to read-outs. Consumers
-    also skip the gate scan via the recorded raw_pairs. Each build
-    phase's wall is recorded in the meta (build_sec) for bench
-    provenance (r11 verdict #4).
-    The meta sidecar commits AFTER the parquet writes: a crash
-    mid-build leaves a digest-named directory without meta, which
-    jaccard_sig_meta treats as absent. Returns the location."""
+    bench pass) but the scored relations are NOT: below the gate the
+    exact plans are the cheap path and materializing their RESULTS
+    would reduce the queries to read-outs. The meta records raw_pairs
+    (consumers skip the gate scan), `below_gate` or `K`, and each
+    build phase's wall (build_sec) for bench provenance."""
     import time
 
-    from alexandria_pipeline_spark.sketch import source_digest
-
-    meta = jaccard_sig_meta(sf_dir)
-    if meta is not None and not force:
-        return meta["loc"]
-    loc = jaccard_sig_location(sf_dir)
-    # Full rebuild: clear any prior layout first (a forced rebuild or
-    # a layout change must not leave stale subdirectories behind —
-    # the meta sidecar is gone from here until the new one commits,
-    # so readers treat the location as absent throughout).
-    import shutil
-
-    shutil.rmtree(loc, ignore_errors=True)
-    doc: dict = {
-        "digest": source_digest(sf_dir, "lineitem"),
-        "format": _JSIG_FORMAT,
-        "source": os.path.abspath(sf_dir),
-        "raw_pairs": _jaccard_raw_pairs(spark, sf_dir),
-    }
+    doc: dict = {"raw_pairs": _jaccard_raw_pairs(spark, sf_dir)}
     build_sec: dict[str, float] = {}
     t0 = time.perf_counter()
     edges_loc = os.path.join(loc, "edges")
@@ -933,10 +855,17 @@ def run_jaccard_sig_build_job(
         )
         rows.unpersist()
         build_sec["ntri"] = round(time.perf_counter() - t0, 2)
-    os.makedirs(loc, exist_ok=True)
-    with open(os.path.join(loc, _JSIG_META), "w") as f:
-        json.dump(doc, f)
-    return loc
+    return doc
+
+
+JSIG = materialize.register(
+    materialize.Relation(
+        "jsig", "lineitem", _JSIG_FORMAT, "SPARK_GRAFT_JACCARD_SIG_DISABLE",
+        _build_jsig,
+    )
+)
+run_jaccard_sig_build_job = functools.partial(materialize.build, JSIG)
+jaccard_sig_location = functools.partial(materialize.location, JSIG)
 
 
 @query(
@@ -1014,28 +943,16 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm. The exact path — and thus the sf0.01 oracle hash — is
     unchanged below the gate.
 
-    Since r11 the sketch path is backed by a WRITTEN-ONCE relation
-    (run_jaccard_sig_build_job, the shingle-sketch economics): a fresh
-    content-addressed materialization supplies raw_pairs (no gate
-    scan) and, above the gate, the pre-SCORED edge-similarity parquet
-    (a, b, n_common, jaccard_ppm) — the r11 stress session measured
-    signatures-only and pre-joined-signatures caches and found
-    edge-sized signature scanning is the floor (sf10: 295.6 s inline /
-    260.8 s sig cache / 216.5 s pair cache), so the build runs the
-    whole pipeline once and the read path is a small 4-column scan +
-    TakeOrdered. Stale or absent materializations fall back to the
-    bitwise-identical inline plan; SPARK_GRAFT_JACCARD_SIG_DISABLE
-    forces inline."""
-    # Written-once read path (r11): a fresh signature materialization
-    # supplies raw_pairs (skipping the gate's lineitem scan) and, above
-    # the gate, the edge + signature parquets — see
-    # run_jaccard_sig_build_job. Values are bitwise-identical either
-    # way; SPARK_GRAFT_JACCARD_SIG_DISABLE forces inline.
-    jsig = (
-        None
-        if os.environ.get("SPARK_GRAFT_JACCARD_SIG_DISABLE")
-        else jaccard_sig_meta(sf_dir)
-    )
+    Since r11 the sketch path is backed by the written-once JSIG
+    relation (_build_jsig): a served materialization supplies
+    raw_pairs (no gate scan) and, above the gate, the pre-SCORED
+    edge-similarity parquet (a, b, n_common, jaccard_ppm) — the r11
+    stress run measured signatures-only and pre-joined-signatures
+    caches and found edge-sized signature scanning is the floor (sf10:
+    295.6 s inline / 260.8 s sig cache / 216.5 s pair cache), so the
+    build runs the whole pipeline once and the read path is a small
+    4-column scan + TakeOrdered. Otherwise the bitwise-identical inline plan runs."""
+    jsig = materialize.serve(JSIG, sf_dir)
     # Pre-gate on RAW pair volume. raw_pairs bounds the distinct edge
     # count from above AND (unlike the old distinct-edge gate) measures
     # the work the array build itself would ingest: at sf10 the
@@ -1310,11 +1227,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_jaccard_edges` frame (read from the written-once materialization
     when fresh). Top-20 survives via TakeOrdered with the (ra_e6, a,
     b) total order."""
-    jsig = (
-        None
-        if os.environ.get("SPARK_GRAFT_JACCARD_SIG_DISABLE")
-        else jaccard_sig_meta(sf_dir)
-    )
+    jsig = materialize.serve(JSIG, sf_dir)
     if jsig is not None and "K" in jsig:
         scored = read_parquet(spark, os.path.join(jsig["loc"], "rascores"))
         return (
@@ -1475,11 +1388,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     the left join, and they can reach the top-20 only on graphs with
     fewer than 20 closed wedges, where the (lcc_ppm DESC, node ASC)
     order remains total and deterministic."""
-    jsig = (
-        None
-        if os.environ.get("SPARK_GRAFT_JACCARD_SIG_DISABLE")
-        else jaccard_sig_meta(sf_dir)
-    )
+    jsig = materialize.serve(JSIG, sf_dir)
     shared_deg = None
     if jsig is not None and "K" in jsig:
         edges = read_parquet(spark, os.path.join(jsig["loc"], "edges"))

@@ -371,13 +371,3 @@ def run_restatement_job(
         "end_day": end_day,
     }
 
-
-def run_sketch_build_job(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
-    """Materialize the written-once trigram-shingle sketch relation
-    for sf_dir (the production layout the dedup family reads; see
-    alexandria_pipeline_spark.sketch). Reference analog: the reference
-    writes its expensive intermediate exactly once and every later
-    pass reads the shards (`run.py:64-67`, `process.py:26-44`)."""
-    from alexandria_pipeline_spark.sketch import run_sketch_build_job as _build
-
-    return _build(spark, sf_dir, force=force)

@@ -75,6 +75,15 @@ def env_int(name: str, default: int) -> int:
         return default
 
 
+def env_flag(name: str) -> bool:
+    """Boolean value of env var `name`: unset, empty, `0`, `false`,
+    `no` and `off` (any case) are False, anything else True."""
+    import os
+
+    v = os.environ.get(name, "").strip().lower()
+    return v not in ("", "0", "false", "no", "off")
+
+
 def persist_if_source_large(
     df: DataFrame, sf_dir: str, table: str = "documents",
     min_bytes: int | None = None,

@@ -19,8 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from alexandria_pipeline_spark import QUERIES, get_spark, register_all
-from alexandria_pipeline_spark.registry import release_persisted
+from alexandria_pipeline_spark import QUERIES, get_spark, materialize, register_all
+from alexandria_pipeline_spark.registry import env_flag, release_persisted
 
 # Headline set: one per operator family (scan-agg, joins, windows,
 # event-time, pipeline, dedup, similarity, text). Streaming queries are
@@ -291,86 +291,23 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 - warmup failure is not fatal
         print(f"warmup failed: {exc!r}", file=sys.stderr)
 
-    # Build the written-once shingle-sketch relation (the production
-    # layout the dedup/decontam/leakage family reads — dedup.py's
-    # docstrings have always named it; r8's persist-release contract
-    # exposed that recomputing it per query cost ~15 s/round). The
-    # build is timed and REPORTED (sketch_build_sec) so the one-time
-    # cost is visible, not hidden; per-query numbers then measure the
-    # read path, which is what production pays per dedup pass.
-    # Each relation's record carries {digest, state, build_sec} (r11
-    # verdict #4: a bare build_sec of 0.0 was ambiguous between digest
-    # cache HIT and DISABLED — with written-once relations carrying
-    # headline numbers, warm-vs-cold provenance must be auditable).
-    # state ∈ hit (fresh cache served), built (cold build ran this
-    # session), disabled (env forces inline), failed (queries fall
-    # back inline).
-    # r12 verdict #3: a bench invocation must never be served a WARM
-    # cross-run cache — round-over-round comparisons silently mixed
-    # warm (state: hit) and cold (state: built) runs. Both relations
-    # are therefore force-rebuilt inside every bench run, so "hit" can
-    # never occur and every reported number is reproducible from the
-    # parquet inputs alone. SPARK_GRAFT_BENCH_ALLOW_WARM=1 restores the
-    # hit-or-build behavior for local iteration loops ONLY (never set
-    # in driver/gate runs; a warm run is visibly state: hit).
-    allow_warm = bool(os.environ.get("SPARK_GRAFT_BENCH_ALLOW_WARM"))
-    materializations: dict = {}
-    sketch_build_sec = None
-    try:
-        from alexandria_pipeline_spark.sketch import (
-            run_sketch_build_job,
-            sketch_is_fresh,
-            source_digest,
-        )
-
-        rec: dict = {"digest": source_digest(sf_dir)}
-        if os.environ.get("SPARK_GRAFT_SKETCH_DISABLE"):
-            rec["state"], rec["build_sec"] = "disabled", None
-        else:
-            hit = allow_warm and sketch_is_fresh(sf_dir)
-            t0 = time.perf_counter()
-            run_sketch_build_job(spark, sf_dir, force=not allow_warm)
-            sketch_build_sec = round(time.perf_counter() - t0, 3)
-            rec["state"] = "hit" if hit else "built"
-            rec["build_sec"] = sketch_build_sec
-            rec["forced_cold"] = not allow_warm
-        materializations["sketch"] = rec
-    except Exception as exc:  # noqa: BLE001 - queries fall back inline
-        materializations["sketch"] = {"state": "failed", "error": repr(exc)}
-        print(f"sketch build failed (inline fallback): {exc!r}", file=sys.stderr)
-
-    # Same economics for the jaccard/graph relation family (r11-r12:
-    # edges + escores + rascores + ntri): below the gate this records
-    # only the gate operand (meta write), above it the four parquets.
-    # Timed and reported separately so the per-query number measures
-    # the read path; per-phase build walls come from the meta.
-    jsig_build_sec = None
-    try:
-        from alexandria_pipeline_spark.operators.graph import (
-            jaccard_sig_meta,
-            run_jaccard_sig_build_job,
-        )
-        from alexandria_pipeline_spark.sketch import source_digest
-
-        rec = {"digest": source_digest(sf_dir, "lineitem")}
-        if os.environ.get("SPARK_GRAFT_JACCARD_SIG_DISABLE"):
-            rec["state"], rec["build_sec"] = "disabled", None
-        else:
-            hit = allow_warm and jaccard_sig_meta(sf_dir) is not None
-            t0 = time.perf_counter()
-            run_jaccard_sig_build_job(spark, sf_dir, force=not allow_warm)
-            jsig_build_sec = round(time.perf_counter() - t0, 3)
-            rec["state"] = "hit" if hit else "built"
-            rec["build_sec"] = jsig_build_sec
-            rec["forced_cold"] = not allow_warm
-            meta = jaccard_sig_meta(sf_dir) or {}
-            rec["below_gate"] = bool(meta.get("below_gate"))
-            if meta.get("build_sec"):
-                rec["phases"] = meta["build_sec"]
-        materializations["jsig"] = rec
-    except Exception as exc:  # noqa: BLE001 - query falls back inline
-        materializations["jsig"] = {"state": "failed", "error": repr(exc)}
-        print(f"jsig build failed (inline fallback): {exc!r}", file=sys.stderr)
+    # Build every written-once relation (materialize.py) before the
+    # timed passes: the build is timed and REPORTED per relation
+    # (<name>_build_sec, materializations.<name>) so the one-time cost
+    # is visible, and per-query numbers measure the read path, which
+    # is what production pays per pass. Each record carries {digest,
+    # state, build_sec} (r11 verdict #4: a bare build_sec of 0.0 was
+    # ambiguous between a cache hit and a disabled relation). Every
+    # bench run force-rebuilds (r12 verdict #3: round-over-round
+    # comparisons silently mixed warm and cold runs), so "hit" never
+    # occurs and every number is reproducible from the parquet inputs
+    # alone. SPARK_GRAFT_BENCH_ALLOW_WARM=1 restores hit-or-build for
+    # local iteration loops ONLY (a warm run is visibly state: hit).
+    allow_warm = env_flag("SPARK_GRAFT_BENCH_ALLOW_WARM")
+    materializations = {
+        name: materialize.bench_record(rel, spark, sf_dir, allow_warm)
+        for name, rel in materialize.REGISTRY.items()
+    }
 
     # One failing query must never cost the whole run its JSON line
     # (round 2 lost all bench numbers to a single AnalysisException):
@@ -429,8 +366,8 @@ def main() -> None:
         "timing": "min_of_runs",
         "cpus": cpus,
         "queries": timings,
-        "sketch_build_sec": sketch_build_sec,
-        "jsig_build_sec": jsig_build_sec,
+        "sketch_build_sec": materializations["sketch"].get("build_sec"),
+        "jsig_build_sec": materializations["jsig"].get("build_sec"),
         "materializations": materializations,
         "sf": sf_val,
     }

@@ -191,24 +191,22 @@ def main() -> int:
     del os.environ["SPARK_GRAFT_JACCARD_SIG_DISABLE"]
 
     # ---- phase B: builds (edges + escores + rascores + ntri) ----
-    from alexandria_pipeline_spark.operators.graph import (
-        jaccard_sig_meta,
-        run_jaccard_sig_build_job,
-    )
+    from alexandria_pipeline_spark import materialize
+    from alexandria_pipeline_spark.operators.graph import JSIG
 
     for sf_label, sf_dir in SF_DIRS:
         if not phase_on("b", sf_label):
             continue
         t0 = time.monotonic()
         try:
-            run_jaccard_sig_build_job(spark, sf_dir, force=True)
+            materialize.build(JSIG, spark, sf_dir, force=True)
         except Exception as exc:  # noqa: BLE001 - record, continue phases
             doc["phase_b_build"][sf_label] = {"failed": f"{type(exc).__name__}"}
             print(f"B {sf_label} build FAILED: {type(exc).__name__}", flush=True)
             flush()
             continue
         rec = {"total_sec": round(time.monotonic() - t0, 2)}
-        meta = jaccard_sig_meta(sf_dir) or {}
+        meta = materialize.fresh(JSIG, sf_dir) or {}
         rec["phases_sec"] = meta.get("build_sec")
         doc["phase_b_build"][sf_label] = rec
         print(f"B {sf_label} build {rec}", flush=True)

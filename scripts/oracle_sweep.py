@@ -27,7 +27,7 @@ import traceback
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from alexandria_pipeline_spark import ORACLES, QUERIES, register_all
+from alexandria_pipeline_spark import ORACLES, QUERIES, materialize, register_all
 from alexandria_pipeline_spark.registry import release_persisted
 from alexandria_pipeline_spark.session import get_spark
 from tests.oracle import compare, duck_connection
@@ -49,28 +49,17 @@ def main() -> int:
         n for n in QUERIES if not substrs or any(s in n for s in substrs)
     )
     spark = get_spark("oracle-sweep")
-    # Materialize the shingle-sketch relation first so the sweep
-    # hash-checks the READ path (what bench/production run), not only
-    # the inline fallback. DuckDB oracles always recompute from the
-    # raw documents table, so a sketch/inline divergence would fail
-    # the hash here.
-    try:
-        from alexandria_pipeline_spark.sketch import run_sketch_build_job
-
-        run_sketch_build_job(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - queries fall back inline
-        print(f"sketch build failed (inline fallback): {exc!r}")
-    # Same for the jaccard signature relation (r11) — at sweep scales
-    # this is a below-gate meta write, so the sweep hash-checks the
-    # meta-supplied-raw_pairs read path the bench/production run uses.
-    try:
-        from alexandria_pipeline_spark.operators.graph import (
-            run_jaccard_sig_build_job,
-        )
-
-        run_jaccard_sig_build_job(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - query falls back inline
-        print(f"jsig build failed (inline fallback): {exc!r}")
+    # Build every written-once relation first so the sweep hash-checks
+    # the READ paths (what bench/production run), not only the inline
+    # fallbacks. DuckDB oracles always recompute from the raw tables,
+    # so a materialized/inline divergence would fail the hash here. At
+    # sweep scales jsig is below its gate: the edge parquet plus the
+    # meta-supplied raw_pairs.
+    for name, rel in materialize.REGISTRY.items():
+        try:
+            materialize.build(rel, spark, sf_dir)
+        except Exception as exc:  # noqa: BLE001 - queries fall back inline
+            print(f"{name} build failed (inline fallback): {exc!r}")
     con = duck_connection(sf_dir)
     failures: list[str] = []
     results: dict[str, str] = {}

@@ -4,7 +4,7 @@
 Phase E (sf1, verdict #6): the cached-edges read path, measured as the
 cold-build / read / inline TRIPLE for the 8 graph-family consumers,
 with the build cost in the same table:
-  - build: run_jaccard_sig_build_job(force=True) wall + per-phase meta;
+  - build: materialize.build(JSIG, force=True) wall + per-phase meta;
   - read: min-of-RUNS per query with the fresh materialization;
   - inline: min-of-RUNS with SPARK_GRAFT_JACCARD_SIG_DISABLE=1.
   q1_pricing_summary rides every panel as the host-drift control.
@@ -109,17 +109,15 @@ def _build_job(sf_dir: str) -> dict:
     code = f"""
 import json, sys, time
 sys.path.insert(0, {str(REPO)!r})
-from alexandria_pipeline_spark import get_spark, register_all
-from alexandria_pipeline_spark.operators.graph import (
-    jaccard_sig_meta, run_jaccard_sig_build_job,
-)
+from alexandria_pipeline_spark import get_spark, materialize, register_all
+from alexandria_pipeline_spark.operators.graph import JSIG
 register_all()
 spark = get_spark("stress-r13-build")
 spark.sparkContext.setLogLevel("ERROR")
 t0 = time.monotonic()
-run_jaccard_sig_build_job(spark, {sf_dir!r}, force=True)
+materialize.build(JSIG, spark, {sf_dir!r}, force=True)
 wall = round(time.monotonic() - t0, 2)
-meta = jaccard_sig_meta({sf_dir!r}) or {{}}
+meta = materialize.fresh(JSIG, {sf_dir!r}) or {{}}
 print("STRESS_ROW " + json.dumps({{
     "wall": wall,
     "below_gate": bool(meta.get("below_gate")),

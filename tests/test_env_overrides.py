@@ -36,3 +36,16 @@ def test_malformed_ra_adj_limit_falls_back(monkeypatch, capsys):
     assert "SPARK_GRAFT_RA_ADJ_LIMIT" in capsys.readouterr().err
     monkeypatch.setenv("SPARK_GRAFT_RA_ADJ_LIMIT", "7")
     assert graph._ra_adj_limit() == 7
+
+
+def test_env_flag_off_values(monkeypatch):
+    """`0`, `false`, `no`, `off` and empty turn a flag off, so
+    SPARK_GRAFT_SKETCH_DISABLE=0 does not disable the sketch."""
+    monkeypatch.delenv("SPARK_GRAFT_TEST_FLAG", raising=False)
+    assert registry.env_flag("SPARK_GRAFT_TEST_FLAG") is False
+    for value, expected in (
+        ("", False), ("0", False), ("false", False), ("NO", False),
+        (" off ", False), ("1", True), ("true", True), ("yes", True),
+    ):
+        monkeypatch.setenv("SPARK_GRAFT_TEST_FLAG", value)
+        assert registry.env_flag("SPARK_GRAFT_TEST_FLAG") is expected, value

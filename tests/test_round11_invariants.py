@@ -16,7 +16,7 @@ import shutil
 
 import pytest
 
-from alexandria_pipeline_spark import QUERIES
+from alexandria_pipeline_spark import QUERIES, materialize
 from alexandria_pipeline_spark.operators import graph as G
 from alexandria_pipeline_spark.registry import release_persisted
 from tests.conftest import SF_SMOKE
@@ -67,7 +67,7 @@ def test_below_gate_build_writes_edges_and_exact_values_unchanged(
         assert not os.path.exists(os.path.join(loc, rel)), rel
     # the fresh meta supplies raw_pairs; the exact plan now READS the
     # cached edge relation and its values are unchanged
-    assert G.jaccard_sig_meta(jsig_env)["raw_pairs"] == meta["raw_pairs"]
+    assert materialize.fresh(G.JSIG, jsig_env)["raw_pairs"] == meta["raw_pairs"]
     # the shared edge frame dispatches to the cached parquet (the
     # query's own inputFiles() is empty because its leaves sit behind
     # the scoped-persisted adjacency frame — assert on the source
@@ -129,7 +129,7 @@ def test_above_gate_read_path_is_value_identical_to_inline(
 def test_stale_lineitem_falls_back_inline(spark, jsig_env, monkeypatch):
     monkeypatch.setattr(G, "BROADCAST_EDGE_LIMIT", 0)
     loc = G.run_jaccard_sig_build_job(spark, jsig_env)
-    assert G.jaccard_sig_meta(jsig_env) is not None
+    assert materialize.fresh(G.JSIG, jsig_env) is not None
     # regenerate the source: rewrite lineitem.parquet (new mtime/size)
     src = os.path.join(jsig_env, "lineitem.parquet")
     df = spark.read.parquet(src).limit(100)
@@ -139,7 +139,7 @@ def test_stale_lineitem_falls_back_inline(spark, jsig_env, monkeypatch):
     shutil.move(tmp_out, src)
     # digest moved -> meta no longer fresh; the query must not read the
     # stale materialization (its digest-keyed location no longer matches)
-    assert G.jaccard_sig_meta(jsig_env) is None
+    assert materialize.fresh(G.JSIG, jsig_env) is None
     df2 = QUERIES["graph_jaccard_neighbors"](spark, jsig_env)
     assert not any(loc in f for f in df2.inputFiles())
     df2.collect()

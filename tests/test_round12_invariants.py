@@ -2,13 +2,12 @@
 (operators/graph.py _tri_triples_deg) shared by the rascores/ntri
 written-once relations, the resource-allocation above-gate iterator
 plan (replacing the r11 shuffle-equi-join fallback), the new
-graph_local_clustering query, the packed-key overflow guards (ADVICE
-r11), and the materialization format stamps (ADVICE r11).
+graph_local_clustering query and the packed-key overflow guards
+(ADVICE r11). The format-stamp tests live in test_materialize.py.
 
 Value identity is the bar everywhere: the iterator plan must equal the
-broadcast wedge plan bitwise, the materialized read paths must equal
-the inline plans bitwise, and a format-stamp mismatch must read as
-'no materialization', never as stale values served warm.
+broadcast wedge plan bitwise, and the materialized read paths must
+equal the inline plans bitwise.
 """
 
 from __future__ import annotations
@@ -140,45 +139,6 @@ def test_pack_guards_raise_on_overflow(spark):
         G._pack_deg_node(F.col("a"), F.col("b")).alias("k")
     )
     assert ok.collect()[0]["k"] == (5 << 32) | 3
-
-
-def test_format_stamp_invalidates_jsig(spark, jsig_env, monkeypatch):
-    """A warm cache written under a DIFFERENT format stamp must read
-    as absent — consumers fall back inline instead of serving
-    pre-change scores (ADVICE r11)."""
-    monkeypatch.setattr(G, "BROADCAST_EDGE_LIMIT", 0)
-    loc = G.run_jaccard_sig_build_job(spark, jsig_env)
-    assert G.jaccard_sig_meta(jsig_env) is not None
-    meta_path = os.path.join(loc, "_jsig_meta.json")
-    doc = json.load(open(meta_path))
-    assert doc["format"] == G._JSIG_FORMAT
-    doc["format"] = "v0:obsolete"
-    json.dump(doc, open(meta_path, "w"))
-    assert G.jaccard_sig_meta(jsig_env) is None
-    df = QUERIES["graph_resource_allocation"](spark, jsig_env)
-    assert not any(loc in f for f in df.inputFiles()), "must not serve stale"
-    release_persisted()
-    # a rebuild under the current format restores the read path
-    G.run_jaccard_sig_build_job(spark, jsig_env)
-    assert G.jaccard_sig_meta(jsig_env)["format"] == G._JSIG_FORMAT
-
-
-def test_format_stamp_invalidates_sketch(spark, jsig_env, monkeypatch, tmp_path):
-    from alexandria_pipeline_spark import sketch as S
-
-    docs_src = os.path.join(SF_SMOKE, "documents.parquet")
-    dstd = os.path.join(jsig_env, "documents.parquet")
-    if os.path.isdir(docs_src):
-        shutil.copytree(docs_src, dstd)
-    else:
-        shutil.copy2(docs_src, dstd)
-    loc = S.run_sketch_build_job(spark, jsig_env)
-    assert S.sketch_is_fresh(jsig_env)
-    meta_path = os.path.join(loc, "_sketch_meta.json")
-    doc = json.load(open(meta_path))
-    doc["format"] = "v0:obsolete"
-    json.dump(doc, open(meta_path, "w"))
-    assert not S.sketch_is_fresh(jsig_env)
 
 
 def test_materialized_read_paths_value_identical(spark, jsig_env, monkeypatch):

@@ -1,5 +1,6 @@
-"""Round-13 invariants: the bench per-query channel hardening and the
-forced-cold materialization contract (r12 verdict items #1 and #3).
+"""Round-13 invariants: the bench per-query channel hardening (r12
+verdict item #1). The forced-cold materialization contract (item #3)
+is tested on materialize.bench_record in test_materialize.py.
 
 The driver's tail capture holds only the last ~2000 characters of
 bench.py's stdout; at 173 queries the sum of the query NAMES alone is
@@ -60,18 +61,6 @@ def test_full_per_query_line_cannot_fit_tail():
     shrink doesn't silently obsolete it: 173 names alone exceed the
     driver's tail capture."""
     assert sum(len(n) for n in bench.HEADLINE) > 2000
-
-
-def test_bench_source_forces_cold_materializations():
-    """r12 verdict #3: a bench invocation must never be served a warm
-    cross-run cache unless SPARK_GRAFT_BENCH_ALLOW_WARM explicitly asks
-    for it. Pin the call-site contract: both build jobs are invoked
-    with force=not allow_warm and the hit state is gated on allow_warm."""
-    src = (REPO / "bench.py").read_text()
-    assert src.count("force=not allow_warm") == 2
-    assert "SPARK_GRAFT_BENCH_ALLOW_WARM" in src
-    assert 'allow_warm and sketch_is_fresh' in src
-    assert 'allow_warm and jaccard_sig_meta' in src
 
 
 def test_bench_source_emits_stable_self_record():

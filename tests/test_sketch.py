@@ -16,15 +16,14 @@ import shutil
 
 import pytest
 
-from alexandria_pipeline_spark import QUERIES
+from alexandria_pipeline_spark import QUERIES, materialize
 from alexandria_pipeline_spark.registry import release_persisted
 from alexandria_pipeline_spark.sketch import (
+    SKETCH,
     _inline_sketch,
     run_sketch_build_job,
     shingle_sketch,
-    sketch_is_fresh,
     sketch_location,
-    source_digest,
 )
 from tests.conftest import SF_SMOKE
 
@@ -57,7 +56,7 @@ def _rows(df):
 
 def test_build_then_read_is_value_identical(spark, sketch_env):
     loc = run_sketch_build_job(spark, sketch_env)
-    assert sketch_is_fresh(sketch_env)
+    assert materialize.fresh(SKETCH, sketch_env)
     mat = shingle_sketch(spark, sketch_env)
     # the hook really serves the materialization, not the fallback
     assert any(loc in f for f in mat.inputFiles())
@@ -69,9 +68,8 @@ def test_build_then_read_is_value_identical(spark, sketch_env):
 
 def test_stale_source_falls_back_inline(spark, sketch_env):
     run_sketch_build_job(spark, sketch_env)
-    assert sketch_is_fresh(sketch_env)
+    assert materialize.fresh(SKETCH, sketch_env)
     old_loc = sketch_location(sketch_env)
-    old_digest = source_digest(sketch_env)
     # Regenerate the source: rewrite documents.parquet (new mtime/size)
     src = os.path.join(sketch_env, "documents.parquet")
     df = spark.read.parquet(src).limit(50)
@@ -79,8 +77,8 @@ def test_stale_source_falls_back_inline(spark, sketch_env):
     df.coalesce(1).write.mode("overwrite").parquet(tmp_out)
     shutil.rmtree(src) if os.path.isdir(src) else os.remove(src)
     shutil.move(tmp_out, src)
-    assert source_digest(sketch_env) != old_digest
-    assert not sketch_is_fresh(sketch_env)
+    assert sketch_location(sketch_env) != old_loc
+    assert materialize.fresh(SKETCH, sketch_env) is None
     fb = shingle_sketch(spark, sketch_env)
     # fallback reads the SOURCE, never the stale materialization
     assert not any(old_loc in f for f in fb.inputFiles())
@@ -88,7 +86,7 @@ def test_stale_source_falls_back_inline(spark, sketch_env):
     # rebuild picks up the new digest at a new location
     new_loc = run_sketch_build_job(spark, sketch_env)
     assert new_loc != old_loc
-    assert sketch_is_fresh(sketch_env)
+    assert materialize.fresh(SKETCH, sketch_env)
 
 
 def test_disable_env_forces_inline(spark, sketch_env, monkeypatch):
