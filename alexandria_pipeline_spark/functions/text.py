@@ -89,25 +89,6 @@ def duck_shingle_codes(toks: str) -> str:
     )
 
 
-def minhash_sig(toks: Column, i: int) -> Column:
-    """i-th MinHash: min over distinct tokens of (a_i*code + b_i) mod p."""
-    a, b = 2 * i + 3, 5 * i + 7
-    return F.array_min(
-        F.transform(
-            F.array_distinct(toks),
-            lambda t: (word_code(t) * a + b) % MINHASH_P,
-        )
-    )
-
-
-def duck_minhash_sig(toks: str, i: int) -> str:
-    a, b = 2 * i + 3, 5 * i + 7
-    return (
-        f"list_min(list_transform(list_distinct({toks}), "
-        f"t -> ({duck_word_code('t')} * {a} + {b}) % {MINHASH_P}))"
-    )
-
-
 def rolling_fingerprint(toks: Column) -> Column:
     """Polynomial rolling hash over the token stream:
     h = (h*31 + code(w)) mod 1e9+7 — order-sensitive document

@@ -19,11 +19,10 @@ from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.text import (
     SHINGLE_MOD,
     SHINGLE_MULT,
-    duck_shingle_codes,
     duck_word_code,
     word_code,
 )
-from alexandria_pipeline_spark.sketch import shingle_sketch
+from alexandria_pipeline_spark.sketch import DUCK_SKETCH, shingle_sketch
 from alexandria_pipeline_spark.registry import (
     persist_if_source_large,
     query,
@@ -61,12 +60,7 @@ DUP_BIGRAM_E6 = 300_000
 @query(
     "decontam_ngram_overlap",
     oracle=f"""
-    WITH sh AS (
-      SELECT doc_id,
-             {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
+    WITH sh AS (SELECT doc_id, codes FROM ({DUCK_SKETCH})),
     bench AS (
       SELECT DISTINCT unnest(codes) AS code FROM sh WHERE doc_id % {BENCH_MOD} = 0
     ),
@@ -1804,13 +1798,7 @@ REP_DUP_E6 = 200_000
 @query(
     "curation_repetition_ratio",
     oracle=f"""
-    WITH sh AS (
-      SELECT doc_id, lang,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
-             {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
+    WITH sh AS ({DUCK_SKETCH}),
     per AS (
       SELECT lang,
              CAST((n_toks - 2 - len(codes)) * 1000000 // (n_toks - 2)

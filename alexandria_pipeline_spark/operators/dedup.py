@@ -34,9 +34,8 @@ from alexandria_pipeline_spark.functions.text import (
     MIX_A,
     MIX_MOD,
     duck_rolling_fingerprint,
-    duck_shingle_codes,
 )
-from alexandria_pipeline_spark.sketch import shingle_sketch
+from alexandria_pipeline_spark.sketch import DUCK_SKETCH, shingle_sketch
 from alexandria_pipeline_spark.registry import (
     ORACLES,
     QUERIES,
@@ -45,21 +44,19 @@ from alexandria_pipeline_spark.registry import (
     scoped_release,
 )
 
-# Sketch width — the corpus-size knob (SCALE.md): band-bucket occupancy
-# falls exponentially with rows-per-band x log2(bands). Defaults sized
-# for the ~5k-doc testdata; production corpora want BANDS=16+ (the
-# oracle SQL is generated from the same constants, so overrides stay
-# cross-engine consistent as long as they're set before import).
-import os
-
-BANDS = int(os.environ.get("SPARK_GRAFT_LSH_BANDS", "4"))
-# rows-per-band is the PRECISION knob: candidates require ALL r rows of
-# a band to match, so false-candidate rate falls ~P^-(r-1) per band.
-# Measured on the 500k-doc/40-word-vocab probe: r=2 -> 13.5M candidates
-# (min-collisions dominate on the small shingle universe), r=3 cuts
-# that by orders of magnitude. r <= 3 so base-P band packing stays in
-# int64 (P^3 ~ 1e15).
-ROWS_PER_BAND = int(os.environ.get("SPARK_GRAFT_LSH_ROWS_PER_BAND", "2"))
+# MinHash band layout. The oracle SQL is generated from these same
+# constants, so both engines always band identically. BANDS is the
+# corpus-size lever (SCALE.md): band-bucket occupancy falls
+# exponentially with rows-per-band x log2(bands); 4 is sized for the
+# ~5k-doc testdata, production corpora want 16+.
+BANDS = 4
+# Rows per band is the precision lever: candidates require ALL r rows
+# of a band to match, so the false-candidate rate falls ~P^-(r-1) per
+# band. Measured on the 500k-doc/40-word-vocab probe: r=2 -> 13.5M
+# candidates (min-collisions dominate on the small shingle universe),
+# r=3 cuts that by orders of magnitude. r <= 3 so base-P band packing
+# stays in int64 (P^3 ~ 1e15).
+ROWS_PER_BAND = 2
 assert ROWS_PER_BAND in (2, 3), "band packing supports r in {2, 3}"
 NUM_HASHES = ROWS_PER_BAND * BANDS
 SIMHASH_BITS = 32
@@ -84,9 +81,9 @@ COSINE_THRESHOLD = 0.35
 # sf1 stress measured the cost of a fixed default: 4 planes = 16
 # buckets went quadratic (123 s at 20k vectors); this formula picks 8
 # planes there (the setting measured linear-ish, 19.4 s) while leaving
-# sf0.01/sf0.1 at 4 planes, so oracle hashes are unchanged. The env
-# override pins a FIXED count in both engines (oracle SQL embeds the
-# same constant), mirroring the jaccard df-cap convention.
+# sf0.01/sf0.1 at 4 planes, so oracle hashes are unchanged. The
+# formula is the only plane count: planes scale as ~log2 n, and the
+# oracle SQL computes the same integers (_DUCK_PLANES_CTE).
 #
 # Plane table (r7): the original affine formula ((p*31 + d*17) % 13)
 # was PERIODIC in p with period 13 (31 ≡ 5 mod 13), so planes 13..23
@@ -97,7 +94,6 @@ COSINE_THRESHOLD = 0.35
 # recall measurements stand); p ≥ 13 now comes from a Knuth
 # multiplicative hash, and distinctness of the WHOLE table is
 # asserted at import so a regression can't slip back in.
-_LSH_PLANES_ENV = os.environ.get("SPARK_GRAFT_LSH_PLANES", "")
 LSH_MAX_PLANES = 40
 EMBED_DIM = 64
 
@@ -121,8 +117,6 @@ def lsh_planes_for(n_vectors: int) -> int:
     integer arithmetic so Spark (Python int.bit_length) and the DuckDB
     oracle (length(bin(n-1))) can never disagree on a borderline float.
     """
-    if _LSH_PLANES_ENV:
-        return int(_LSH_PLANES_ENV)
     return max(4, min(LSH_MAX_PLANES, (max(n_vectors, 2) - 1).bit_length() - 7))
 
 
@@ -192,6 +186,35 @@ def _sig_cols():
     ]
 
 
+def _lsh_bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_val): each band's ROWS_PER_BAND signature
+    values packed base-MINHASH_P into one int64."""
+    band_vals = F.array(
+        *[
+            sum(
+                F.col(f"m{b * ROWS_PER_BAND + j}")
+                * (MINHASH_P ** (ROWS_PER_BAND - 1 - j))
+                for j in range(ROWS_PER_BAND)
+            )
+            for b in range(BANDS)
+        ]
+    )
+    return sigs.select("doc_id", F.posexplode(band_vals).alias("band", "band_val"))
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a, doc_b), doc_a < doc_b, that
+    share a band value — the blocked band self-join, ids only."""
+    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_val")
+    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_val")
+    return (
+        a.join(b, ["band", "band_val"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+
+
 def _band_val_sql(b_idx: int) -> str:
     r = ROWS_PER_BAND
     terms = [
@@ -214,15 +237,10 @@ def _duck_sig_cols(code: str) -> str:
     )
 
 
-@query(
-    "dedup_minhash_lsh",
-    oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sigs AS (
+# DuckDB twins of the Spark MinHash path: `sigs` (_sig_cols) and
+# `bands` (_lsh_bands) over a `docs` (doc_id, codes) CTE, and the
+# undirected candidate pairs `cand` (_band_pairs).
+_DUCK_LSH_BANDS = f"""sigs AS (
       SELECT doc_id, {_duck_sig_cols('code')}
       FROM (SELECT doc_id, unnest(codes) AS code FROM docs)
       GROUP BY doc_id
@@ -231,12 +249,20 @@ def _duck_sig_cols(code: str) -> str:
       SELECT doc_id, CAST(b AS INT) AS band,
              ({_duck_band_case('b')}) AS band_val
       FROM sigs CROSS JOIN LATERAL (SELECT unnest(range(0, {BANDS})) AS b)
-    ),
-    cand AS (
+    )"""
+_DUCK_BAND_PAIRS = """cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    )
+    )"""
+
+
+@query(
+    "dedup_minhash_lsh",
+    oracle=f"""
+    WITH docs AS (SELECT doc_id, codes FROM ({DUCK_SKETCH})),
+    {_DUCK_LSH_BANDS},
+    {_DUCK_BAND_PAIRS}
     SELECT
       c.doc_a, c.doc_b,
       CAST(CAST(len(list_intersect(x.codes, y.codes)) AS BIGINT) * 1000000
@@ -278,25 +304,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         exploded.groupBy("doc_id").agg(*_sig_cols()),
         StorageLevel.MEMORY_AND_DISK,
     )
-    band_vals = F.array(
-        *[
-            sum(
-                F.col(f"m{b * ROWS_PER_BAND + j}")
-                * (MINHASH_P ** (ROWS_PER_BAND - 1 - j))
-                for j in range(ROWS_PER_BAND)
-            )
-            for b in range(BANDS)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_vals).alias("band", "band_val"))
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_val")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_val")
-    cand = (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = _band_pairs(_lsh_bands(sigs))
     x = docs.select(F.col("doc_id").alias("doc_a"), F.col("codes").alias("codes_a"))
     y = docs.select(F.col("doc_id").alias("doc_b"), F.col("codes").alias("codes_b"))
     jaccard = F.size(F.array_intersect("codes_a", "codes_b")).cast("double") / F.size(
@@ -341,11 +349,7 @@ def _duck_simhash_from_votes() -> str:
 @query(
     "dedup_simhash",
     oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
+    WITH docs AS (SELECT doc_id, codes FROM ({DUCK_SKETCH})),
     votes AS (
       SELECT doc_id, {_duck_simhash_votes()}
       FROM (SELECT doc_id, unnest(codes) AS code FROM docs)
@@ -449,14 +453,11 @@ def jaccard_exploded_codes(sh: DataFrame, df_cap: int | None = None) -> DataFram
     The cap DEFAULTS ON, derived in-plan from the corpus size
     (greatest(64, ceil(0.05 · n_docs)) — no collect, the one-row cap
     aggregate is broadcast), so the default plan is the scale-safe
-    one. SPARK_GRAFT_JACCARD_DF_CAP overrides: a positive value fixes
+    one. An explicit df_cap argument overrides: a positive value fixes
     the cap, 0/negative disables it (exact Jaccard). The oracle SQL
     mirrors the same derived cap, so correctness checks exercise the
     capped semantics end-to-end.
     """
-    if df_cap is None:
-        env = os.environ.get("SPARK_GRAFT_JACCARD_DF_CAP", "")
-        df_cap = int(env) if env.strip() else None
     if df_cap is not None and df_cap <= 0:
         return sh.select(
             "doc_id",
@@ -531,14 +532,7 @@ def jaccard_exploded_codes(sh: DataFrame, df_cap: int | None = None) -> DataFram
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH shingled AS (
-      SELECT
-        doc_id, lang,
-        len(string_split(text, ' ')) AS n_toks,
-        {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
+    WITH shingled AS ({DUCK_SKETCH}),
     cap AS (
       SELECT GREATEST({JACCARD_DF_CAP_FLOOR},
                       CAST(ceil({JACCARD_DF_CAP_FRACTION} * count(*)) AS BIGINT))
@@ -594,8 +588,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard is the self-consistent df-capped measure — see
     jaccard_exploded_codes. The oracle SQL computes the identical
     capped Jaccard (same derived cap, same window arithmetic), so the
-    scale-safe default plan is the oracle-checked one; set
-    SPARK_GRAFT_JACCARD_DF_CAP=0 for exact uncapped Jaccard. Length
+    scale-safe default plan is the oracle-checked one. Length
     blocking (|Δtokens| <= 8) rides along in the join residual so no
     new pair survives that the verifier formulation wouldn't."""
     sh = shingle_sketch(spark, sf_dir).select(
@@ -670,15 +663,11 @@ def _duck_bucket(emb: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-# The oracle's plane count: the env pin verbatim, else the SAME
-# pure-integer formula as lsh_planes_for, in SQL.
+# The oracle's plane count: the SAME pure-integer formula as
+# lsh_planes_for, in SQL.
 _DUCK_PLANES_CTE = (
-    f"SELECT {int(_LSH_PLANES_ENV)} AS planes"
-    if _LSH_PLANES_ENV
-    else (
-        f"SELECT GREATEST(4, LEAST({LSH_MAX_PLANES}, "
-        "length(bin(GREATEST(count(*), 2) - 1)) - 7)) AS planes FROM embeddings"
-    )
+    f"SELECT GREATEST(4, LEAST({LSH_MAX_PLANES}, "
+    "length(bin(GREATEST(count(*), 2) - 1)) - 7)) AS planes FROM embeddings"
 )
 
 
@@ -716,8 +705,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed-4-plane default going quadratic (123 s at 20k vectors)
     where this formula's 8 planes measured 19.4 s. The oracle computes
     the SAME integer formula in SQL (np CTE), so parity holds at every
-    SF without pinning; SPARK_GRAFT_LSH_PLANES pins both engines to a
-    fixed count. The plan-time count() is the BROADCAST_EDGE_LIMIT
+    SF without pinning. The plan-time count() is the BROADCAST_EDGE_LIMIT
     gate pattern: one columnless scan, footer-count cheap.
 
     Bucketing and verification both run in Arrow/pandas kernels
@@ -756,25 +744,9 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_connected_components",
     oracle=f"""
     WITH RECURSIVE
-    docs AS (
-      SELECT doc_id, {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sigs AS (
-      SELECT doc_id, {_duck_sig_cols('code')}
-      FROM (SELECT doc_id, unnest(codes) AS code FROM docs)
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, CAST(b AS INT) AS band, ({_duck_band_case('b')}) AS band_val
-      FROM sigs CROSS JOIN LATERAL (SELECT unnest(range(0, {BANDS})) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    ),
+    docs AS (SELECT doc_id, codes FROM ({DUCK_SKETCH})),
+    {_DUCK_LSH_BANDS},
+    {_DUCK_BAND_PAIRS},
     pairs AS (
       SELECT c.doc_a, c.doc_b
       FROM cand c
@@ -1171,14 +1143,7 @@ CONTAINMENT_MIN_CODES = 5
 @query(
     "dedup_containment",
     oracle=f"""
-    WITH shingled AS (
-      SELECT
-        doc_id, lang,
-        len(string_split(text, ' ')) AS n_toks,
-        {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
+    WITH shingled AS ({DUCK_SKETCH}),
     ex AS (
       SELECT doc_id, lang, len(codes) AS n_codes, unnest(codes) AS code
       FROM shingled
@@ -1266,26 +1231,9 @@ def _duck_match_sum() -> str:
 @query(
     "dedup_minhash_jaccard_estimate",
     oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sigs AS (
-      SELECT doc_id, {_duck_sig_cols('code')}
-      FROM (SELECT doc_id, unnest(codes) AS code FROM docs)
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, CAST(b AS INT) AS band,
-             ({_duck_band_case('b')}) AS band_val
-      FROM sigs CROSS JOIN LATERAL (SELECT unnest(range(0, {BANDS})) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    )
+    WITH docs AS (SELECT doc_id, codes FROM ({DUCK_SKETCH})),
+    {_DUCK_LSH_BANDS},
+    {_DUCK_BAND_PAIRS}
     SELECT c.doc_a, c.doc_b,
            CAST(({_duck_match_sum()}) AS INT) AS n_match,
            CAST(({_duck_match_sum()}) * 1000000 // {NUM_HASHES} AS BIGINT)
@@ -1314,25 +1262,7 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
         exploded.groupBy("doc_id").agg(*_sig_cols()),
         StorageLevel.MEMORY_AND_DISK,
     )
-    band_vals = F.array(
-        *[
-            sum(
-                F.col(f"m{b * ROWS_PER_BAND + j}")
-                * (MINHASH_P ** (ROWS_PER_BAND - 1 - j))
-                for j in range(ROWS_PER_BAND)
-            )
-            for b in range(BANDS)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_vals).alias("band", "band_val"))
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_val")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_val")
-    cand = (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = _band_pairs(_lsh_bands(sigs))
     x = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"m{i}").alias(f"xa{i}") for i in range(NUM_HASHES)],
@@ -1416,21 +1346,8 @@ INCR_BATCH_MOD = 5  # doc_id % 5 == 0 is "today's batch"; rest is history
 @query(
     "dedup_incremental_minhash",
     oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sigs AS (
-      SELECT doc_id, {_duck_sig_cols('code')}
-      FROM (SELECT doc_id, unnest(codes) AS code FROM docs)
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, CAST(b AS INT) AS band,
-             ({_duck_band_case('b')}) AS band_val
-      FROM sigs CROSS JOIN LATERAL (SELECT unnest(range(0, {BANDS})) AS b)
-    ),
+    WITH docs AS (SELECT doc_id, codes FROM ({DUCK_SKETCH})),
+    {_DUCK_LSH_BANDS},
     cand AS (
       SELECT DISTINCT n.doc_id AS batch_doc, h.doc_id AS hist_doc
       FROM bands n JOIN bands h
@@ -1478,19 +1395,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exploded = docs.select("doc_id", F.explode("codes").alias("code"))
     sigs = exploded.groupBy("doc_id").agg(*_sig_cols())
-    band_vals = F.array(
-        *[
-            sum(
-                F.col(f"m{b * ROWS_PER_BAND + j}")
-                * (MINHASH_P ** (ROWS_PER_BAND - 1 - j))
-                for j in range(ROWS_PER_BAND)
-            )
-            for b in range(BANDS)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", F.posexplode(band_vals).alias("band", "band_val")
-    )
+    bands = _lsh_bands(sigs)
     n = bands.filter(F.col("doc_id") % INCR_BATCH_MOD == 0).select(
         F.col("doc_id").alias("batch_doc"), "band", "band_val"
     )
@@ -1667,9 +1572,7 @@ RECALL_SAMPLE_TARGET = 600  # ground-truth sample size for the LSH eval
         AS m
     ),
     docs AS (
-      SELECT doc_id, {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents, params
-      WHERE doc_id % m = 0 AND len(string_split(text, ' ')) >= 3
+      SELECT doc_id, codes FROM ({DUCK_SKETCH}), params WHERE doc_id % m = 0
     ),
     truth AS (
       SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -1677,20 +1580,8 @@ RECALL_SAMPLE_TARGET = 600  # ground-truth sample size for the LSH eval
       WHERE 2 * len(list_intersect(x.codes, y.codes))
             >= len(list_distinct(list_concat(x.codes, y.codes)))
     ),
-    sigs AS (
-      SELECT doc_id, {_duck_sig_cols('code')}
-      FROM (SELECT doc_id, unnest(codes) AS code FROM docs)
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, CAST(b AS INT) AS band, ({_duck_band_case('b')}) AS band_val
-      FROM sigs CROSS JOIN LATERAL (SELECT unnest(range(0, {BANDS})) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    ),
+    {_DUCK_LSH_BANDS},
+    {_DUCK_BAND_PAIRS},
     hits AS (
       SELECT count(*) AS n FROM truth t
       JOIN cand c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
@@ -1763,25 +1654,8 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     truth = scoped_persist(truth, StorageLevel.MEMORY_AND_DISK)
     sigs = ex.groupBy("doc_id").agg(*_sig_cols())
-    band_vals = F.array(
-        *[
-            sum(
-                F.col(f"m{b * ROWS_PER_BAND + j}")
-                * (MINHASH_P ** (ROWS_PER_BAND - 1 - j))
-                for j in range(ROWS_PER_BAND)
-            )
-            for b in range(BANDS)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_vals).alias("band", "band_val"))
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_val")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_val")
     cand = scoped_persist(
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct(),
-        StorageLevel.MEMORY_AND_DISK,
+        _band_pairs(_lsh_bands(sigs)), StorageLevel.MEMORY_AND_DISK
     )
     n_sample = docs.agg(F.count(F.lit(1)).alias("n_sample_docs"))
     n_truth = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
@@ -1875,25 +1749,9 @@ JACCARD_SENS_THRESHOLDS_E6 = (300_000, 500_000, 700_000, 900_000)
 @query(
     "dedup_threshold_sensitivity",
     oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sigs AS (
-      SELECT doc_id, {_duck_sig_cols('code')}
-      FROM (SELECT doc_id, unnest(codes) AS code FROM docs)
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, CAST(b AS INT) AS band, ({_duck_band_case('b')}) AS band_val
-      FROM sigs CROSS JOIN LATERAL (SELECT unnest(range(0, {BANDS})) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    ),
+    WITH docs AS (SELECT doc_id, codes FROM ({DUCK_SKETCH})),
+    {_DUCK_LSH_BANDS},
+    {_DUCK_BAND_PAIRS},
     scored AS (
       SELECT CAST(CAST(len(list_intersect(x.codes, y.codes)) AS BIGINT) * 1000000
              // len(list_distinct(list_concat(x.codes, y.codes))) AS BIGINT)
@@ -1928,25 +1786,7 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exploded = docs.select("doc_id", F.explode("codes").alias("code"))
     sigs = exploded.groupBy("doc_id").agg(*_sig_cols())
-    band_vals = F.array(
-        *[
-            sum(
-                F.col(f"m{b * ROWS_PER_BAND + j}")
-                * (MINHASH_P ** (ROWS_PER_BAND - 1 - j))
-                for j in range(ROWS_PER_BAND)
-            )
-            for b in range(BANDS)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_vals).alias("band", "band_val"))
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_val")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_val")
-    cand = (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = _band_pairs(_lsh_bands(sigs))
     x = docs.select(F.col("doc_id").alias("doc_a"), F.col("codes").alias("ca"))
     y = docs.select(F.col("doc_id").alias("doc_b"), F.col("codes").alias("cb"))
     scored = (

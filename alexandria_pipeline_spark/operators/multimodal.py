@@ -867,30 +867,6 @@ def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_wav_samples(data: bytes) -> tuple[int, "np.ndarray"]:
-    """RIFF walk returning (sample_rate, int64 sample array) — the
-    raw-sample sibling of decode_wav_pcm16 for DSP passes."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, rate, samples = 12, None, None
-    while pos + 8 <= len(data):
-        cid, clen = struct.unpack_from("<4sI", data, pos)
-        body = data[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            audio_fmt, channels, rate = struct.unpack_from("<HHI", body, 0)
-            bits = struct.unpack_from("<H", body, 14)[0]
-            if audio_fmt != 1 or channels != 1 or bits != 16:
-                raise ValueError("unsupported WAV variant (need PCM16 mono)")
-        elif cid == b"data":
-            samples = np.frombuffer(
-                body[: len(body) // 2 * 2], dtype="<i2"
-            ).astype(np.int64)
-        pos += 8 + clen + (clen & 1)
-    if rate is None or samples is None:
-        raise ValueError("missing fmt/data chunk")
-    return rate, samples
-
-
 VAD_FRAME = 8  # samples per energy frame
 # voiced iff frame mean-square > this (int): samples are ±32k so typical
 # frame MS ~ 3.5e8; the threshold splits the synthetic corpus ~in half

@@ -15,13 +15,12 @@ from alexandria_pipeline_spark.catalog import load_table, spread_to_cores
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.text import (
     duck_rolling_fingerprint,
-    duck_shingle_codes,
     duck_word_code,
     rolling_fingerprint,
     sentences,
     word_code,
 )
-from alexandria_pipeline_spark.sketch import shingle_sketch
+from alexandria_pipeline_spark.sketch import DUCK_SKETCH, shingle_sketch
 from alexandria_pipeline_spark.registry import (
     ORACLES,
     QUERIES,
@@ -500,12 +499,7 @@ def text_ngram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_ngram_novelty",
     oracle=f"""
-    WITH sh AS (
-      SELECT doc_id, lang,
-             {duck_shingle_codes("string_split(text, ' ')")} AS codes
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
+    WITH sh AS (SELECT doc_id, lang, codes FROM ({DUCK_SKETCH})),
     ex AS (
       SELECT doc_id, lang, unnest(codes) AS code FROM sh
     ),

@@ -7,7 +7,8 @@ It is a written-once relation (materialize.py) keyed by the documents
 table: at 100 TB the tokenize+shingle pass over the raw text dominates
 every consumer, so production writes the ~1 KB/doc sketch once. The
 build writes exactly `_inline_sketch`'s frame, so the materialized and
-inline paths are value-identical.
+inline paths are value-identical. `DUCK_SKETCH` is its DuckDB twin: the
+one sketch definition every consumer's oracle SQL selects from.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from alexandria_pipeline_spark import materialize
 from alexandria_pipeline_spark.catalog import load_table, read_parquet
-from alexandria_pipeline_spark.functions.text import shingle_codes
+from alexandria_pipeline_spark.functions.text import duck_shingle_codes, shingle_codes
 
 SKETCH_MIN_TOKS = 3  # shingle_codes needs >= 3 tokens; all consumers filter so
 
@@ -39,6 +40,17 @@ def _inline_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).alias("n_toks"),
         shingle_codes(toks).alias("codes"),
     )
+
+
+# DuckDB twin of _inline_sketch: the oracle SQL of every shingle
+# consumer selects from it.
+_DUCK_TOKS = "string_split(text, ' ')"
+DUCK_SKETCH = f"""
+      SELECT doc_id, lang, len({_DUCK_TOKS}) AS n_toks,
+             {duck_shingle_codes(_DUCK_TOKS)} AS codes
+      FROM documents
+      WHERE len({_DUCK_TOKS}) >= {SKETCH_MIN_TOKS}
+"""
 
 
 def _build_sketch(spark: SparkSession, sf_dir: str, loc: str) -> dict:

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import re
 import subprocess
 import sys
 
@@ -18,8 +19,10 @@ import bench  # noqa: E402 - repo-root import
 def test_importing_bench_and_package_leaves_environ_unchanged():
     """Importing bench or any package module must not touch the
     process environment (a setdefault at import turned a later test's
-    timezone warning into a raise). Run in a fresh interpreter: this
-    process has imported everything already."""
+    timezone warning into a raise), and must not fail on a malformed
+    SPARK_GRAFT_* value: the probe runs once with none set and once
+    with every name the package or bench reads set to "x". Run in a
+    fresh interpreter: this process has imported everything already."""
     probe = """
 import importlib, os, pkgutil, sys
 sys.path.insert(0, sys.argv[1])
@@ -32,20 +35,27 @@ after = dict(os.environ)
 changed = sorted(k for k in before.keys() | after.keys() if before.get(k) != after.get(k))
 print(changed)
 """
-    env = {
+    clean = {
         k: v
         for k, v in os.environ.items()
         if not k.startswith("SPARK_GRAFT_")
     }
-    out = subprocess.run(
-        [sys.executable, "-c", probe, str(REPO)],
-        capture_output=True,
-        text=True,
-        env=env,
-        timeout=300,
-        check=True,
-    )
-    assert out.stdout.strip().splitlines()[-1] == "[]", out.stdout
+    sources = [REPO / "bench.py", *(REPO / "alexandria_pipeline_spark").rglob("*.py")]
+    names = {
+        n for f in sources for n in re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", f.read_text())
+    }
+    assert names
+    malformed = {**clean, **dict.fromkeys(names, "x")}
+    for env in (clean, malformed):
+        out = subprocess.run(
+            [sys.executable, "-c", probe, str(REPO)],
+            capture_output=True,
+            text=True,
+            env=env,
+            timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert out.stdout.strip().splitlines()[-1] == "[]", out.stdout
 
 
 def test_self_record_pointer_is_null_when_write_fails(tmp_path, capsys):

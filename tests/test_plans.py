@@ -92,12 +92,22 @@ def test_no_python_eval_in_hot_paths(spark):
         assert "EvalPython" not in plan, name
 
 
-def test_lsh_band_join_carries_ids_only(spark):
-    """dedup_minhash_lsh's band self-join must not carry shingle
-    arrays: its output attributes are ids only. Identified as the join
-    whose condition is the doc_a < doc_b pair filter; `codes` enter
-    only in the later verification joins."""
-    plan = formatted_plan(QUERIES["dedup_minhash_lsh"](spark, SF_SMOKE))
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "dedup_minhash_jaccard_estimate",
+        "dedup_lsh_recall_eval",
+        "dedup_threshold_sensitivity",
+    ],
+)
+def test_lsh_band_join_carries_ids_only(spark, name):
+    """The undirected band self-join (_band_pairs) must not carry
+    shingle arrays: its output attributes are ids only. Identified as
+    the join whose condition is the doc_a < doc_b pair filter; `codes`
+    enter only in the later verification joins."""
+    plan = formatted_plan(QUERIES[name](spark, SF_SMOKE))
+    release_persisted()
     blocks = plan.split("\n\n")
     band_join = [
         b for b in blocks
