@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from alexandria_pipeline_spark.registry import env_flag
+
 TABLES = [
     "region",
     "nation",
@@ -132,7 +134,7 @@ def _ensure_event_time_confs(spark: SparkSession) -> None:
             f"instants regardless, but date/hour extractions over it "
             f"resolve in {tz!r} while the oracle assumes UTC."
         )
-        if os.environ.get("SPARK_GRAFT_REQUIRE_UTC"):
+        if env_flag("SPARK_GRAFT_REQUIRE_UTC"):
             raise RuntimeError(
                 msg + " SPARK_GRAFT_REQUIRE_UTC is set: refusing to run "
                 "oracle-checked event-time queries in a non-UTC session; "

@@ -31,7 +31,12 @@ from alexandria_pipeline_spark.functions.checkpoints import (
     persistent_rdd_ids,
     unpersist_rdd_ids,
 )
-from alexandria_pipeline_spark.registry import env_int, query, scoped_persist
+from alexandria_pipeline_spark.registry import (
+    env_flag,
+    env_int,
+    query,
+    scoped_persist,
+)
 
 PR_ITERS = 3
 DAMP_MICRO = 850_000
@@ -1240,7 +1245,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = scoped_persist(
         _jaccard_edges(spark, sf_dir), StorageLevel.MEMORY_AND_DISK
     )
-    small = raw_pairs <= _ra_adj_limit() and not os.environ.get(
+    small = raw_pairs <= _ra_adj_limit() and not env_flag(
         "SPARK_GRAFT_RA_FORCE_ITER"
     )
     if not small:
@@ -1564,8 +1569,8 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # packed-long distinct — r12), persisted for the peel rounds
     edges0 = _jaccard_edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     n_edges_total = edges0.count()
-    k_env = os.environ.get("SPARK_GRAFT_KCORE_K", "")
-    if n_edges_total <= KCORE_DRIVER_EDGE_LIMIT and not os.environ.get(
+    k_env = env_int("SPARK_GRAFT_KCORE_K", 0)  # 0: adaptive k
+    if n_edges_total <= KCORE_DRIVER_EDGE_LIMIT and not env_flag(
         "SPARK_GRAFT_KCORE_FORCE_DIST"
     ):
         # Driver peel (see KCORE_DRIVER_EDGE_LIMIT): one Arrow collect
@@ -1582,10 +1587,8 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         ea = pdf["a"].to_numpy(copy=False)
         eb = pdf["b"].to_numpy(copy=False)
         n_nodes_total = int(np.unique(np.concatenate([ea, eb])).size)
-        k = (
-            int(k_env)
-            if k_env
-            else max(K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1))
+        k = k_env or max(
+            K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1)
         )
         alive = np.ones(len(ea), dtype=bool)
         iters = 0
@@ -1613,11 +1616,7 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .count()
     )
-    k = (
-        int(k_env)
-        if k_env
-        else max(K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1))
-    )
+    k = k_env or max(K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1))
     edges = edges0
     prev_ckpt_ids: set[int] = set()
     iters = 0

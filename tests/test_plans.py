@@ -185,6 +185,32 @@ def test_no_complex_types_in_any_query_output(registry_plans):
     assert not offenders, offenders
 
 
+def test_multimodal_payloads_never_shuffle(registry_plans):
+    """Scale contract of every multimodal_* query: binary payloads stay
+    inside the map stage that made or read them; only ids and
+    extracted features cross an Exchange. Walks the node details of
+    each formatted plan and checks every *Exchange node's input."""
+    import re
+
+    n_exchanges = n_payload_nodes = 0
+    offenders = []
+    for name in sorted(q for q in QUERIES if q.startswith("multimodal_")):
+        _schema, plan = registry_plans[name]
+        for node in plan.split("\n\n"):
+            head = re.match(r"\(\d+\) (\w+)", node.strip())
+            inputs = re.search(r"^Input \[\d+\]: \[(.*)\]$", node, re.M)
+            if not head or not inputs:
+                continue
+            carries = re.search(r"\bpayload#", inputs.group(1)) is not None
+            n_payload_nodes += carries
+            if head.group(1).endswith("Exchange"):
+                n_exchanges += 1
+                if carries:
+                    offenders.append(f"{name}: {node.strip()}")
+    assert n_exchanges and n_payload_nodes, "plan walk matched nothing"
+    assert not offenders, offenders
+
+
 def _unpartitioned_window_lines(plan: str) -> list[str]:
     return [
         ln

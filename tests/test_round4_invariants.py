@@ -1,12 +1,9 @@
 """Invariant tests for the round-4 operators — properties the DuckDB
 oracles can't express (they check equality, not internal consistency):
-compaction bin-packing bounds, snapshot-diff partition algebra, WAV
-encode/decode round-trip under hypothesis, Pareto coverage guarantees,
-and feature-matrix non-negativity."""
+compaction bin-packing bounds, snapshot-diff partition algebra, Pareto
+coverage guarantees, and feature-matrix non-negativity."""
 
 from __future__ import annotations
-
-from hypothesis import given, settings, strategies as st
 
 from alexandria_pipeline_spark import QUERIES, register_all
 from tests.conftest import SF_SMOKE
@@ -54,24 +51,6 @@ def test_snapshot_diff_partition_algebra(spark):
     assert rows["deleted"]["n"] == k4
     assert rows["changed"]["n"] == k3
     assert rows["unchanged"]["n"] == total - k7 - k4 - k3
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(
-        st.integers(min_value=-32768, max_value=32767), min_size=1, max_size=200
-    ),
-    st.sampled_from([8000, 16000, 44100]),
-)
-def test_wav_samples_roundtrip(samples, rate):
-    from alexandria_pipeline_spark.operators.multimodal import (
-        decode_wav_samples,
-        encode_wav_pcm16,
-    )
-
-    rate2, out = decode_wav_samples(encode_wav_pcm16(rate, samples))
-    assert rate2 == rate
-    assert out.tolist() == samples
 
 
 def test_pareto_coverage_guarantee(spark):

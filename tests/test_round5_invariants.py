@@ -279,23 +279,6 @@ def test_peak_concurrency_bounds(spark):
         assert 0 <= r["peak_concurrent"] <= total_starts
 
 
-def test_image_ahash_clusters_by_seed(spark):
-    """Payloads repeat mod AHASH_SEEDS, so two media ids with the same
-    seed MUST land in the same hash cluster (identical bytes ->
-    identical hash), and the canonical id is the cluster minimum."""
-    from alexandria_pipeline_spark.catalog import load_table
-    from alexandria_pipeline_spark.operators.multimodal import AHASH_SEEDS
-
-    rows = QUERIES["multimodal_image_ahash_dedup"](spark, SF_SMOKE).collect()
-    n_docs = load_table(spark, SF_SMOKE, "documents").count()
-    assert sum(r["cluster_size"] for r in rows) == n_docs
-    # distinct hashes cannot exceed the payload-seed universe
-    assert len(rows) <= AHASH_SEEDS
-    for r in rows:
-        assert len(r["ahash_bits"]) == 64
-        assert set(r["ahash_bits"]) <= {"0", "1"}
-
-
 def test_compression_ratio_invariants(spark):
     """No SQL oracle exists for zlib — pin the physics instead: sizes
     positive, ratio = raw*1000//comp exactly, identical output across

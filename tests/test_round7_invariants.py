@@ -493,35 +493,6 @@ def test_watermark_curve_is_monotone(spark):
             assert r["n_late"] == 0, r
 
 
-def test_letterbox_geometry_invariants(spark):
-    """Long side fills the target exactly, the short side never
-    exceeds it, pad share matches the content box, and the gray sum
-    sits inside the 8x8x255 envelope."""
-    from alexandria_pipeline_spark.operators.multimodal import (
-        LETTERBOX_PAD_GRAY,
-        LETTERBOX_T,
-    )
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    rows = QUERIES["multimodal_image_letterbox"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    T = LETTERBOX_T
-    for r in rows:
-        assert max(r["content_w"], r["content_h"]) == T
-        assert 1 <= min(r["content_w"], r["content_h"]) <= T
-        # aspect ordering is preserved
-        assert (r["src_w"] >= r["src_h"]) == (r["content_w"] >= r["content_h"])
-        n_pad = T * T - r["content_w"] * r["content_h"]
-        assert r["pad_ppm"] == n_pad * 1_000_000 // (T * T)
-        assert (
-            LETTERBOX_PAD_GRAY * n_pad
-            <= r["gray_sum"]
-            <= LETTERBOX_PAD_GRAY * n_pad + 255 * (T * T - n_pad)
-        )
-
-
 def test_vocab_overlap_bounds(spark):
     """Pairs are canonical (lang_a < lang_b), shared counts bounded by
     the top-k size, Jaccard consistent with the fixed-size union."""
@@ -1479,36 +1450,6 @@ def test_retention_half_life_invariants(spark):
             assert r["half_life_milli_weeks"] > 0
         else:
             assert r["half_life_milli_weeks"] == -1
-
-
-def test_audio_snr_reconciles_with_vad(spark):
-    """SNR's voiced/unvoiced sample split must cover every decoded
-    sample and agree with the VAD's voiced-frame count (full frames x
-    frame size, plus the short tail frame when voiced), and voiced
-    mean-square power is above the gate while unvoiced sits at/below."""
-    from alexandria_pipeline_spark.operators.multimodal import (
-        VAD_MS_THRESHOLD,
-    )
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    sf = "/root/testdata/sf0.001"
-    snr = {
-        r["media_id"]: r
-        for r in QUERIES["multimodal_audio_snr"](spark, sf).collect()
-    }
-    vad = {
-        r["media_id"]: r
-        for r in QUERIES["multimodal_audio_vad"](spark, sf).collect()
-    }
-    assert set(snr) == set(vad)
-    for mid, r in snr.items():
-        n_samples = mid % 50 + 20
-        assert r["n_voiced_samples"] + r["n_unvoiced_samples"] == n_samples
-        if r["n_voiced_samples"] > 0:
-            assert r["voiced_ms"] > VAD_MS_THRESHOLD // 2  # gate is per-frame
-        if r["snr_power_milli"] != -1:
-            assert r["snr_power_milli"] >= 1000  # voiced power > unvoiced
 
 
 def test_hhi_by_type_bounds_and_floor(spark):
