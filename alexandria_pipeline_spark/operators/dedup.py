@@ -1598,7 +1598,7 @@ RECALL_SAMPLE_TARGET = 600  # ground-truth sample size for the LSH eval
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-generation RECALL of the MinHash banding scheme — the
     ann_eval_recall methodology applied to dedup: on a deterministic
-    document sample (doc_id % m, m sized at plan time so the sample
+    document sample (doc_id % m, m sized in-plan so the sample
     stays ~{RECALL_SAMPLE_TARGET} docs at ANY corpus size), compare
     the band join's candidate pairs against exact ground truth (all
     sample pairs with true shingle Jaccard >= 0.5, decided by the
@@ -1612,12 +1612,16 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops; see inline comment), not a broadcast nested loop; candidates
     use the identical signature/band machinery as dedup_minhash_lsh
     (same constants, same code paths)."""
-    d = load_table(spark, sf_dir, "documents")
-    n_docs = d.count()
-    m = max(1, n_docs // RECALL_SAMPLE_TARGET)
+    # m rides the plan as a broadcast one-row frame (the oracle's
+    # params CTE), so the builder runs no job to size the sample.
+    params = load_table(spark, sf_dir, "documents").agg(
+        F.greatest(
+            F.lit(1), F.expr(f"count(1) div {RECALL_SAMPLE_TARGET}")
+        ).alias("m")
+    )
     docs = scoped_persist(
         shingle_sketch(spark, sf_dir)
-        .filter(F.col("doc_id") % m == 0)
+        .join(F.broadcast(params), F.col("doc_id") % F.col("m") == 0)
         .select("doc_id", "codes")
         .withColumn("nc", F.size("codes")),
         StorageLevel.MEMORY_AND_DISK,

@@ -1086,14 +1086,6 @@ def events_power_user_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Theil–Sen banded-median band width: slopes floor-div 2^17 millicents
-# (~$1.31/day per band) — wide enough that band cardinality stays in
-# the thousands, narrow enough that the middle band holds a small
-# fraction of the pairs. Pathological concentration (all slopes equal)
-# degrades gracefully to one sorted band = the old single-sort cost.
-THEILSEN_BAND_SHIFT = 17
-
-
 @query(
     "orders_theilsen_trend",
     oracle="""
@@ -1118,35 +1110,35 @@ def orders_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise day-to-day slopes — the estimator that shrugs off the
     outlier days that drag the OLS line (orders_linreg_trend is its
     fragile twin; disagreement between the two IS the outlier alarm).
-    The pair join looks quadratic but is bounded by the CALENDAR, not
-    the data: per_day has at most elapsed-days rows at any SF, so the
-    self-join emits days²/2 ≈ a few million slope rows forever, and
-    each slope is pre-truncated to integer millicents/day BEFORE the
-    median (identical truncation both engines → the floored exact
-    median is hash-stable).
 
-    The query is ONE lazy plan: the builder runs no Spark job and the
-    sink runs it once. Nothing is cached — recomputing the ~2,400-day
-    broadcast nested-loop join for its two readers costs less than
-    persisting ~2.9M slopes and re-reading them. AQE coalesces the
-    calendar-bounded per_day aggregate into ONE partition, so the
-    join's stream side is round-robin spread to defaultParallelism, a
-    plan-time constant (spread_to_cores would probe the partition
-    count, i.e. run the aggregate, inside the builder). The division is
-    guarded by `CASE WHEN db > da`: Catalyst pushes the band join's
-    inferred `isnotnull(band)` into the pair join's condition ahead of
-    `db > da`, so unguarded, ANSI raises DIVIDE_BY_ZERO on the da == db
-    candidates; on joined rows the guard never fires.
+    The pairs look quadratic but are bounded by the CALENDAR, not the
+    data: per_day has at most elapsed-days rows at any SF (2,406 for
+    the TPC-H order calendar), so there are at most ~2.9M slopes, ~23
+    MB of int64, forever. The plan is therefore the
+    orders_holt_linear_trend shape: the only data-sized work is the
+    per_day aggregate; a global aggregate packs its (d, rev) columns
+    into ONE row, and one mapInPandas task computes every slope and
+    the exact median in numpy. A global aggregate always yields its
+    row, so the kernel runs (and answers) for 0, 1 and 2 days too.
+    One task beats a distributed median at this size: a broadcast
+    pair join feeding a banded two-pass median runs 12 jobs and ships
+    2.5 MB of shuffle at sf0.01; this plan runs 3 jobs and ~50 KB.
 
-    The median itself is TWO-PHASE BANDED (r5 verdict #5 — the
-    single-group exact percentile gathered all ~2.9M slopes into one
-    buffer and cost 10% of the bench wall): slopes band by an
-    arithmetic shift (floor-div by 2^{THEILSEN_BAND_SHIFT}, exact for
-    negatives), a band-cardinality cumulative locates the band(s)
-    holding the two middle ranks, and only those bands — broadcast, ≤2
-    rows of metadata — are row_number'd to pick the middle values.
-    floor(quantile_cont) == arithmetic-shift mean of the two middles
-    (both exact: |v1+v2| < 2^53), so the oracle is unchanged."""
+    Exactness (the oracle hash-matches): each db > da slope is
+    1000·(rb − ra) div (db − da) in int64, truncated toward zero as
+    Spark `div` and DuckDB `//` do (numpy `//` floors, so the kernel
+    divides magnitudes and restores the sign). The median is exact via
+    np.partition; for an even count it is the floor-shifted mean of
+    the two middles, which equals the oracle's floor(quantile_cont).
+
+    Overflow contract: the slope numerators stay in int64 exactly when
+    1000·(max(rev) − min(rev)) does, so the aggregate evaluates that
+    product under ANSI and raises ARITHMETIC_OVERFLOW wherever some
+    pair's 1000·(rb − ra) is beyond int64 — where a pairwise Spark plan
+    raises — and the kernel never sees a wrapped value."""
+    import numpy as np
+    import pandas as pd
+
     o = load_table(spark, sf_dir, "orders")
     per_day = o.groupBy(
         F.datediff(
@@ -1159,76 +1151,44 @@ def orders_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
         ).alias("rev")
     )
-    a = per_day.select(F.col("d").alias("da"), F.col("rev").alias("ra")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    b = per_day.select(F.col("d").alias("db"), F.col("rev").alias("rb"))
-    slopes = (
-        a.join(F.broadcast(b), F.col("db") > F.col("da"))
-        .select(
-            F.expr("CASE WHEN db > da THEN 1000 * (rb - ra) div (db - da) END").alias("s")
-        )
-        .select("s", F.shiftright("s", THEILSEN_BAND_SHIFT).alias("band"))
-    )
-    # The band cumulative, the TOTAL and the middle ranks come out of
-    # ONE pass over the bands frame: both windows share one global band
-    # sort, the plan's only unpartitioned window. It runs over band
-    # VALUES, whose cardinality the band shift bounds, so no data-sized
-    # single-partition operator appears.
-    bands = slopes.groupBy("band").agg(F.count(F.lit(1)).alias("cnt"))
-    w_cum = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("band").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = bands.select(
-        "band",
-        "cnt",
-        F.coalesce(F.sum("cnt").over(w_cum), F.lit(0)).alias("before"),
-        F.sum("cnt").over(w_all).alias("n_pairs"),
-    ).select(
-        "band",
-        "cnt",
-        "before",
-        "n_pairs",
-        F.expr("(n_pairs + 1) div 2").alias("r1"),
-        F.expr("n_pairs div 2 + 1").alias("r2"),
-    )
-    sel = cum.filter(
-        (F.col("before") + F.col("cnt") >= F.col("r1"))
-        & (F.col("before") < F.col("r2"))
-    ).select("band", "before", "n_pairs", "r1", "r2")
-    w_loc = Window.partitionBy("band").orderBy("s")
-    picked = (
-        slopes.join(F.broadcast(sel), "band")
-        .withColumn("gr", F.col("before") + F.row_number().over(w_loc))
-        .filter((F.col("gr") == F.col("r1")) | (F.col("gr") == F.col("r2")))
-    )
-    med = picked.agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum("s").alias("ss"),
-        F.min("s").alias("mn"),
-        F.min("n_pairs").alias("np"),
-    ).select(
-        F.when(F.col("c") == 1, F.col("mn"))
-        .when(F.col("c") == 2, F.shiftright(F.col("ss"), 1))
-        .otherwise(F.lit(None))
-        .cast("long")
-        .alias("theilsen_millicents_per_day"),
-        # n_pairs rides the same aggregate (sel's rows all carry it);
-        # coalesce(0) covers the degenerate single-day corpus where no
-        # slope (and so no sel row) exists — the oracle's count(*)
-        # over empty slopes is 0 there, never NULL.
-        F.coalesce(F.col("np"), F.lit(0)).alias("n_pairs"),
-    )
-    n_days = per_day.agg(F.count(F.lit(1)).alias("n_days"))
-    return (
-        F.broadcast(n_days)
-        .crossJoin(med)
-        .select(
-            F.col("n_days").cast("long").alias("n_days"),
-            F.col("n_pairs").cast("long").alias("n_pairs"),
-            "theilsen_millicents_per_day",
-        )
+    days = per_day.agg(
+        F.collect_list(F.struct("d", "rev")).alias("days"),
+        # bounds every |slope numerator|; ANSI raises here on overflow
+        F.expr("1000 * (max(rev) - min(rev))").alias("num_bound"),
+    ).select(F.col("days.d").alias("d"), F.col("days.rev").alias("rev"), "num_bound")
+
+    def theilsen(batches):
+        for pdf in batches:
+            for d, rev in zip(pdf["d"], pdf["rev"]):
+                order = np.argsort(d)
+                d, rev = d[order], rev[order]
+                n = len(d)
+                s = np.empty(n * (n - 1) // 2, dtype=np.int64)
+                at = 0
+                for i in range(n - 1):
+                    num = 1000 * (rev[i + 1 :] - rev[i])
+                    q = np.abs(num) // (d[i + 1 :] - d[i])
+                    s[at : at + len(q)] = np.where(num < 0, -q, q)
+                    at += len(q)
+                k = len(s) // 2
+                if not len(s):
+                    med = None
+                elif len(s) % 2:
+                    med = int(np.partition(s, k)[k])
+                else:
+                    lo, hi = np.partition(s, (k - 1, k))[k - 1 : k + 1]
+                    med = (int(lo) + int(hi)) >> 1
+                yield pd.DataFrame(
+                    {
+                        "n_days": [n],
+                        "n_pairs": [len(s)],
+                        "theilsen_millicents_per_day": pd.array([med], "Int64"),
+                    }
+                )
+
+    return days.mapInPandas(
+        theilsen,
+        "n_days long, n_pairs long, theilsen_millicents_per_day long",
     )
 
 

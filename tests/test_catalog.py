@@ -11,6 +11,7 @@ import pyarrow.parquet as pq
 
 from alexandria_pipeline_spark import QUERIES
 from alexandria_pipeline_spark.catalog import load_table, read_parquet
+from alexandria_pipeline_spark.registry import release_persisted
 
 from tests.conftest import SF_SMOKE, count_jobs
 
@@ -59,4 +60,17 @@ def test_warm_builder_runs_no_job(spark):
     build = QUERIES["q5_region_volume"]
     build(spark, SF_SMOKE)
     _, jobs = count_jobs(spark, lambda: build(spark, SF_SMOKE))
+    assert jobs == 0
+
+
+def test_lsh_recall_eval_warm_builder_runs_no_job(spark):
+    """The sample modulus is a broadcast one-row aggregate inside the
+    plan, not a count the builder runs."""
+    build = QUERIES["dedup_lsh_recall_eval"]
+    build(spark, SF_SMOKE)
+    release_persisted()
+    try:
+        _, jobs = count_jobs(spark, lambda: build(spark, SF_SMOKE))
+    finally:
+        release_persisted()
     assert jobs == 0

@@ -371,6 +371,10 @@ def test_no_python_eval_outside_declared_seams(registry_plans):
     # AFTER the day-level aggregate, so the Python side only ever sees
     # SF-invariant calendar-bounded rows per group — the declared
     # grouped-recurrence seam (stream twin holds the same state logic).
+    # orders_theilsen_trend: the exact median of all pairwise day
+    # slopes is one numpy kernel in a mapInPandas over the ONE row of
+    # a global aggregate of the day-level aggregate, so Python sees a
+    # single row of at most elapsed-days arrays — the same at every SF.
     # knn_mutual_topk / knn_label_eval / knn_mrr_eval /
     # dedup_embedding_cosine: the per-bucket exact-scoring kernel
     # (functions/bucketed.py, r7 verdict #1/#3) is a DECLARED Arrow
@@ -382,6 +386,7 @@ def test_no_python_eval_outside_declared_seams(registry_plans):
     allowed = {
         "text_compression_ratio",
         "orders_holt_linear_trend",
+        "orders_theilsen_trend",
         "knn_mutual_topk",
         "knn_label_eval",
         "knn_mrr_eval",
@@ -504,7 +509,6 @@ UNPART_WINDOW_BOUNDS = {
     "events_watermark_lateness_curve": "banded",
     "orders_abc_classification": "banded",
     "orders_pareto_8020": "banded",
-    "orders_theilsen_trend": "banded",
     "events_changepoint_binseg": "calendar",
     "events_cumulative_distinct_users": "calendar",
     "events_peak_concurrency_daily": "calendar",

@@ -1,6 +1,6 @@
 """Invariant tests for the round-5 operators — internal-consistency
-properties the equality oracles can't express: Benford shares summing
-to one, Lorenz-curve monotonicity, Markov context distributions,
+properties the equality oracles can't express: Lorenz-curve
+monotonicity, Markov context distributions,
 log2-bucket boundary containment, Zipf ordering, mutual-kNN symmetry
 against the brute-force ranking, and the LSH plan advisor agreeing
 with the Python-side formula."""
@@ -13,18 +13,6 @@ from tests.conftest import SF_SMOKE
 
 def setup_module() -> None:
     register_all()
-
-
-def test_benford_shares_sum_to_one(spark):
-    rows = QUERIES["orders_benford_first_digit"](spark, SF_SMOKE).collect()
-    assert {r["d"] for r in rows} <= set("123456789")
-    # exp_ppm is the fixed Benford table; truncating obs shares sum to
-    # at most 1e6 and undershoot by less than one ppm per digit
-    assert sum(r["exp_ppm"] for r in rows) <= 1_000_000
-    obs = sum(r["obs_ppm"] for r in rows)
-    assert 1_000_000 - len(rows) <= obs <= 1_000_000
-    for r in rows:
-        assert r["dev_ppm"] == abs(r["obs_ppm"] - r["exp_ppm"])
 
 
 def test_power_user_curve_is_monotone_lorenz(spark):

@@ -1,7 +1,6 @@
 """Round-6 invariants for the new retrieval / fuzzy-join / passage-dedup
-/ EWMA / quality-scorer queries — properties the oracle hash can't
-express (completeness of blocked candidate generation, ranking
-monotonicity, weighted-mean bounds).
+/ quality-scorer queries — properties the oracle hash can't express
+(completeness of blocked candidate generation, ranking monotonicity).
 """
 
 from __future__ import annotations
@@ -71,37 +70,6 @@ def test_passage_dedup_accounting(spark):
         assert 0 <= r["n_dup_occurrences"] <= r["n_passages"]
         assert 0 <= r["dup_tokens"] <= r["total_tokens"]
         assert 0.0 <= r["dup_token_share"] <= 1.0
-
-
-def test_ewma_is_bounded_weighted_mean(spark):
-    """ewma over a window is a weighted mean: it must lie within
-    [min, max] of the trailing revenues, and the spike flag must be
-    exactly rev > 2*ewma."""
-    rows = sorted(
-        QUERIES["orders_ewma_daily"](spark, SF_SMOKE).collect(),
-        key=lambda r: r["day"],
-    )
-    # window partners include days with no output row (e.g. the first
-    # day has no trailing window of its own but seeds everyone else's)
-    by_day = dict(
-        duckdb.sql(
-            f"""
-            SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT),
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-            FROM '{SF_SMOKE}/orders.parquet' GROUP BY 1
-            """
-        ).fetchall()
-    )
-    for r in rows:
-        window = [
-            by_day[d]
-            for d in range(r["day"] - 15, r["day"])
-            if d in by_day
-        ]
-        if window:
-            # integer div truncation can land 1 below the true mean
-            assert min(window) - 1 <= r["ewma_cents"] <= max(window)
-        assert r["spike_flag"] == int(r["rev_cents"] > 2 * r["ewma_cents"])
 
 
 def test_quality_hist_partitions_corpus(spark):

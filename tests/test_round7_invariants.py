@@ -297,77 +297,6 @@ def test_stream_holt_in_order_batches_match_single_batch(spark):
     assert got == want
 
 
-def test_holt_batch_no_midseries_restart_on_negative_level(spark, tmp_path):
-    """Regression lock for the negative-level sentinel bug: a steeply
-    DECLINING revenue series drives the Holt forecast (l + b)
-    negative; the recurrence must keep running (forecast goes
-    negative, every day still flagged against it) instead of silently
-    restarting with forecast = -1 mid-series, which is what the
-    original `lvl < 0` init test did."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    # 1000 -> ~0 over 12 days, one order per day, single priority:
-    # level tracks the collapse and trend goes deeply negative, so
-    # l + b < 0 from ~day 6 on.
-    days = list(range(12))
-    pdf = pd.DataFrame(
-        {
-            "o_orderkey": [i + 1 for i in days],
-            "o_custkey": [1] * 12,
-            "o_orderstatus": ["F"] * 12,
-            "o_totalprice": [max(1000.0 - 400.0 * d, 1.0) for d in days],
-            "o_orderdate": pd.to_datetime(
-                [f"1995-01-{d + 1:02d}" for d in days]
-            ),
-            "o_orderpriority": ["1-URGENT"] * 12,
-            "o_clerk": ["c"] * 12,
-            "o_shippriority": [0] * 12,
-            "o_comment": [""] * 12,
-        }
-    )
-    t = pa.Table.from_pandas(pdf, preserve_index=False)
-    # match the generator's physical dtype (timestamp[us]) — ns-unit
-    # timestamps read back as BIGINT under Spark's parquet reader here
-    i = t.schema.get_field_index("o_orderdate")
-    t = t.set_column(
-        i, "o_orderdate", t.column("o_orderdate").cast(pa.timestamp("us"))
-    )
-    pq.write_table(t, str(tmp_path / "orders.parquet"))
-    rows = (
-        QUERIES["orders_holt_linear_trend"](spark, str(tmp_path))
-        .orderBy("day")
-        .collect()
-    )
-    assert len(rows) == 12
-    assert rows[0]["forecast_cents"] == -1  # genuine series start
-    # after the start, -1 must NEVER reappear: the sentinel may not
-    # swallow legitimately-negative forecasts
-    assert all(r["forecast_cents"] != -1 for r in rows[1:])
-    assert any(r["forecast_cents"] < -1 for r in rows), (
-        "fixture failed to drive the forecast negative"
-    )
-    # replay the recurrence locally to pin exact values
-    lvl, trend = None, 0
-    for r in rows:
-        rev = r["rev_cents"]
-        if lvl is None:
-            assert r["forecast_cents"] == -1
-            lvl, trend = rev, 0
-        else:
-            f = lvl + trend
-            assert r["forecast_cents"] == f
-            assert r["spike_flag"] == int(rev > 2 * f)
-            new_l = (f + rev) // 2 if f + rev >= 0 else -((-(f + rev)) // 2)
-            d = (new_l - lvl) + trend
-            trend = d // 2 if d >= 0 else -((-d) // 2)
-            lvl = new_l
-
-
 def test_matryoshka_recall_bounds_and_full_dim_identity(spark):
     """recall@k of the 32-dim prefix is a valid percentage over
     exactly the brute-force query set; and as a structural identity,

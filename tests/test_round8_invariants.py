@@ -102,17 +102,6 @@ def test_priority_sample_plan_is_map_only_takeordered(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_mann_kendall_pairwise_is_bounded_broadcast(spark):
-    """The month-pair join must be the bounded-aggregate pattern: a
-    broadcast nested-loop over the calendar-bounded month frame —
-    never a shuffle join (nothing here is fact-sized after the first
-    aggregate)."""
-    df = QUERIES["orders_mann_kendall_trend"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan, plan[:800]
-    assert "SortMergeJoin" not in plan, plan[:800]
-
-
 def test_boilerplate_spans_shuffles_codes_only(spark):
     """The corpus-scale aggregation must shuffle span CODES, never
     span text: no string-typed span column may appear upstream of the
