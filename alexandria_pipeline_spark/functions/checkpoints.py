@@ -4,15 +4,15 @@ localCheckpoint(eager=True) persists its data through an INTERNAL
 RDD that DataFrame.unpersist() cannot reach (it belongs to the
 checkpoint, not the CacheManager), so iterative loops that checkpoint
 per round must rotate superseded rounds' blocks BY RDD ID or pile up
-one stale snapshot per iteration for the life of the session. These
-two helpers are the shared mechanism (first built for
-graph_kcore_summary, r6 advice; reused by the connected-components
-core, r7 verdict #4).
+one stale snapshot per iteration for the life of the session.
+`local_checkpoint` returns those ids with the checkpointed frame, and
+`unpersist_rdd_ids` frees them: the one rotation every iterative loop
+here uses (PageRank, the k-core peel, connected components).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -29,3 +29,13 @@ def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
     for i in ids:
         if jmap.containsKey(i):
             jmap.get(i).unpersist(False)
+
+
+def local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
+    """Eager localCheckpoint of `df`, with the ids of the RDDs whose
+    blocks it persisted — what the caller frees with unpersist_rdd_ids
+    once the checkpoint is superseded."""
+    spark = df.sparkSession
+    before = persistent_rdd_ids(spark)
+    out = df.localCheckpoint(eager=True)
+    return out, persistent_rdd_ids(spark) - before

@@ -25,7 +25,7 @@ from pyspark.storagelevel import StorageLevel
 
 from alexandria_pipeline_spark.catalog import load_table, spread_to_cores
 from alexandria_pipeline_spark.functions.checkpoints import (
-    persistent_rdd_ids,
+    local_checkpoint,
     unpersist_rdd_ids,
 )
 from alexandria_pipeline_spark.functions.exact import int_div
@@ -889,8 +889,7 @@ def connected_components_from_pairs(
             .agg(F.min("lab").alias("nlab"))
         )
         # eager localCheckpoint = persist + lineage cut in one step
-        before_ids = persistent_rdd_ids(spark)
-        new_labels = (
+        new_labels, new_ids = local_checkpoint(
             labels.join(neighbor_min, labels.node == neighbor_min.node2, "left")
             .select(
                 "node",
@@ -898,9 +897,7 @@ def connected_components_from_pairs(
                     F.col("lab"), F.coalesce(F.col("nlab"), F.col("lab"))
                 ).alias("lab"),
             )
-            .localCheckpoint(eager=True)
         )
-        new_ids = persistent_rdd_ids(spark) - before_ids
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")

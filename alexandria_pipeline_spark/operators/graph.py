@@ -1,20 +1,24 @@
-"""Graph analytics over the star schema: iterative PageRank on the
-part co-purchase graph (parts appearing in the same order are linked).
+"""Graph analytics over the part co-purchase graph (parts appearing in
+the same order are linked).
 
-The interesting part is EXACT cross-engine iteration: PageRank is
-normally float fixpoint, which would diverge bit-wise across engines
-after one aggregation (sum order). Here every rank lives in int64
-micro-units and every division is truncating integer division, so
-three Spark iterations produce bit-identical values to three unrolled
-CTE stages in DuckDB — the same technique functions/exact.py uses for
-money (never round a float quotient).
+One edge relation. Every query reads the graph through
+`_jaccard_edges`: the deduped half-direction (a < b) edge list, served
+from the written-once JSIG relation when it is fresh and computed by
+`_jaccard_edges_inline` otherwise. Directed consumers (PageRank, LPA)
+symmetrise it with `_both_ways`, every degree comes from `_degrees`,
+and every oracle selects from the one DuckDB text `_DUCK_EDGES`.
+Triangle count, resource allocation and local clustering enumerate
+triangles with the two shared enumerators (`_tri_closed_bcast` below
+CLOSURE_BROADCAST_LIMIT raw pairs, `_tri_edge_rows` above it).
 
-Scale notes: the edge list is built once (distinct pairs per order —
-one shuffle), degree is a broadcastable per-node aggregate, and each
-iteration is one shuffle (groupBy dst). Long runs bound their lineage
-via pagerank_ranks' checkpoint rotation (localCheckpoint every K
-iterations, superseded cache unpersisted); dedup_connected_components
-applies the same pattern per-iteration in its convergence loop."""
+Exact cross-engine iteration: PageRank is normally float fixpoint,
+which would diverge bit-wise across engines after one aggregation
+(sum order). Here every rank lives in int64 micro-units and every
+division is truncating integer division, so three Spark iterations
+produce bit-identical values to three unrolled CTE stages in DuckDB —
+the same technique functions/exact.py uses for money. Long runs bound
+their lineage with pagerank_ranks' checkpoint rotation
+(functions/checkpoints.local_checkpoint every K iterations)."""
 
 from __future__ import annotations
 
@@ -28,25 +32,23 @@ from alexandria_pipeline_spark import materialize
 from alexandria_pipeline_spark.catalog import load_table, read_parquet
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.checkpoints import (
-    persistent_rdd_ids,
+    local_checkpoint,
     unpersist_rdd_ids,
 )
 from alexandria_pipeline_spark.registry import (
-    env_flag,
-    env_int,
     query,
     scoped_persist,
+    scoped_release,
 )
 
 PR_ITERS = 3
 DAMP_MICRO = 850_000
 BASE_MICRO = 150_000
 
-# graph_triangle_count broadcasts its (fact-derived) degree table and
-# packed edge set only below this edge count: ~5M edges ≈ 40 MB of
-# packed longs / ≤10M degree rows — comfortably inside a 4 GB executor
-# even with hash-relation overhead. Above it, plain shuffle joins (AQE
-# can still pick broadcast from measured sizes).
+# The sketch gate, in raw pairs (_jaccard_raw_pairs): above it
+# graph_jaccard_neighbors switches to MinHash signatures and the JSIG
+# build also writes the scored relations (escores, rascores, ntri) that
+# the jaccard, RA, triangle and local-clustering queries then read.
 BROADCAST_EDGE_LIMIT = 5_000_000
 
 # Node ids must fit the packed-pair key's 32-bit field. TPC-H partkeys
@@ -70,31 +72,56 @@ def _packed_pair(lo, hi):
     )
 
 
-def _order_part_sets(spark: SparkSession, sf_dir: str):
-    """Per-order distinct part sets — the shared first stage of every
-    co-purchase graph build in this module (each consumer applies its
-    own explode/orientation/dedup on top). collect_set bounds the set
-    size by items-per-order (~7), so the frame is order-cardinality
-    with small arrays — cheaper to recompute from parquet than to
-    cache (see the round-8 nested-type persist note in SCALE.md)."""
+def _pair_key(x, y):
+    """The guarded packed key of an unordered node pair."""
+    return _packed_pair(F.least(x, y), F.greatest(x, y))
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, deg long) of a half-direction (a, b) edge list: each edge
+    counts once at each endpoint."""
     return (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey").alias("ps"))
+        edges.select(F.col("a").alias("node"))
+        .unionAll(edges.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
+
+
+def _both_ways(half: DataFrame) -> DataFrame:
+    """(src, dst): a half-direction (a, b) edge list with both
+    orientations, emitted by one in-row explode (no second scan)."""
+    return half.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+
+
+# DuckDB twin of _jaccard_edges, _both_ways and _degrees: the CTEs every
+# graph oracle selects from. `e` is the distinct a < b pair list,
+# `edges` its directed form (the union with the swap, already distinct)
+# and `deg` each node's degree.
+_DUCK_EDGES = """
+    e AS (
+      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
+      FROM lineitem a JOIN lineitem b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    ),
+    edges AS (SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e),
+    deg AS (
+      SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+      FROM edges GROUP BY src
+    )"""
 
 
 def _duck_pagerank_sql() -> str:
     ctes = [
-        "op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """edges AS (
-          SELECT a.l_partkey AS src, b.l_partkey AS dst
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-          GROUP BY 1, 2
-        )""",
-        "deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src)",
-        "r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS r FROM deg)",
+        _DUCK_EDGES,
+        "r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM deg)",
     ]
     prev = "r0"
     for i in range(1, PR_ITERS + 1):
@@ -103,7 +130,7 @@ def _duck_pagerank_sql() -> str:
               SELECT e.dst AS node, sum({prev}.r // d.deg) AS s
               FROM edges e
               JOIN {prev} ON e.src = {prev}.node
-              JOIN deg d ON d.src = e.src
+              JOIN deg d ON d.node = e.src
               GROUP BY e.dst
             )"""
         )
@@ -125,16 +152,16 @@ def pagerank_ranks(
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """Damped integer-unit PageRank core. Every `checkpoint_every`
-    iterations the rank frame is eagerly localCheckpointed: lineage
+    iterations the rank frame is eagerly localCheckpointed, so lineage
     depth stays bounded by the interval instead of growing with the
-    iteration count, and the superseded checkpoint is unpersisted —
-    the persist-rotation every long iterative Spark job needs. Short
-    loops (the 3-iteration registered query) never hit the interval,
-    so the registered plan stays fully lazy."""
+    iteration count. The superseded checkpoint's blocks are freed by
+    RDD id (functions/checkpoints.py) and the last one's at the next
+    registry release. Short loops (the 3-iteration registered query)
+    never hit the interval, so the registered plan stays fully lazy."""
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(1_000_000).cast("long").alias("r")
     )
-    prev_ckpt = None
+    ckpt_ids: set[int] = set()
     for i in range(1, iters + 1):
         contrib = (
             edges_deg.join(ranks, edges_deg.src == ranks.node)
@@ -149,32 +176,27 @@ def pagerank_ranks(
             ).cast("long").alias("r"),
         )
         if i % checkpoint_every == 0 and i < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            prev_ckpt = ranks
+            ranks, new_ids = local_checkpoint(ranks)
+            unpersist_rdd_ids(ranks.sparkSession, ckpt_ids)
+            ckpt_ids = new_ids
+    if ckpt_ids:
+        spark = ranks.sparkSession
+        scoped_release(lambda ids=frozenset(ckpt_ids): unpersist_rdd_ids(spark, set(ids)))
     return ranks
 
 
 @query("graph_pagerank_copurchase", oracle=_duck_pagerank_sql())
 def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration damped PageRank (d=0.85) over the undirected part
-    co-purchase graph, all arithmetic in int64 micro-units. Every
-    node has degree >= 1 by construction (nodes ARE edge endpoints),
-    so there is no dangling mass and each iteration covers every
-    node."""
-    # same collect_set + double-explode edge build as
-    # graph_triangle_count (directed: keep both orientations)
-    sets = _order_part_sets(spark, sf_dir)
-    edges = (
-        sets.select(F.explode("ps").alias("src"), "ps")
-        .select("src", F.explode("ps").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
+    co-purchase graph (_jaccard_edges, symmetrised), all arithmetic in
+    int64 micro-units. Every node has degree >= 1 by construction
+    (nodes ARE edge endpoints), so there is no dangling mass and each
+    iteration covers every node."""
+    half = _jaccard_edges(spark, sf_dir)
+    deg = _degrees(half).select(F.col("node").alias("src"), "deg")
+    edges_deg = scoped_persist(
+        _both_ways(half).join(deg, "src"), StorageLevel.MEMORY_AND_DISK
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = scoped_persist(edges.join(deg, "src"), StorageLevel.MEMORY_AND_DISK)
     ranks = pagerank_ranks(edges_deg, deg, PR_ITERS)
     return ranks.select(F.col("node").alias("part_id"), F.col("r").alias("rank_micro"))
 
@@ -182,13 +204,8 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "graph_triangle_count",
-    oracle="""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    oracle=f"""
+    WITH {_DUCK_EDGES},
     tri AS (
       SELECT count(*) AS n
       FROM e e1
@@ -201,161 +218,41 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting on the part co-purchase graph with the
-    DEGREE-ORIENTED wedge join (Cohen '09 / Suri-Vassilvitskii '11):
-    orient every undirected edge from its lower-degree endpoint
-    (ties by id), enumerate wedges by joining oriented edges on their
-    shared source, and close each wedge against the canonical edge
-    set. Orientation bounds every node's out-degree by O(√m), so the
-    wedge join — the step that explodes on hub nodes in the naive
-    algorithm — generates O(m^{3/2}) candidates worst-case instead of
-    Σdeg², and the skewed-hub hazard disappears by construction (AQE
-    handles the residue). The degree-table and edge-set broadcasts are
-    SIZE-GATED by a plan-time count of the persisted edge frame
-    (BROADCAST_EDGE_LIMIT): both frames grow with the fact data, so an
-    unconditional hint would OOM at scale; above the cap the closure
-    switches to the EDGE-ITERATOR form (adjacency-array intersect per
-    oriented edge — see the inline note), which replaced the shuffled
-    wedge join's 56×-for-30× superlinear constant with a measured 2×
-    win at sf3. The oracle counts the same triangles with the simple
-    a<b<c three-way join, so the oriented rewrite must be
-    count-invisible.
+    """Edge and triangle counts of the part co-purchase graph. The
+    triangles come from the shared degree-oriented enumerators: below
+    CLOSURE_BROADCAST_LIMIT each triangle is one row of
+    _tri_closed_bcast (wedges probe the broadcast packed edge set), above
+    it the sum of size(zs) over _tri_edge_rows (adjacency arrays
+    intersected per oriented edge). Orientation from the lower-(deg, id)
+    endpoint bounds every out-degree by O(sqrt(m)), so hub nodes never
+    explode the wedge stream, and each triangle surfaces exactly once.
+    The oracle counts the same triangles with the simple a<b<c
+    three-way join.
 
-    Since r12 a served JSIG materialization (the escores precedent —
-    _build_jsig) reduces the read to two tiny scans: n_edges is a
-    count of the 2-column edge parquet, n_triangles is sum(n_tri) div
-    3 over the per-node `ntri` relation (each triangle credits its
-    three corners once, so the sum is exactly 3·T). Values identical
-    to inline — ntri is built by the same degree-oriented
-    edge-iterator this query's above-gate branch runs; otherwise the
-    query runs inline."""
+    With a served JSIG relation above BROADCAST_EDGE_LIMIT the count is
+    sum(n_tri) div 3 over the written `ntri` relation (each triangle
+    credits its three corners once), built by the same edge-iterator."""
     jsig = materialize.serve(JSIG, sf_dir)
+    edges = _jaccard_edges(spark, sf_dir)
     if jsig is not None and "K" in jsig:
-        loc = jsig["loc"]
-        n_edges = read_parquet(spark, os.path.join(loc, "edges")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_edges")
-        )
-        tris = read_parquet(spark, os.path.join(loc, "ntri")).agg(
+        tris = read_parquet(spark, os.path.join(jsig["loc"], "ntri")).agg(
             F.coalesce(F.expr("CAST(sum(n_tri) div 3 AS BIGINT)"), F.lit(0))
-            .cast("long")
             .alias("n_triangles")
         )
-        return n_edges.join(tris).select("n_edges", "n_triangles")
-    # Edge build via collect_set + double explode, NOT a distinct
-    # self-join on l_orderkey: collect_set dedupes order-part rows and
-    # groups in ONE partial-aggregated shuffle, the pair expansion is
-    # map-side row generation over per-order sets (bounded by items
-    # per order, ~7 in TPC-H — never a hub hazard), and only the final
-    # (a, b) distinct shuffles again. The join form cost two extra
-    # exchanges re-partitioning both distinct sides onto the order key
-    # (measured 3.7s -> 2.3s for the edge list at sf0.1). Since r12
-    # the dedup runs on the packed 8-byte key (_jaccard_edges —
-    # identical frame, ~half the distinct-exchange bytes).
-    edges = scoped_persist(
-        _jaccard_edges(spark, sf_dir), StorageLevel.MEMORY_AND_DISK
-    )
-    # Plan-time size gate: the edge set and the degree table are both
-    # FACT-DERIVED (the part universe grows with the corpus), so an
-    # unconditional F.broadcast — which Spark obeys regardless of size
-    # — is an executor OOM at 100×, not a graceful fallback. One count
-    # on the persisted edge frame (the materialization is reused by
-    # every downstream stage) sizes both gates; above the cap the plan
-    # falls back to shuffle joins, which AQE may still convert to
-    # broadcast from actual runtime sizes.
-    n_edges_val = edges.count()
-    deg = scoped_persist(
-        edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg")),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    if n_edges_val <= BROADCAST_EDGE_LIMIT:
-        # nodes <= 2*edges, so the edge gate also bounds the degree
-        # table; broadcasting makes orientation map-only (no edge
-        # shuffle) and the closure probe a broadcast-hash build of
-        # packed 8-byte keys.
-        da, db = F.broadcast(da), F.broadcast(db)
-    with_deg = edges.join(da, "a").join(db, "b")
-    fwd = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = with_deg.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    )
-    # Wedge generation WITHOUT a self-join: group the oriented edges
-    # into per-source adjacency sets (one shuffle — the same exchange
-    # the old wedge join needed anyway) and emit the v < w pairs by a
-    # double explode WITHIN each array — map-side row generation, the
-    # same trick the edge build uses on per-order item sets. Degree
-    # orientation bounds every array at O(sqrt(m)) elements, so the
-    # per-row pair expansion is bounded and hub-proof; dropping the
-    # self-join removed a second full exchange of the oriented edges
-    # and measured 5.7s -> 3.9s at sf0.1. Each triangle still closes
-    # exactly one wedge (the one whose apex is the triangle's minimum
-    # in the (deg, id) total order), so the INNER join count below is
-    # the triangle count.
-    adj = oriented.groupBy("src").agg(F.collect_set("dst").alias("ns"))
-    if n_edges_val <= BROADCAST_EDGE_LIMIT:
-        # BELOW the gate: wedge-explode + broadcast closure probe.
-        # pack the canonical pair into ONE guarded long key
-        # (_packed_pair — ids >= 2^32 raise instead of aliasing) so
-        # the 41M-wedge closing probe carries 8-byte keys, not
-        # pairs. |E| packed longs (~10 MB/M edges) broadcast keeps the
-        # wedge side map-side and the count's partial aggregation
-        # collapses it before any exchange — measured fastest at
-        # bench scale (2.2s vs 5.2s for the edge-iterator at sf0.1).
-        wedges = (
-            adj.select(F.explode("ns").alias("v"), "ns")
-            .select("v", F.explode("ns").alias("w"))
-            .filter(F.col("v") < F.col("w"))
-            .select(_packed_pair(F.col("v"), F.col("w")).alias("pk"))
-        )
-        eset = F.broadcast(
-            edges.select(_packed_pair(F.col("a"), F.col("b")).alias("pk"))
-        )
-        closed = wedges.join(eset, "pk")
-        tris = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     else:
-        # ABOVE the gate (r5 verdict #1): the closure edge set no
-        # longer broadcasts, and shuffling O(Σ outdeg²) individual
-        # wedge ROWS through a join measured 56× wall for 30× data
-        # (125s at sf3). The EDGE-ITERATOR form ships the same
-        # O(Σ outdeg²) longs but packed inside per-node adjacency
-        # ARRAYS (one row per oriented edge, not per wedge) and closes
-        # with a codegen array_intersect per edge instead of a
-        # billion-row hash join: Σ|adjOut(u) ∩ adjOut(v)| over oriented
-        # edges counts each triangle exactly once (the apex edge —
-        # same argument as the wedge form). Measured 63s at sf3 (2×)
-        # with identical counts; scaling is linear in wedge volume.
-        # (A k=2-core pre-peel was considered and is a structural
-        # no-op here: co-purchase graphs are unions of per-order
-        # cliques, so every edge endpoint has degree >= 1 clique-mate
-        # and nothing peels.)
-        e_u = adj.select(
-            F.col("src").alias("u"),
-            F.col("ns").alias("ns_u"),
-            F.explode("ns").alias("v"),
-        )
-        adj_v = adj.select(F.col("src").alias("v"), F.col("ns").alias("ns_v"))
-        tris = (
-            e_u.join(adj_v, "v")
-            .agg(
-                F.coalesce(
-                    F.sum(F.size(F.array_intersect("ns_u", "ns_v"))), F.lit(0)
-                )
-                .cast("long")
-                .alias("n_triangles")
+        edges = scoped_persist(edges, StorageLevel.MEMORY_AND_DISK)
+        if _closure_fits(spark, sf_dir, jsig):
+            tris = _tri_closed_bcast(edges).agg(
+                F.count(F.lit(1)).alias("n_triangles")
             )
-        )
+        else:
+            tris = _tri_edge_rows(edges).agg(
+                F.coalesce(F.sum(F.size("zs")), F.lit(0)).alias("n_triangles")
+            )
     n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
-    # both aggregates are single rows; the cross join stays lazy (no
-    # driver-side count at plan-build time)
+    # both aggregates are single rows; the cross join stays lazy
     return n_edges.join(tris).select(
-        F.col("n_edges").cast("long"), F.col("n_triangles")
+        F.col("n_edges").cast("long"), F.col("n_triangles").cast("long")
     )
 
 
@@ -417,8 +314,7 @@ def _tri_closed_bcast(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
     the BELOW-GATE twin of _tri_edge_rows' zs stream (r12 optimization
     round): identical degree orientation and triangle multiset (each
     triangle surfaces exactly once, at the edge whose source is its
-    minimum vertex in the (deg, id) total order), but the closure runs
-    as the graph_triangle_count below-gate form — wedges explode
+    minimum vertex in the (deg, id) total order), but wedges explode
     MAP-SIDE from per-source adjacency arrays and probe the BROADCAST
     packed canonical edge set — instead of shuffling adjacency arrays
     into a self-join. Below the gate that swap removes the plan's only
@@ -426,9 +322,8 @@ def _tri_closed_bcast(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
     O(m^1.5)-element wedge volume as shuffled array bytes; measured
     sf0.1: graph_local_clustering 9.2 s → 5.3 s bench wall) while the
     wedge stream itself stays rows-in-a-stage, never materialized.
-    Callers gate on RA_ADJ_BROADCAST_LIMIT: |E| packed longs + a
-    (node, deg) row pair per node broadcast — the same size class the
-    RA adjacency broadcast was sized for, and strictly smaller rows.
+    Callers gate on CLOSURE_BROADCAST_LIMIT (_closure_fits): |E| packed
+    longs and a (node, deg) row per node are broadcast.
 
     `deg` (optional): a precomputed (node, deg) frame — callers that
     need degrees for their own read-out (local clustering) pass their
@@ -441,12 +336,7 @@ def _tri_closed_bcast(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
     friendly, no nested types (the r8 never-persist-arrays lesson does
     not apply)."""
     if deg is None:
-        deg = scoped_persist(
-            edges.select(F.col("a").alias("node"))
-            .unionAll(edges.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        )
+        deg = scoped_persist(_degrees(edges))
     da = F.broadcast(
         deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
     )
@@ -460,18 +350,20 @@ def _tri_closed_bcast(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
         F.least(pa, pb).alias("src"), F.greatest(pa, pb).alias("dst")
     )
     adj = oriented.groupBy("src").agg(F.collect_set("dst").alias("ns"))
+    # each unordered pair of u's out-neighbors once, v before w by id,
+    # so the closure key is the canonical pair with no reordering
     lo32 = F.lit(_LO32)
+    vi, wi = F.col("v").bitwiseAND(lo32), F.col("w").bitwiseAND(lo32)
     wedges = (
         adj.select(F.col("src").alias("u"), F.explode("ns").alias("v"), "ns")
         .select("u", "v", F.explode("ns").alias("w"))
-        .filter(F.col("v") < F.col("w"))
+        .filter(vi < wi)
     )
-    vi, wi = F.col("v").bitwiseAND(lo32), F.col("w").bitwiseAND(lo32)
     eset = F.broadcast(
         edges.select(_packed_pair(F.col("a"), F.col("b")).alias("pk"))
     )
     return (
-        wedges.withColumn("pk", _packed_pair(F.least(vi, wi), F.greatest(vi, wi)))
+        wedges.withColumn("pk", _packed_pair(vi, wi))
         .join(eset, "pk")
         .select("u", "v", "w")
     )
@@ -482,8 +374,8 @@ def _tri_edge_rows(edges: DataFrame, broadcast_deg: bool = False) -> DataFrame:
     (u, v, zs), all packed (deg<<32|id) longs (_pack_deg_node —
     primitive arrays keep array_intersect on the fast path AND the
     pack embeds each endpoint's degree, so no join ever touches the
-    candidate stream) — the degree-oriented edge-iterator (the
-    graph_triangle_count above-gate form): orient each edge from its
+    candidate stream) — the degree-oriented edge-iterator, the
+    above-gate triangle enumerator: orient each edge from its
     lower-(deg, id) endpoint (= packed-long order), build per-source
     adjacency arrays, and intersect adjOut(u) with adjOut(v) INSIDE
     the join row. zs holds the triangles closed by this apex edge —
@@ -496,14 +388,9 @@ def _tri_edge_rows(edges: DataFrame, broadcast_deg: bool = False) -> DataFrame:
     groupBys — 3x the subtree, 3T contribution rows of ~24 B against
     a 50M-key aggregate whose map-side combine couldn't collapse them,
     ~70 GB of shuffle at sf10). Shared by the rascores/ntri build
-    outputs, the above-gate resource-allocation plan, and local
-    clustering."""
-    deg = (
-        edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    outputs and the above-gate triangle, resource-allocation and local
+    clustering plans."""
+    deg = _degrees(edges)
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
     if broadcast_deg:
@@ -592,12 +479,9 @@ def _ra_from_edge_rows(rows: DataFrame) -> DataFrame:
     du = F.shiftrightunsigned(F.col("u"), 32)
     dv = F.shiftrightunsigned(F.col("v"), 32)
 
-    def pairk(x, y):
-        return _packed_pair(F.least(x, y), F.greatest(x, y))
-
     one = F.lit(1).cast("long")
     apex = F.struct(
-        pairk(ui, vi).alias("k"),
+        _pair_key(ui, vi).alias("k"),
         F.size("zs").cast("long").alias("n"),
         F.aggregate(
             "zs",
@@ -611,12 +495,12 @@ def _ra_from_edge_rows(rows: DataFrame) -> DataFrame:
             "zs",
             lambda z: F.array(
                 F.struct(
-                    pairk(z.bitwiseAND(lo32), ui).alias("k"),
+                    _pair_key(z.bitwiseAND(lo32), ui).alias("k"),
                     one.alias("n"),
                     int_div(F.lit(1_000_000), dv).alias("w"),
                 ),
                 F.struct(
-                    pairk(z.bitwiseAND(lo32), vi).alias("k"),
+                    _pair_key(z.bitwiseAND(lo32), vi).alias("k"),
                     one.alias("n"),
                     int_div(F.lit(1_000_000), du).alias("w"),
                 ),
@@ -639,11 +523,73 @@ def _ra_from_edge_rows(rows: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard_raw_pairs(spark: SparkSession, sf_dir: str) -> int:
-    """The sketch-path gate operand: sum c·(c-1)/2 over per-order ROW
-    counts — a conservative upper bound on distinct edges AND on the
-    explode volume the array build would ingest (see the gate note in
-    graph_jaccard_neighbors). One single-column counted groupBy."""
+def _ra_from_closed(closed: DataFrame) -> DataFrame:
+    """Resource-allocation scores from the _tri_closed_bcast triangle
+    rows (u, v, w): RA only scores CLOSED wedges, so each triangle emits
+    its three pair terms — pair (u,v) gains 1e6 div deg(w), (u,w) gains
+    1e6 div deg(v), (v,w) gains 1e6 div deg(u). Every (edge,
+    common-neighbor) combination appears exactly once because the
+    stream enumerates each triangle exactly once, and each term
+    truncates identically to the oracle's 1000000 // deg. The final
+    groupBy moves 3T contribution rows, collapsed map-side onto
+    ≤ |E'| distinct pair keys."""
+    lo32 = F.lit(_LO32)
+    ui, vi, wi = (
+        F.col("u").bitwiseAND(lo32),
+        F.col("v").bitwiseAND(lo32),
+        F.col("w").bitwiseAND(lo32),
+    )
+    du = F.shiftrightunsigned(F.col("u"), 32)
+    dv = F.shiftrightunsigned(F.col("v"), 32)
+    dw = F.shiftrightunsigned(F.col("w"), 32)
+
+    one = F.lit(1).cast("long")
+    contribs = closed.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    _pair_key(ui, vi).alias("k"),
+                    one.alias("n"),
+                    int_div(F.lit(1_000_000), dw).alias("t"),
+                ),
+                F.struct(
+                    _pair_key(ui, wi).alias("k"),
+                    one.alias("n"),
+                    int_div(F.lit(1_000_000), dv).alias("t"),
+                ),
+                F.struct(
+                    _pair_key(vi, wi).alias("k"),
+                    one.alias("n"),
+                    int_div(F.lit(1_000_000), du).alias("t"),
+                ),
+            )
+        ).alias("c")
+    )
+    return (
+        contribs.groupBy(F.col("c.k").alias("k"))
+        .agg(
+            F.sum("c.n").cast("long").alias("n_common"),
+            F.sum("c.t").cast("long").alias("ra_e6"),
+        )
+        .select(
+            F.shiftrightunsigned(F.col("k"), 32).alias("a"),
+            F.col("k").bitwiseAND(lo32).alias("b"),
+            "n_common",
+            "ra_e6",
+        )
+    )
+
+
+def _jaccard_raw_pairs(
+    spark: SparkSession, sf_dir: str, jsig: dict | None = None
+) -> int:
+    """The graph gates' operand: sum c·(c-1)/2 over per-order ROW counts
+    — a conservative upper bound on distinct edges AND on the explode
+    volume the array build would ingest (see the gate note in
+    graph_jaccard_neighbors). Read from the served JSIG meta `jsig` when
+    given, else one single-column counted groupBy."""
+    if jsig is not None:
+        return jsig["raw_pairs"]
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -652,6 +598,24 @@ def _jaccard_raw_pairs(spark: SparkSession, sf_dir: str) -> int:
         .first()[0]
         or 0
     ) // 2
+
+
+# The one closure gate of the triangle count, resource allocation and
+# local clustering, in raw pairs. At or below it they enumerate
+# triangles with _tri_closed_bcast, which broadcasts the (node, deg)
+# table and the packed edge set (one long per edge), so no wedge or
+# adjacency array ever shuffles; above it with _tri_edge_rows, which
+# broadcasts nothing. 1.5M raw pairs bounds that broadcast at ~1.5M
+# longs plus ~3M (node, deg) rows. Every committed scale sits on one
+# side of it: sf0.1 has 1.2M raw pairs, .stress/sf1 12M. Still to
+# measure (ROADMAP item 4): between 1.5M and 5M raw pairs the triangle
+# count takes the iterator, where its old edge-count gate broadcast up
+# to 5M distinct edges.
+CLOSURE_BROADCAST_LIMIT = 1_500_000
+
+
+def _closure_fits(spark: SparkSession, sf_dir: str, jsig: dict | None) -> bool:
+    return _jaccard_raw_pairs(spark, sf_dir, jsig) <= CLOSURE_BROADCAST_LIMIT
 
 
 def _jaccard_K(raw_pairs: int) -> int:
@@ -664,8 +628,9 @@ def _jaccard_K(raw_pairs: int) -> int:
 
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduped half-direction (a < b) co-purchase edge list — the ONE
-    shared frame every graph-family query builds on (triangle, RA,
-    LCC, kcore, assortativity, LPA/modularity). Read from the JSIG
+    way every graph query gets the graph (PageRank, triangle, jaccard,
+    RA, LCC, degree distribution, k-core, assortativity,
+    LPA/modularity). Read from the JSIG
     materialization when it is served (the build writes the edge
     parquet at ANY gate: at every scale the collect_set + packed-distinct
     build over lineitem was re-run per consumer, ~7x per bench pass,
@@ -694,8 +659,14 @@ def _jaccard_edges_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     has carried since the r11 ADVICE fix (the triangle/RA/rascores
     machinery packs ids in every branch); a corpus whose keys exceed
     2^32 needs the two-column fallback noted there, not a silent
-    alias."""
-    sets = _order_part_sets(spark, sf_dir)
+    alias. collect_set dedupes the order-part rows per order in one
+    partial-aggregated shuffle; the pair expansion is map-side row
+    generation over sets bounded by items per order (~7 in TPC-H)."""
+    sets = (
+        load_table(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.collect_set("l_partkey").alias("ps"))
+    )
     packed = (
         sets.select(F.explode("ps").alias("node"), "ps")
         .select("node", F.explode("ps").alias("nb"))
@@ -876,22 +847,12 @@ jaccard_sig_location = functools.partial(materialize.location, JSIG)
 @query(
     "graph_jaccard_neighbors",
     oracle=f"""
-    WITH e AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (
-      SELECT a AS node, b AS nb FROM e
-      UNION ALL
-      SELECT b AS node, a AS nb FROM e
-    ),
-    deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY node),
+    WITH {_DUCK_EDGES},
     common AS (
       SELECT e.a, e.b, CAST(count(*) AS BIGINT) AS c
       FROM e
-      JOIN adj n1 ON n1.node = e.a
-      JOIN adj n2 ON n2.node = e.b AND n2.nb = n1.nb
+      JOIN edges n1 ON n1.src = e.a
+      JOIN edges n2 ON n2.src = e.b AND n2.dst = n1.dst
       GROUP BY e.a, e.b
     )
     SELECT a, b, c AS n_common,
@@ -912,16 +873,12 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     never Σdeg²: each edge row joins its two adjacency arrays and the
     intersection runs INSIDE the row (array_intersect, codegen), so
     the per-row cost is deg(a)+deg(b) and nothing quadratic ever
-    materializes as rows. The adjacency sets are built FIRST (one
-    groupBy whose collect_set both dedupes parallel edges and
-    aggregates — no separate DISTINCT exchange), and the a-side edge
-    list with its neighbor array attached falls out of the adjacency
-    frame by a map-side explode, so only the b-side array needs a
-    join — broadcast under the plan-time size gate (fact-derived
-    frames are never unconditionally broadcast). Net: one
-    fact-sized exchange + one gated join, two fewer exchanges than
-    the edges-then-adjacency formulation (measured 2.7s -> 1.3s warm
-    at sf0.1). Top-20 survives via TakeOrdered with an (a, b)
+    materializes as rows. The adjacency sets come from ONE groupBy
+    over the symmetrised shared edge list, and the a-side edge list
+    with its neighbor array attached falls out of the adjacency frame
+    by a map-side explode, so only the b-side array needs a join —
+    broadcast under the plan-time size gate (fact-derived frames are
+    never unconditionally broadcast). Top-20 survives via TakeOrdered with an (a, b)
     tiebreaker. The oracle recomputes common-neighbor counts with the
     naive wedge GROUP BY.
 
@@ -986,39 +943,14 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the sketch path is the safe side of the gate. "Exact path
     # unchanged below the gate" refers to the exact plan itself; the
     # gate's operand moved from distinct to raw volume in r8.
-    raw_pairs = (
-        jsig["raw_pairs"] if jsig is not None else _jaccard_raw_pairs(spark, sf_dir)
-    )
+    raw_pairs = _jaccard_raw_pairs(spark, sf_dir, jsig)
     if raw_pairs <= BROADCAST_EDGE_LIMIT:
-        if jsig is not None and jsig.get("edges"):
-            # r12 session 2: neighbor sets from the written-once edge
-            # parquet — identical sets (collect_set dedups the inline
-            # pair stream; the materialized edges are already
-            # distinct), one groupBy instead of the lineitem scan +
-            # per-order sets + quadratic pair explode.
-            half = _jaccard_edges(spark, sf_dir)
-            pairs = half.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a").alias("node"), F.col("b").alias("nb")
-                        ),
-                        F.struct(
-                            F.col("b").alias("node"), F.col("a").alias("nb")
-                        ),
-                    )
-                ).alias("e")
-            ).select("e.node", "e.nb")
-        else:
-            sets = _order_part_sets(spark, sf_dir)
-            pairs = (
-                sets.select(F.explode("ps").alias("node"), "ps")
-                .select("node", F.explode("ps").alias("nb"))
-                .filter(F.col("node") != F.col("nb"))
-            )
+        # Neighbor sets from the symmetrised edge list: one groupBy
+        # whose collect_set is exact (the edges are already distinct).
         adj = scoped_persist(
-            pairs.groupBy("node")
-            .agg(F.collect_set("nb").alias("ns")),
+            _both_ways(_jaccard_edges(spark, sf_dir))
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.collect_set("dst").alias("ns")),
             StorageLevel.MEMORY_AND_DISK,
         )
         # EXACT path. The a-side neighbor array rides along for free:
@@ -1130,51 +1062,17 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RA_TOP_N = 20
-# graph_resource_allocation broadcasts its adjacency relation (2 rows
-# per edge) plus the packed edge set and degree table only below this
-# raw-pair bound — tighter than BROADCAST_EDGE_LIMIT because the
-# adjacency broadcast is row-formatted (node, nb) pairs, not one
-# packed long per edge: measured 239 MB of total BroadcastExchange
-# dataSize at 1.2M edges (SHUFFLE_AUDIT_r11), so the 5M-edge gate
-# would imply ~1 GB — too much for a 4 GB executor with hash-relation
-# overhead. 1.5M raw pairs caps the adjacency at ~3M rows ≈ 300 MB
-# (the LPA_LABEL_BROADCAST_LIMIT sizing discipline). Above it the plan
-# switches to the degree-oriented triangle edge-iterator
-# (_tri_edge_rows + _ra_from_edge_rows — r12, replacing the r11
-# all-broadcasts-become-shuffle-joins fallback that re-materialized
-# every wedge candidate and scaled 25x for 10x data).
-RA_ADJ_BROADCAST_LIMIT = 1_500_000
-
-
-def _ra_adj_limit() -> int:
-    """Measurement seam (r13, verdict #5 — the above-gate A/B):
-    SPARK_GRAFT_RA_ADJ_LIMIT overrides the broadcast-form gate so the
-    stress harness can force the _tri_closed_bcast plan at a scale
-    that normally routes _tri_edge_rows (and oracle-verify the forced
-    path). A plan selector only — both sides of the gate compute
-    identical values, pinned by the forced-path identity tests."""
-    return env_int("SPARK_GRAFT_RA_ADJ_LIMIT", RA_ADJ_BROADCAST_LIMIT)
 
 
 @query(
     "graph_resource_allocation",
     oracle=f"""
-    WITH e AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (
-      SELECT a AS node, b AS nb FROM e
-      UNION ALL
-      SELECT b AS node, a AS nb FROM e
-    ),
-    deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY node),
+    WITH {_DUCK_EDGES},
     common AS (
-      SELECT e.a, e.b, n1.nb AS z
+      SELECT e.a, e.b, n1.dst AS z
       FROM e
-      JOIN adj n1 ON n1.node = e.a
-      JOIN adj n2 ON n2.node = e.b AND n2.nb = n1.nb
+      JOIN edges n1 ON n1.src = e.a
+      JOIN edges n2 ON n2.src = e.b AND n2.dst = n1.dst
     )
     SELECT c.a, c.b,
            CAST(count(*) AS BIGINT) AS n_common,
@@ -1200,28 +1098,20 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge GROUP BY): wedges are enumerated from each edge's
     LOWER-DEGREE endpoint only — candidates Σ min(deg(a), deg(b)) =
     O(m^1.5) (Chiba–Nishizeki), hub-skew-proof where the naive
-    Σ deg(a) is quadratic in hub degree. Below RA_ADJ_BROADCAST_LIMIT
-    (sized for the row-formatted adjacency broadcast — see the
-    constant's note) the degree table, the adjacency relation, and the
+    Σ deg(a) is quadratic in hub degree. Below CLOSURE_BROADCAST_LIMIT
+    the triangles come from _tri_closed_bcast: the degree table and the
     PACKED canonical edge set (guarded least<<32 | greatest, one long
-    per edge — the triangle-count trick) are broadcast, so the wedge
-    stream never materializes: orientation, wedge explode, closure probe, deg(z)
-    attach, and the partial (a, b) sum all pipeline in ONE stage, and
-    the only exchange carries edge-bounded partial aggregates
-    (measured at sf0.1: 17.7 s shuffle-closure → 3.4 s; the 131 M
-    wedge candidates never hit a shuffle).
+    per edge) are broadcast, so the wedge stream never shuffles and
+    the only exchange carries edge-bounded partial aggregates.
 
     ABOVE the gate (r12, replacing the r11 shuffle-equi-join fallback
     that re-materialized every wedge candidate — the suite's worst
     scaler, sf1 250.4 s): RA only scores CLOSED wedges — triangles —
-    so the degree-oriented edge-iterator (_tri_edge_rows, the
-    graph_triangle_count above-gate form) enumerates each triangle
+    so the degree-oriented edge-iterator (_tri_edge_rows) enumerates each triangle
     exactly once with all three degrees packed into the ids, and
     _ra_from_edge_rows folds the apex pair's whole score in-row and
     explodes only the 2T side terms under packed 8-byte pair keys into
     ONE groupBy. No wedge row ever shuffles; candidates are O(m^1.5).
-    SPARK_GRAFT_RA_FORCE_ITER=1 forces this plan below the gate
-    (parity tests / A-B).
 
     Since r12 the build job also materializes `rascores` — the full
     exact scored relation, a deterministic function of the digest-keyed
@@ -1235,97 +1125,15 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     jsig = materialize.serve(JSIG, sf_dir)
     if jsig is not None and "K" in jsig:
         scored = read_parquet(spark, os.path.join(jsig["loc"], "rascores"))
-        return (
-            scored.orderBy(F.desc("ra_e6"), F.asc("a"), F.asc("b"))
-            .limit(RA_TOP_N)
+    else:
+        edges = scoped_persist(
+            _jaccard_edges(spark, sf_dir), StorageLevel.MEMORY_AND_DISK
         )
-    raw_pairs = (
-        jsig["raw_pairs"] if jsig is not None else _jaccard_raw_pairs(spark, sf_dir)
-    )
-    edges = scoped_persist(
-        _jaccard_edges(spark, sf_dir), StorageLevel.MEMORY_AND_DISK
-    )
-    small = raw_pairs <= _ra_adj_limit() and not env_flag(
-        "SPARK_GRAFT_RA_FORCE_ITER"
-    )
-    if not small:
-        scored = _ra_from_edge_rows(_tri_edge_rows(edges))
-        return (
-            scored.orderBy(F.desc("ra_e6"), F.asc("a"), F.asc("b"))
-            .limit(RA_TOP_N)
-        )
-    # r12 optimization-round rewrite of the below-gate plan: RA only
-    # scores CLOSED wedges, so enumerate TRIANGLES (the oriented
-    # broadcast-closure stream, O(m^1.5) candidates — _tri_closed_bcast)
-    # and emit the three pair-terms per triangle, instead of the r11
-    # per-edge wedge explode (Σ_e min(deg) candidates — measured 131 M
-    # rows at sf0.1 vs the oriented form's ~41 M) probed through a
-    # 239 MB row-formatted adjacency broadcast (SHUFFLE_AUDIT_r11's
-    # largest broadcast, retired by this change; the new plan
-    # broadcasts only the (node, deg) pair tables and the |E| packed
-    # longs). For triangle (u, v, w): pair (u,v) gains 1e6 div deg(w),
-    # (u,w) gains 1e6 div deg(v), (v,w) gains 1e6 div deg(u) — every
-    # (edge, common-neighbor) combination appears exactly once because
-    # the stream enumerates each triangle exactly once, and each term
-    # truncates identically to the oracle's 1000000 // deg, so the
-    # grouped sums are value-identical to the r11 plan (oracle hash
-    # unchanged; measured sf0.1 bench wall 5.4 s → 3.9 s). The final
-    # groupBy moves 3T contribution rows collapsed map-side onto
-    # ≤ |E'| distinct pair keys — the Ω(T) cross-row floor SCALE.md
-    # documents, with a smaller constant than the wedge form.
-    closed = _tri_closed_bcast(edges)
-    lo32 = F.lit(_LO32)
-    ui, vi, wi = (
-        F.col("u").bitwiseAND(lo32),
-        F.col("v").bitwiseAND(lo32),
-        F.col("w").bitwiseAND(lo32),
-    )
-    du = F.shiftrightunsigned(F.col("u"), 32)
-    dv = F.shiftrightunsigned(F.col("v"), 32)
-    dw = F.shiftrightunsigned(F.col("w"), 32)
-
-    def pairk(x, y):
-        return _packed_pair(F.least(x, y), F.greatest(x, y))
-
-    one = F.lit(1).cast("long")
-    contribs = closed.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    pairk(ui, vi).alias("k"),
-                    one.alias("n"),
-                    int_div(F.lit(1_000_000), dw).alias("t"),
-                ),
-                F.struct(
-                    pairk(ui, wi).alias("k"),
-                    one.alias("n"),
-                    int_div(F.lit(1_000_000), dv).alias("t"),
-                ),
-                F.struct(
-                    pairk(vi, wi).alias("k"),
-                    one.alias("n"),
-                    int_div(F.lit(1_000_000), du).alias("t"),
-                ),
-            )
-        ).alias("c")
-    )
-    scored = (
-        contribs.groupBy(F.col("c.k").alias("k"))
-        .agg(
-            F.sum("c.n").cast("long").alias("n_common"),
-            F.sum("c.t").cast("long").alias("ra_e6"),
-        )
-        .select(
-            F.shiftrightunsigned(F.col("k"), 32).alias("a"),
-            F.col("k").bitwiseAND(lo32).alias("b"),
-            "n_common",
-            "ra_e6",
-        )
-    )
-    return (
-        scored.orderBy(F.desc("ra_e6"), F.asc("a"), F.asc("b"))
-        .limit(RA_TOP_N)
-    )
+        if _closure_fits(spark, sf_dir, jsig):
+            scored = _ra_from_closed(_tri_closed_bcast(edges))
+        else:
+            scored = _ra_from_edge_rows(_tri_edge_rows(edges))
+    return scored.orderBy(F.desc("ra_e6"), F.asc("a"), F.asc("b")).limit(RA_TOP_N)
 
 
 LCC_TOP_N = 20
@@ -1334,17 +1142,7 @@ LCC_TOP_N = 20
 @query(
     "graph_local_clustering",
     oracle=f"""
-    WITH e AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (
-      SELECT a AS node, b AS nb FROM e
-      UNION ALL
-      SELECT b AS node, a AS nb FROM e
-    ),
-    deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY node),
+    WITH {_DUCK_EDGES},
     tri AS (
       SELECT e1.a AS x, e1.b AS y, e2.b AS z
       FROM e e1
@@ -1379,10 +1177,10 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation hubs, lcc≈1 nodes sit inside cliques (here: parts
     always bought as a bundle). Top-20 by (lcc_ppm, node) total order.
 
-    Plan shape: per-node triangle counts come from the SAME
-    degree-oriented triple stream as the rascores/ntri build
-    (_tri_edge_rows — each triangle surfaces once with its three
-    corners, no wedge row ever shuffles, O(m^1.5) candidates), so a
+    Plan shape: per-node triangle counts come from the shared
+    enumerators behind the closure gate (_tri_closed_bcast below it,
+    _tri_edge_rows above it — the one the ntri build runs; each
+    triangle surfaces once with its three corners), so a
     fresh written-once materialization reduces this query to a scan of
     the `ntri` relation + one degree aggregate over the edge parquet;
     inline otherwise — bitwise-identical either way. The ppm ratio is
@@ -1394,40 +1192,24 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer than 20 closed wedges, where the (lcc_ppm DESC, node ASC)
     order remains total and deterministic."""
     jsig = materialize.serve(JSIG, sf_dir)
-    shared_deg = None
     if jsig is not None and "K" in jsig:
-        edges = read_parquet(spark, os.path.join(jsig["loc"], "edges"))
+        deg = _degrees(_jaccard_edges(spark, sf_dir))
         nt = read_parquet(spark, os.path.join(jsig["loc"], "ntri"))
     else:
-        raw_pairs = (
-            jsig["raw_pairs"]
-            if jsig is not None
-            else _jaccard_raw_pairs(spark, sf_dir)
-        )
         edges = scoped_persist(
             _jaccard_edges(spark, sf_dir), StorageLevel.MEMORY_AND_DISK
         )
         # One persisted degree frame serves the closure stream's two
-        # broadcast builds AND the final read-out below (r12 session 2:
-        # without it the 2|E|-row degree aggregate ran three times —
-        # da broadcast, db broadcast, read-out — because broadcast
-        # exchanges are independent plan consumers with no subtree CSE).
-        shared_deg = scoped_persist(
-            edges.select(F.col("a").alias("node"))
-            .unionAll(edges.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        )
-        if raw_pairs <= _ra_adj_limit():
-            # r12 optimization: corner counts straight off the
-            # broadcast-closure triangle stream — same triangle
-            # multiset as _tri_edge_rows (each triangle credits its 3
-            # corners exactly once), but no adjacency-array exchange;
-            # the only shuffle left is the node-keyed aggregate whose
-            # map-side combine collapses to |V| rows.
+        # broadcast builds AND the read-out below: broadcast exchanges
+        # are independent plan consumers with no subtree CSE, so an
+        # unpersisted one would run three times.
+        deg = scoped_persist(_degrees(edges))
+        if _closure_fits(spark, sf_dir, jsig):
+            # corner counts straight off the triangle rows; the only
+            # shuffle is the node-keyed aggregate (|V| rows map-side)
             lo32 = F.lit(_LO32)
             nt = (
-                _tri_closed_bcast(edges, deg=shared_deg)
+                _tri_closed_bcast(edges, deg=deg)
                 .select(
                     F.explode(
                         F.array(
@@ -1442,14 +1224,6 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             nt = _tri_node_counts(_tri_edge_rows(edges))
-    deg = (
-        shared_deg
-        if shared_deg is not None
-        else edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
     out = (
         deg.filter(F.col("deg") >= 2)
         .join(nt, "node", "left")
@@ -1468,23 +1242,15 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_distribution",
-    oracle="""
-    WITH e AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (
-      SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-    ),
-    deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY node)
-    SELECT d AS degree,
+    oracle=f"""
+    WITH {_DUCK_EDGES}
+    SELECT deg AS degree,
            CAST(count(*) AS BIGINT) AS n_nodes,
-           CAST(sum(count(*)) OVER (ORDER BY d DESC
+           CAST(sum(count(*)) OVER (ORDER BY deg DESC
                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_nodes_at_least
     FROM deg
-    GROUP BY d
-    ORDER BY d
+    GROUP BY deg
+    ORDER BY deg
     """,
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1493,22 +1259,19 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first diagnostic before choosing a graph algorithm at scale:
     a heavy tail here is what makes naive wedge joins explode and is
     exactly what the degree-oriented triangle plan defends against.
-    Shape: the same adjacency-first build as graph_jaccard_neighbors
-    (one collect_set exchange), then a groupBy over DEGREE VALUES —
-    whose cardinality is bounded by max-degree, not node count — so
-    the survival-curve window runs over a few hundred rows at any SF."""
-    sets = _order_part_sets(spark, sf_dir)
-    pairs = (
-        sets.select(F.explode("ps").alias("node"), "ps")
-        .select("node", F.explode("ps").alias("nb"))
-        .filter(F.col("node") != F.col("nb"))
+    Shape: _degrees over the shared edge list, then a groupBy over
+    DEGREE VALUES — whose cardinality is bounded by max-degree, not
+    node count — so the survival-curve window runs over a few hundred
+    rows at any SF."""
+    hist = (
+        _degrees(_jaccard_edges(spark, sf_dir))
+        .groupBy("deg")
+        .agg(F.count(F.lit(1)).alias("n_nodes"))
     )
-    deg = pairs.groupBy("node").agg(F.count_distinct("nb").alias("d"))
-    hist = deg.groupBy("d").agg(F.count(F.lit(1)).alias("n_nodes"))
-    w = Window.orderBy(F.desc("d")).rowsBetween(Window.unboundedPreceding, 0)
+    w = Window.orderBy(F.desc("deg")).rowsBetween(Window.unboundedPreceding, 0)
     return (
         hist.select(
-            F.col("d").alias("degree"),
+            F.col("deg").alias("degree"),
             F.col("n_nodes").cast("long").alias("n_nodes"),
             F.sum("n_nodes").over(w).cast("long").alias("n_nodes_at_least"),
         )
@@ -1538,15 +1301,18 @@ KCORE_BROADCAST_REMOVE_LIMIT = 10_000_000
 # iteration counting, same K_CORE_MAX_ITER cap), so the summary row
 # is value-identical; the parity test pins both paths against each
 # other. Above the gate (sf1+) the distributed peel runs unchanged.
-# SPARK_GRAFT_KCORE_FORCE_DIST=1 forces the distributed path (A/B,
-# tests).
 KCORE_DRIVER_EDGE_LIMIT = 2_000_000
+_KCORE_SCHEMA = (
+    "k long, n_iterations int, n_nodes_total long, n_edges_total long, "
+    "n_nodes_core long, n_edges_core long"
+)
 
 
 @query("graph_kcore_summary")  # rows-only: iterative fixpoint, not SQL-expressible
-def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def graph_kcore_summary(spark: SparkSession, sf_dir: str, k: int = 0) -> DataFrame:
     """k-core of the part co-purchase graph by iterative peeling
-    (k = mean degree, plan-time derived — see K_CORE_FLOOR note):
+    (k = mean degree, plan-time derived — see K_CORE_FLOOR note — unless
+    a positive `k` is given):
     repeatedly drop nodes with degree < k until fixpoint — the
     standard dense-subgraph screen (spam rings, bot cliques, core
     community extraction) and the preprocessing step that makes
@@ -1569,10 +1335,7 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # packed-long distinct — r12), persisted for the peel rounds
     edges0 = _jaccard_edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     n_edges_total = edges0.count()
-    k_env = env_int("SPARK_GRAFT_KCORE_K", 0)  # 0: adaptive k
-    if n_edges_total <= KCORE_DRIVER_EDGE_LIMIT and not env_flag(
-        "SPARK_GRAFT_KCORE_FORCE_DIST"
-    ):
+    if n_edges_total <= KCORE_DRIVER_EDGE_LIMIT:
         # Driver peel (see KCORE_DRIVER_EDGE_LIMIT): one Arrow collect
         # of the cached edge list, then numpy rounds that mirror the
         # distributed loop STATEMENT FOR STATEMENT — degrees over
@@ -1587,9 +1350,7 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         ea = pdf["a"].to_numpy(copy=False)
         eb = pdf["b"].to_numpy(copy=False)
         n_nodes_total = int(np.unique(np.concatenate([ea, eb])).size)
-        k = k_env or max(
-            K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1)
-        )
+        k = k or max(K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1))
         alive = np.ones(len(ea), dtype=bool)
         iters = 0
         for _ in range(K_CORE_MAX_ITER):
@@ -1607,28 +1368,17 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return spark.createDataFrame(
             [(k, iters, n_nodes_total, n_edges_total, n_nodes_core, n_edges)],
-            "k long, n_iterations int, n_nodes_total long, n_edges_total long, "
-            "n_nodes_core long, n_edges_core long",
+            _KCORE_SCHEMA,
         )
-    n_nodes_total = (
-        edges0.select(F.col("a").alias("n"))
-        .unionAll(edges0.select(F.col("b").alias("n")))
-        .distinct()
-        .count()
-    )
-    k = k_env or max(K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1))
+    n_nodes_total = _degrees(edges0).count()
+    k = k or max(K_CORE_FLOOR, (2 * n_edges_total) // max(n_nodes_total, 1))
     edges = edges0
     prev_ckpt_ids: set[int] = set()
     iters = 0
     for _ in range(K_CORE_MAX_ITER):
-        deg = (
-            edges.select(F.col("a").alias("node"))
-            .unionAll(edges.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
         remove = (
-            deg.filter(F.col("d") < k)
+            _degrees(edges)
+            .filter(F.col("deg") < k)
             .select("node")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -1642,68 +1392,39 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             if n_removed <= KCORE_BROADCAST_REMOVE_LIMIT
             else remove
         )
-        before_ids = persistent_rdd_ids(spark)
-        edges = (
+        edges, new_ids = local_checkpoint(
             edges.join(drop.withColumnRenamed("node", "a"), "a", "left_anti")
             .join(drop.withColumnRenamed("node", "b"), "b", "left_anti")
-            .localCheckpoint(eager=True)
         )
         # Rotate checkpoint storage: the new round's blocks are live the
-        # moment eager=True returns, so the SUPERSEDED round's blocks
-        # (invisible to DataFrame.unpersist — they belong to the
-        # checkpoint's internal RDD) are freed by id. Without this, up
-        # to K_CORE_MAX_ITER stale edge snapshots pile up in executor
-        # storage for the life of a sweep session (r6 advice).
-        new_ids = persistent_rdd_ids(spark) - before_ids
+        # moment the eager checkpoint returns, so the SUPERSEDED round's
+        # are freed by id. Without this, up to K_CORE_MAX_ITER stale
+        # edge snapshots pile up in executor storage for the life of a
+        # sweep session.
         unpersist_rdd_ids(spark, prev_ckpt_ids)
         prev_ckpt_ids = new_ids
         remove.unpersist()
     n_edges = edges.count() if edges is not edges0 else n_edges_total
-    n_nodes_core = (
-        edges.select(F.col("a").alias("n"))
-        .unionAll(edges.select(F.col("b").alias("n")))
-        .distinct()
-        .count()
-    )
+    n_nodes_core = _degrees(edges).count()
     edges0.unpersist()
     # the final round's checkpoint blocks are done once the summary
     # counts above have materialized
     unpersist_rdd_ids(spark, prev_ckpt_ids)
     return spark.createDataFrame(
-        [
-            (
-                k,
-                iters,
-                n_nodes_total,
-                n_edges_total,
-                n_nodes_core,
-                n_edges,
-            )
-        ],
-        "k long, n_iterations int, n_nodes_total long, n_edges_total long, "
-        "n_nodes_core long, n_edges_core long",
+        [(k, iters, n_nodes_total, n_edges_total, n_nodes_core, n_edges)],
+        _KCORE_SCHEMA,
     )
 
 
 @query(
     "graph_degree_assortativity",
-    oracle="""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e),
-    deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY node),
+    oracle=f"""
+    WITH {_DUCK_EDGES},
     pairs AS (
-      -- each undirected edge contributes BOTH orientations so the
-      -- correlation is symmetric in its arguments
-      SELECT da.d AS x, db.d AS y FROM e
-        JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b
-      UNION ALL
-      SELECT db.d, da.d FROM e
-        JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b
+      -- every directed edge: BOTH orientations of each undirected one,
+      -- so the correlation is symmetric in its arguments
+      SELECT da.deg AS x, db.deg AS y FROM edges
+        JOIN deg da ON da.node = edges.src JOIN deg db ON db.node = edges.dst
     ),
     moms AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
@@ -1730,9 +1451,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-oriented triangle plan defends against). Computed with the
     agg_correlation_matrix discipline: exact integer/decimal moment
     sums, ONE float conversion in an expression written identically
-    in both engines, round(6) hash-stable. Shape: the adjacency-first
-    degree build + one edges->degrees join (ids and degrees only),
-    one 1-row moment aggregate."""
+    in both engines, round(6) hash-stable. Shape: _degrees over the
+    persisted shared edge list + one edges->degrees join (ids and
+    degrees only), one 1-row moment aggregate."""
     # r12 optimization round: the unpersisted edge subtree used to be
     # REPLANNED for every consumer (the before-plan shows 20 parquet
     # scans / 40 ObjectHashAggregates and zero ReusedExchange — the da,
@@ -1749,12 +1470,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = scoped_persist(
         _jaccard_edges(spark, sf_dir), StorageLevel.MEMORY_AND_DISK
     )
-    adj = edges.select(F.col("a").alias("node")).unionAll(
-        edges.select(F.col("b").alias("node"))
-    )
-    deg = scoped_persist(adj.groupBy("node").agg(F.count(F.lit(1)).alias("d")))
-    da = deg.select(F.col("node").alias("a"), F.col("d").alias("x"))
-    db = deg.select(F.col("node").alias("b"), F.col("d").alias("y"))
+    deg = scoped_persist(_degrees(edges))
+    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("x"))
+    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("y"))
     oriented = edges.join(da, "a").join(db, "b").select("x", "y")
     dec = "decimal(38,0)"
     half = oriented.agg(
@@ -1792,9 +1510,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 LPA_ITERS = 4
 
-# Label-broadcast gate for graph_label_propagation — deliberately
-# SEPARATE from (and smaller than) BROADCAST_EDGE_LIMIT, whose 5M was
-# calibrated for ~40 MB of packed edge longs. A broadcast-hash
+# Label-broadcast gate for graph_label_propagation, sized for the
+# hash relation rather than the payload. A broadcast-hash
 # relation of (node, label) int64 pairs costs far more than its 16
 # payload bytes per row: UnsafeHashedRelation adds key hashing, page
 # pointers, and alignment — budget ~6-8x, so 2.5M rows ≈ 40 MB
@@ -1811,14 +1528,8 @@ def _duck_lpa_ctes() -> tuple[str, str]:
     Returns (WITH-clause text, name of the final label CTE) so the
     modularity read-out can extend the same chain."""
     ctes = [
-        "op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """edges AS (
-          SELECT a.l_partkey AS src, b.l_partkey AS dst
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-          GROUP BY 1, 2
-        )""",
-        "l0 AS (SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS label FROM edges)",
+        _DUCK_EDGES,
+        "l0 AS (SELECT node, CAST(node AS BIGINT) AS label FROM deg)",
     ]
     prev = "l0"
     for i in range(1, LPA_ITERS + 1):
@@ -1894,36 +1605,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted co-purchase edge list, hash-partitioned by dst.
-    repartition("dst") BEFORE dropDuplicates: the dedup aggregate's
-    clustered distribution on (src, dst) is satisfied by the dst
-    hash layout (grouping-key subset), so the dedup costs no second
-    exchange and the persisted blocks come out partitioned by dst —
-    the layout every LPA iteration's aggregates (and the modularity
-    read-out's degree count) then reuse for free."""
-    # r12 optimization round: dedup FIRST on the packed half-direction
-    # key (_jaccard_edges — raw-pair rows collapse map-side onto
-    # 8-byte longs), then emit both orientations in ONE in-row explode
-    # and lay out by dst. The r10 form repartitioned the RAW explode
-    # (both orientations, pre-dedup — 12.6M 16-byte rows at sf0.1)
-    # and deduped on the layout; this form's two exchanges carry the
-    # packed distinct (≤ raw/2 8-byte keys after partial dedup) plus
-    # 2|E| final rows ≈ 1/3 the bytes, and the persisted layout is
-    # identical (hash-partitioned by dst, unique (src, dst) rows) so
-    # every iteration's zero-exchange property is untouched.
-    half = _jaccard_edges(spark, sf_dir)
-    edges = (
-        half.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .repartition("dst")
-    )
+    """The shared edge list with both orientations (_both_ways),
+    hash-partitioned by dst and persisted: unique (src, dst) rows in the
+    layout every LPA iteration's aggregates (and the modularity
+    read-out) reuse without another exchange."""
+    edges = _both_ways(_jaccard_edges(spark, sf_dir)).repartition("dst")
     return scoped_persist(edges, StorageLevel.MEMORY_AND_DISK)
 
 
@@ -1974,10 +1660,6 @@ def _duck_lpa_modularity_sql() -> str:
         ctes
         + f""",
     lab AS (SELECT node, label FROM {prev}),
-    deg AS (
-      SELECT dst AS node, CAST(count(*) AS BIGINT) AS deg
-      FROM edges GROUP BY dst
-    ),
     tot AS (SELECT CAST(count(*) AS HUGEINT) AS t FROM edges),
     within AS (
       SELECT la.label AS label, CAST(count(*) AS BIGINT) AS e_in

@@ -86,7 +86,7 @@ def env_flag(name: str) -> bool:
 
 def persist_if_source_large(
     df: DataFrame, sf_dir: str, table: str = "documents",
-    min_bytes: int | None = None,
+    min_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Scale-gated scoped_persist (r13, verdict #7 — the at-scale twin
     of the r8/ccnet/bm25 'cheaper-to-replay' rule): persist a shared
@@ -102,16 +102,9 @@ def persist_if_source_large(
     Default threshold 256 MiB ≈ 2.5e6 docs at this corpus's density —
     an order of magnitude above the largest scale where replay has
     been MEASURED cheaper (sf1, ~6 MB/50 k docs), and two below the
-    ~10^7-doc point the r12 analysis called for the persist.
-    SPARK_GRAFT_PERSIST_MIN_BYTES overrides the default for A/B
-    measurement; an explicit min_bytes overrides both."""
+    ~10^7-doc point the r12 analysis called for the persist."""
     import os
 
-    gate = (
-        min_bytes
-        if min_bytes is not None
-        else env_int("SPARK_GRAFT_PERSIST_MIN_BYTES", 256 * 1024 * 1024)
-    )
     src = os.path.join(sf_dir, f"{table}.parquet")
     size = 0
     try:
@@ -124,7 +117,7 @@ def persist_if_source_large(
             size = os.stat(src).st_size
     except OSError:
         return df  # unstatable source (fixture-injected tables): inline
-    return scoped_persist(df) if size >= gate else df
+    return scoped_persist(df) if size >= min_bytes else df
 
 
 def scoped_release(callback: Callable[[], None]) -> None:

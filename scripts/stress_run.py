@@ -26,8 +26,8 @@ from alexandria_pipeline_spark import QUERIES, get_spark, register_all
 from alexandria_pipeline_spark.registry import release_persisted
 
 # r11: the graph family + quality_train were re-measured in ONE fresh
-# session by scripts/graph_stress_session.py (STRESS_r11.json, which
-# this file now appends to for --all-new additions); jaccard gained
+# session (STRESS_r11.json, which this file now appends to for
+# --all-new additions); jaccard gained
 # the written-once signature read path and quality_train the
 # collect-per-step rewrite. Unchanged plans keep their STRESS_r10
 # rows (same policy as the r8 -> r9 rollover).

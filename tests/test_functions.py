@@ -223,29 +223,6 @@ def test_predict_batch_udf_matches_featurizer(spark):
         assert r["codegen"] == r["iterator"] == r["pbu"], r
 
 
-def test_pagerank_checkpoint_rotation_invariant(spark):
-    """pagerank_ranks must produce identical ranks whether or not the
-    checkpoint interval fires mid-loop — lineage truncation is an
-    execution detail, never a semantics change."""
-    from alexandria_pipeline_spark.operators.graph import pagerank_ranks
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3), (4, 1), (1, 4)],
-        "src long, dst long",
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = edges.join(deg, "src")
-    plain = {
-        r["node"]: r["r"]
-        for r in pagerank_ranks(edges_deg, deg, iters=6, checkpoint_every=100).collect()
-    }
-    rotated = {
-        r["node"]: r["r"]
-        for r in pagerank_ranks(edges_deg, deg, iters=6, checkpoint_every=2).collect()
-    }
-    assert plain == rotated and len(plain) == 4, (plain, rotated)
-
-
 def test_featurize_split_identity_on_adversarial_strings(spark):
     """featurize() computes the token-length sum as
     length(text) - (n_tokens - 1) — the single-char-delimiter split

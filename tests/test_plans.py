@@ -270,7 +270,7 @@ def test_interval_bucketed_join_is_equi(spark):
 
 def test_triangle_count_broadcasts_are_size_gated(spark, monkeypatch):
     """graph_triangle_count broadcasts its fact-derived degree table
-    and edge set ONLY below BROADCAST_EDGE_LIMIT. Above the cap the
+    and edge set ONLY below CLOSURE_BROADCAST_LIMIT. Above the cap the
     explicit hints must vanish from the plan (AQE may still choose
     broadcast at runtime from measured sizes — the invariant is that
     WE never force it)."""
@@ -279,12 +279,38 @@ def test_triangle_count_broadcasts_are_size_gated(spark, monkeypatch):
     plan = formatted_plan(QUERIES["graph_triangle_count"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan, "small graph should broadcast"
 
-    monkeypatch.setattr(graph, "BROADCAST_EDGE_LIMIT", 0)
+    monkeypatch.setattr(graph, "CLOSURE_BROADCAST_LIMIT", -1)
     df = QUERIES["graph_triangle_count"](spark, SF_SMOKE)
     # the analyzed plan records explicit hints as ResolvedHint nodes;
     # AQE-chosen broadcasts (fine) never appear there
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed, analyzed
+
+
+def test_graph_queries_read_only_the_served_edges(spark, tmp_path, monkeypatch):
+    """With the JSIG relation served, every graph query gets the
+    co-purchase graph from its `edges` parquet: no executed plan scans
+    lineitem, and no builder reads it (the gate operand comes from the
+    relation's meta)."""
+    from alexandria_pipeline_spark.operators import graph
+
+    monkeypatch.setenv("SPARK_GRAFT_SKETCH_CACHE", str(tmp_path / "cache"))
+    monkeypatch.delenv("SPARK_GRAFT_JACCARD_SIG_DISABLE", raising=False)
+    graph.run_jaccard_sig_build_job(spark, SF_SMOKE)
+
+    def no_lineitem(spark, sf_dir, name):
+        raise AssertionError(f"builder read {name}")
+
+    monkeypatch.setattr(graph, "load_table", no_lineitem)
+    offenders = []
+    for name in sorted(n for n in QUERIES if n.startswith("graph_")):
+        df = QUERIES[name](spark, SF_SMOKE)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        release_persisted()
+        if "lineitem.parquet" in plan:
+            offenders.append(name)
+    assert not offenders, f"graph plans scanning lineitem: {offenders}"
 
 
 def test_jaccard_neighbors_sketches_above_gate(spark, monkeypatch):

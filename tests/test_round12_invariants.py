@@ -1,12 +1,10 @@
 """Round-12 invariants: the degree-oriented triangle triple stream
 (operators/graph.py _tri_triples_deg) shared by the rascores/ntri
-written-once relations, the resource-allocation above-gate iterator
-plan (replacing the r11 shuffle-equi-join fallback), the new
-graph_local_clustering query and the packed-key overflow guards
-(ADVICE r11). The format-stamp tests live in test_materialize.py.
+written-once relations, graph_local_clustering and the packed-key
+overflow guards (ADVICE r11). The format-stamp tests live in
+test_materialize.py, the gate-form identity tests in test_graph.py.
 
-Value identity is the bar everywhere: the iterator plan must equal the
-broadcast wedge plan bitwise, and the materialized read paths must
+Value identity is the bar everywhere: the materialized read paths must
 equal the inline plans bitwise.
 """
 
@@ -32,7 +30,6 @@ def jsig_env(tmp_path, monkeypatch):
     cache = tmp_path / "cache"
     monkeypatch.setenv("SPARK_GRAFT_SKETCH_CACHE", str(cache))
     monkeypatch.delenv("SPARK_GRAFT_JACCARD_SIG_DISABLE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_RA_FORCE_ITER", raising=False)
     sf_copy = tmp_path / "sf"
     sf_copy.mkdir()
     src = os.path.join(SF_SMOKE, "lineitem.parquet")
@@ -75,25 +72,6 @@ def test_tri_triples_match_bruteforce(spark):
         assert tri in expected and len(tri) == 3
         for n, d in ((r["u"], r["du"]), (r["v"], r["dv"]), (r["z"], r["dz"])):
             assert deg[n] == d, "packed degree must be the exact degree"
-
-
-def test_ra_iterator_matches_broadcast_plan(spark, monkeypatch):
-    """SPARK_GRAFT_RA_FORCE_ITER routes resource-allocation through
-    the triangle edge-iterator (the above-gate plan); its output must
-    be bitwise the broadcast wedge plan's."""
-    monkeypatch.delenv("SPARK_GRAFT_RA_FORCE_ITER", raising=False)
-    base = [
-        tuple(r)
-        for r in QUERIES["graph_resource_allocation"](spark, SF_SMOKE).collect()
-    ]
-    release_persisted()
-    monkeypatch.setenv("SPARK_GRAFT_RA_FORCE_ITER", "1")
-    it = [
-        tuple(r)
-        for r in QUERIES["graph_resource_allocation"](spark, SF_SMOKE).collect()
-    ]
-    release_persisted()
-    assert it == base and base, "iterator plan must be value-identical"
 
 
 def test_local_clustering_matches_bruteforce(spark):
@@ -278,28 +256,3 @@ def test_span_corruption_reconciles_with_packing(spark):
         assert 0 <= r["masked_tokens"] <= r["bin_tokens"] * P.SPAN_MASK_PCT // 100
         # ceil grouping: spans never exceed masked count, never under 1/len
         assert r["n_spans"] * P.SPAN_MEAN_LEN >= r["masked_tokens"]
-
-
-def test_kcore_driver_peel_matches_distributed(spark, monkeypatch):
-    """The r12 driver-side numpy peel (below KCORE_DRIVER_EDGE_LIMIT)
-    must produce the EXACT summary row of the distributed peel — same
-    fixpoint counts AND the same n_iterations — at both a pinned k
-    that keeps a nonempty core and the adaptive mean-degree default
-    (which cascades the smoke graph empty). A malformed k falls back to
-    that default instead of failing the query."""
-    rows = {}
-    for env_k in ("60", None, "x"):
-        if env_k is None:
-            monkeypatch.delenv("SPARK_GRAFT_KCORE_K", raising=False)
-        else:
-            monkeypatch.setenv("SPARK_GRAFT_KCORE_K", env_k)
-        monkeypatch.delenv("SPARK_GRAFT_KCORE_FORCE_DIST", raising=False)
-        drv = [tuple(r) for r in QUERIES["graph_kcore_summary"](spark, SF_SMOKE).collect()]
-        release_persisted()
-        monkeypatch.setenv("SPARK_GRAFT_KCORE_FORCE_DIST", "1")
-        dist = [tuple(r) for r in QUERIES["graph_kcore_summary"](spark, SF_SMOKE).collect()]
-        release_persisted()
-        assert drv == dist and drv, f"k={env_k}: driver peel must be value-identical"
-        rows[env_k] = drv
-    monkeypatch.delenv("SPARK_GRAFT_KCORE_FORCE_DIST", raising=False)
-    assert rows["x"] == rows[None]

@@ -86,12 +86,10 @@ def test_persist_if_source_large_gates_on_bytes(tmp_path, monkeypatch):
     src = tmp_path / "documents.parquet"
     src.write_bytes(b"x" * 1024)
 
-    monkeypatch.setenv("SPARK_GRAFT_PERSIST_MIN_BYTES", "4096")
-    out = registry.persist_if_source_large(df, str(tmp_path))
+    out = registry.persist_if_source_large(df, str(tmp_path), min_bytes=4096)
     assert out is df and out.storageLevel.useMemory is False
 
-    monkeypatch.setenv("SPARK_GRAFT_PERSIST_MIN_BYTES", "512")
-    out = registry.persist_if_source_large(df, str(tmp_path))
+    out = registry.persist_if_source_large(df, str(tmp_path), min_bytes=512)
     assert out.storageLevel.useMemory is True
     assert registry.release_persisted() >= 1
     # unstatable source: inline, never raises

@@ -173,54 +173,6 @@ def test_char_trigram_signature_shape(spark):
         assert counts == sorted(counts, reverse=True), lang
 
 
-def test_kcore_fixpoint_invariant(spark, monkeypatch):
-    """At a pinned k that leaves a NONEMPTY core on the smoke graph,
-    every surviving node must keep degree >= k inside the core (the
-    peeling fixpoint); with the adaptive default (mean degree on a
-    near-regular dense graph) the cascade legitimately empties the
-    core and the counters must stay consistent."""
-    import pyspark.sql.functions as F
-
-    from alexandria_pipeline_spark.catalog import load_table
-
-    monkeypatch.setenv("SPARK_GRAFT_KCORE_K", "60")
-    row = QUERIES["graph_kcore_summary"](spark, SF_SMOKE).collect()[0]
-    assert row["k"] == 60
-    assert row["n_edges_core"] > 0, "pinned k should retain a core"
-    # independently recompute the core's internal degrees
-    sets = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey").alias("ps"))
-    )
-    edges = (
-        sets.select(F.explode("ps").alias("a"), "ps")
-        .select("a", F.explode("ps").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    # peel in python (tiny graph) to the same fixpoint
-    e = {(r["a"], r["b"]) for r in edges.collect()}
-    while True:
-        deg: dict[int, int] = {}
-        for a, b in e:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        keep = {n for n, d in deg.items() if d >= 60}
-        e2 = {(a, b) for a, b in e if a in keep and b in keep}
-        if e2 == e:
-            break
-        e = e2
-    nodes = {n for ab in e for n in ab}
-    assert row["n_edges_core"] == len(e)
-    assert row["n_nodes_core"] == len(nodes)
-
-    monkeypatch.delenv("SPARK_GRAFT_KCORE_K")
-    row2 = QUERIES["graph_kcore_summary"](spark, SF_SMOKE).collect()[0]
-    assert row2["k"] == max(3, 2 * row2["n_edges_total"] // row2["n_nodes_total"])
-    assert (row2["n_edges_core"] == 0) == (row2["n_nodes_core"] == 0)
-
-
 def test_column_stats_bounds(spark):
     from alexandria_pipeline_spark.catalog import load_table
     from alexandria_pipeline_spark.operators.maintenance import _STATS_COLS

@@ -96,24 +96,6 @@ def test_foreign_session_timezone_survives_events_load(spark):
     assert got == want
 
 
-def test_kcore_releases_all_checkpoint_blocks(spark):
-    """graph_kcore_summary localCheckpoints the surviving edges each
-    peel round; superseded rounds' blocks must be freed as the loop
-    advances (r6 advice: up to 30 stale edge snapshots otherwise sit
-    in executor storage for the life of a sweep session)."""
-    from alexandria_pipeline_spark.registry import QUERIES
-
-    def persistent_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(i) for i in jmap.keySet().toArray()}
-
-    before = persistent_ids()
-    res = QUERIES["graph_kcore_summary"](spark, "/root/testdata/sf0.001").collect()
-    assert len(res) == 1 and res[0]["n_iterations"] >= 1
-    leaked = persistent_ids() - before
-    assert not leaked, f"persistent RDD blocks leaked: {leaked}"
-
-
 def test_mmr_rerank_greedy_invariants(spark):
     """MMR output must be a valid greedy chain: distinct picks, rank 1
     is the max-relevance candidate, and every pick's mmr score is
