@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.functions.banded import running_sums
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.text import (
     SHINGLE_MOD,
@@ -410,7 +411,7 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from alexandria_pipeline_spark.operators.text_analysis import STOPWORDS  # noqa: E402
 
-QUALITY_DECILE_BAND = 10_000  # quality_e6 band width for two-phase rank
+QUALITY_DECILE_BAND = 10_000  # quality_e6 band width for running_sums
 
 
 @query(
@@ -454,11 +455,9 @@ def curation_quality_decile_budget(spark: SparkSession, sf_dir: str) -> DataFram
     quality distribution (the same C4/Gopher-style score as
     text_quality_scores, kept in exact e6 integers), so 'train on the
     top 3 deciles, sample the middle 4 at 30%' becomes arithmetic on
-    this output. The global quality rank uses the two-phase banded
-    rewrite (doc_length_gini's discipline): quality_e6 div 10000 bands
-    (≤ 100 values) carry exclusive count offsets through a band-only
-    window; the within-band row_number is PARTITIONED BY band — no
-    data-sized single-partition window. Decile membership, the token
+    this output. The global quality rank is
+    functions/banded.running_sums over quality_e6 div 10000 bands
+    (≤ 100 values), doc_id breaking ties. Decile membership, the token
     totals, and the share are all truncating-integer exact."""
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
@@ -487,20 +486,12 @@ def curation_quality_decile_budget(spark: SparkSession, sf_dir: str) -> DataFram
     banded = scored.withColumn(
         "band", F.expr(f"quality_e6 div {QUALITY_DECILE_BAND}")
     )
-    band_cnt = banded.groupBy("band").agg(F.count(F.lit(1)).alias("bn"))
-    w_bands = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = band_cnt.select(
-        "band", F.coalesce(F.sum("bn").over(w_bands), F.lit(0)).alias("off")
-    )
-    w_in = Window.partitionBy("band").orderBy("quality_e6", "doc_id")
     tot = scored.agg(
         F.count(F.lit(1)).alias("n"), F.sum("n_tok").alias("total_tok")
     )
-    ranked = (
-        banded.join(F.broadcast(offsets), "band")
-        .withColumn("i", F.col("off") + F.row_number().over(w_in))
-        .crossJoin(F.broadcast(tot))
-    )
+    ranked = running_sums(
+        banded, "band", ["quality_e6", "doc_id"], {"i": F.lit(1)}
+    ).crossJoin(F.broadcast(tot))
     return (
         ranked.groupBy(F.expr("CAST((i - 1) * 10 div n AS BIGINT)").alias("decile"))
         .agg(
@@ -1243,7 +1234,7 @@ def decontam_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CCNet-style perplexity bucketing (Wenzek et al. 2020): documents are
 # split per language into head/middle/tail terciles of LM perplexity;
 # training mixes take head+middle and drop (or heavily subsample) the
-# tail. Surprisal bands for the two-phase rank: mbits div 500 keeps the
+# tail. Surprisal bands for running_sums: mbits div 500 keeps the
 # per-lang band inventory small at any corpus size.
 CCNET_BAND = 500
 
@@ -1301,14 +1292,11 @@ def corpus_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFra
 
     The per-lang global rank does NOT sort a language's documents in
     one partition (a 100-TB corpus can be 90% one language — the
-    skew hazard): surprisal bands (mbits div CCNET_BAND=500, a bounded
-    inventory) carry exclusive count offsets through a band-only
-    window partitioned by lang, and the within-band row_number is
-    partitioned by (lang, band) — the same two-phase banded rewrite
-    as curation_quality_decile_budget, with the lang key carried
-    through. LM cost: one explode -> tf aggregate, vocab-keyed join
-    back, one doc aggregate — shared shape with the surprisal
-    query."""
+    skew hazard): it is functions/banded.running_sums by lang over
+    surprisal bands (mbits div CCNET_BAND=500, a bounded inventory),
+    doc_id breaking ties. LM cost: one explode -> tf aggregate,
+    vocab-keyed join back, one doc aggregate — shared shape with the
+    surprisal query."""
     d = load_table(spark, sf_dir, "documents")
     occ = d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
     tf = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
@@ -1317,13 +1305,12 @@ def corpus_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFra
         "tok",
         (F.length(F.expr("bin(n div tf)")) - 1).cast("long").alias("sbits"),
     )
-    # r13 (verdict #7, the at-scale twin of the r12 negative result):
-    # `scored` feeds three consumers (banded, the ranked join, nl), so
-    # every consumer replans the corpus explode + vocab join. At sf0.1
-    # persisting it MEASURED worse (1.72→2.88 s — the cache barrier
-    # beats the parallel replays on a 5 000-doc subtree, the ccnet/r8
-    # rule); above the size gate the replays are corpus-scale and the
-    # |docs|-row narrow frame caches instead. See
+    # `scored` feeds three consumers (the band totals, the within-band
+    # window, nl), so every consumer replans the corpus explode + vocab
+    # join. At sf0.1 persisting it measured worse (1.72→2.88 s: the
+    # cache barrier costs more than replaying a 5,000-doc subtree in
+    # parallel); above the size gate the replays are corpus-scale and
+    # the |docs|-row narrow frame is cached instead. See
     # registry.persist_if_source_large for the gate's derivation.
     scored = persist_if_source_large(
         occ.join(bits, "tok")
@@ -1342,26 +1329,10 @@ def corpus_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFra
         sf_dir,
     )
     banded = scored.withColumn("band", F.expr(f"mbits div {CCNET_BAND}"))
-    band_cnt = banded.groupBy("lang", "band").agg(
-        F.count(F.lit(1)).alias("bn")
-    )
-    w_bands = (
-        Window.partitionBy("lang")
-        .orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = band_cnt.select(
-        "lang",
-        "band",
-        F.coalesce(F.sum("bn").over(w_bands), F.lit(0)).alias("off"),
-    )
     nl = scored.groupBy("lang").agg(F.count(F.lit(1)).alias("nl"))
-    w_in = Window.partitionBy("lang", "band").orderBy("mbits", "doc_id")
-    ranked = (
-        banded.join(F.broadcast(offsets), ["lang", "band"])
-        .withColumn("rn", F.col("off") + F.row_number().over(w_in))
-        .join(F.broadcast(nl), "lang")
-    )
+    ranked = running_sums(
+        banded, "band", ["mbits", "doc_id"], {"rn": F.lit(1)}, by=["lang"]
+    ).join(F.broadcast(nl), "lang")
     return (
         ranked.groupBy(
             "lang", F.expr("CAST((rn - 1) * 3 div nl AS INT)").alias("bucket")
@@ -1477,12 +1448,11 @@ def curation_rule_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Score-rank banding for the AUC / KS global cumulative sums: a
-# monotone truncating div of the e6 score by this width gives a
-# value-range-bounded band key (the scorer's reachable domain is a few
-# e6 units wide, so a few hundred bands at any SF) — the same
-# two-phase rewrite doc_length_gini and orders_pareto_8020 use, so no
-# single-partition window ever sees the distinct-score frame.
+# Score-rank banding for the AUC / KS global cumulative sums
+# (functions/banded.running_sums): a monotone truncating div of the e6
+# score by this width gives a value-range-bounded band key (the
+# scorer's reachable domain is a few e6 units wide, so a few hundred
+# bands at any SF).
 QL_RANK_BAND_E6 = 10_000
 
 _DEC38 = "decimal(38,0)"
@@ -1533,11 +1503,11 @@ def curation_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree bit-for-bit — no float rank averaging. Shares the scorer
     fragments with the calibration/histogram queries (one definition
     per engine). Plan: map-only feature fold, ONE groupBy(z) with
-    map-side combine onto the bounded score domain, then the two-phase
-    banded cumulative count (band offsets over a few hundred rows,
-    within-band windows PARTITIONED by band — the doc_length_gini
-    discipline), one final 1-row moment aggregate. The rank-weighted
-    sum runs in decimal(38,0)/HUGEINT because S2 is O(n²)."""
+    map-side combine onto the bounded score domain, then the
+    cumulative count by functions/banded.running_sums over z div
+    QL_RANK_BAND_E6 bands, one final 1-row moment aggregate. The
+    rank-weighted sum runs in decimal(38,0)/HUGEINT because S2 is
+    O(n²)."""
     d = load_table(spark, sf_dir, "documents")
     scored = _ql_feats(d).select("lang", _ql_z_e6().alias("z"))
     per_z = scored.groupBy("z").agg(
@@ -1545,20 +1515,8 @@ def curation_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("lang") == "en").cast("long")).cast("long").alias("p"),
     )
     banded = per_z.withColumn("band", F.expr(f"z div {QL_RANK_BAND_E6}"))
-    band_cnt = banded.groupBy("band").agg(F.sum("m").alias("bm"))
-    w_bands = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = band_cnt.select(
-        "band", F.coalesce(F.sum("bm").over(w_bands), F.lit(0)).alias("off")
-    )
-    w_in = Window.partitionBy("band").orderBy("z").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ranked = (
-        banded.join(F.broadcast(offsets), "band")
-        .withColumn(
-            "c_below", F.col("off") + F.sum("m").over(w_in) - F.col("m")
-        )
-        .select("m", "p", "c_below")
+    ranked = running_sums(banded, "band", ["z"], {"c": F.col("m")}).select(
+        "m", "p", (F.col("c") - F.col("m")).alias("c_below")
     )
     agg = ranked.agg(
         F.sum(
@@ -1629,8 +1587,8 @@ def corpus_score_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     |ca*nb - cb*na| (the common denominator na*nb is constant, so the
     argmax is unchanged) and divided ONCE into ppm at read-out; the
     earliest score wins ties via a struct-max over (gap, -z). Same
-    100-TB shape as the AUC: one groupBy(z), two-phase banded
-    cumulative counts for both snapshots in one pass, 1-row read-out.
+    100-TB shape as the AUC: one groupBy(z), both snapshots' cumulative
+    counts from one functions/banded.running_sums call, 1-row read-out.
     Cross products run in decimal(38,0)/HUGEINT (ca*nb is O(n²))."""
     d = load_table(spark, sf_dir, "documents")
     scored = _ql_feats(d).select(
@@ -1641,27 +1599,16 @@ def corpus_score_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("snap") == 1).cast("long")).cast("long").alias("mb"),
     )
     banded = per_z.withColumn("band", F.expr(f"z div {QL_RANK_BAND_E6}"))
-    band_cnt = banded.groupBy("band").agg(
-        F.sum("ma").alias("bma"), F.sum("mb").alias("bmb")
-    )
-    w_bands = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = band_cnt.select(
-        "band",
-        F.coalesce(F.sum("bma").over(w_bands), F.lit(0)).alias("offa"),
-        F.coalesce(F.sum("bmb").over(w_bands), F.lit(0)).alias("offb"),
-    )
-    w_in = Window.partitionBy("band").orderBy("z").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
     tot = per_z.agg(
         F.sum("ma").cast(_DEC38).alias("na"), F.sum("mb").cast(_DEC38).alias("nb")
     )
+    cums = {"ca": F.col("ma"), "cb": F.col("mb")}
     gaps = (
-        banded.join(F.broadcast(offsets), "band")
+        running_sums(banded, "band", ["z"], cums)
         .select(
             "z",
-            (F.col("offa") + F.sum("ma").over(w_in)).cast(_DEC38).alias("ca"),
-            (F.col("offb") + F.sum("mb").over(w_in)).cast(_DEC38).alias("cb"),
+            F.col("ca").cast(_DEC38).alias("ca"),
+            F.col("cb").cast(_DEC38).alias("cb"),
         )
         .crossJoin(F.broadcast(tot))
         .select(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.functions.banded import running_sums
 from alexandria_pipeline_spark.functions.exact import int_div, trunc_div
 from alexandria_pipeline_spark.registry import (
     persist_if_source_large,
@@ -1895,13 +1896,12 @@ def events_peak_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame
 
     The interesting part is doing an inherently SEQUENTIAL scan-max
     without any data-sized window: deltas collapse to per-SECOND nets
-    (cardinality ≤ elapsed seconds — bounded by TIME, not data), the
-    cross-day carry comes from a calendar-bounded day-net cumsum, and
-    the intra-day running sum is PARTITIONED BY DAY over ≤ 86400
-    second-rows — a CONSTANT bound per partition at any SF. Peak per
-    day = carry + max intra-day running net. Three bounded exchanges
-    after the session build; the session build itself is the standard
-    one-user-window shape."""
+    (cardinality ≤ elapsed seconds — bounded by TIME, not data), and
+    the running net is functions/banded.running_sums with the DAY as
+    the band (calendar-bounded band rows, ≤ 86400 second-rows per
+    within-band partition). Peak per day = max running net over its
+    seconds. The session build itself is the standard one-user-window
+    shape."""
     e = load_table(spark, sf_dir, "events")
     sec = F.expr("unix_micros(ts) div 1000000")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1936,12 +1936,11 @@ def events_peak_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame
     spans = sess.groupBy("user_id", "session_id").agg(
         F.min("sec").alias("s"), F.max("sec").alias("e")
     )
-    # r12: the +1/-1 deltas explode IN-ROW from each span (identical
-    # multiset to the former two-branch unionAll, which replanned the
-    # whole session build per branch), and the per-second net frame —
-    # bounded by elapsed SECONDS, not data — is scoped-persisted so the
-    # cross-day carry branch and the intra-day branch share one session
-    # build: 4 events scans -> 1.
+    # The +1/-1 deltas explode IN-ROW from each span (one branch, not a
+    # two-branch union that replans the session build per branch), and
+    # the per-second net frame — bounded by elapsed SECONDS, not data —
+    # is scoped-persisted so running_sums' day totals and its
+    # within-day window share one session build.
     deltas = spans.select(
         F.explode(
             F.array(
@@ -1959,27 +1958,14 @@ def events_peak_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame
     per_sec = scoped_persist(
         sec_net.select(day.alias("day_i"), "t", "net", "starts", "ends")
     )
-    day_net = per_sec.groupBy("day_i").agg(F.sum("net").alias("day_delta"))
-    w_days = Window.orderBy("day_i").rowsBetween(Window.unboundedPreceding, -1)
-    carry = day_net.select(
-        "day_i", F.coalesce(F.sum("day_delta").over(w_days), F.lit(0)).alias("carry")
-    )
-    w_in = (
-        Window.partitionBy("day_i")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    intra = per_sec.select(
-        "day_i", "starts", "ends", F.sum("net").over(w_in).alias("run")
-    )
+    run = running_sums(per_sec, "day_i", ["t"], {"run": F.col("net")})
     return (
-        intra.groupBy("day_i")
+        run.groupBy("day_i")
         .agg(
             F.sum("starts").alias("n_starts"),
             F.sum("ends").alias("n_ends"),
-            F.max("run").alias("max_run"),
+            F.max("run").alias("peak"),
         )
-        .join(F.broadcast(carry), "day_i")
         .select(
             F.date_format(
                 F.date_add(F.lit("1970-01-01").cast("date"), F.col("day_i").cast("int")),
@@ -1987,7 +1973,7 @@ def events_peak_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("day"),
             F.col("n_starts").cast("long").alias("n_starts"),
             F.col("n_ends").cast("long").alias("n_ends"),
-            (F.col("carry") + F.col("max_run")).cast("long").alias("peak_concurrent"),
+            F.col("peak").cast("long").alias("peak_concurrent"),
         )
         .orderBy("day")
     )

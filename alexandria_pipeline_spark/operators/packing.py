@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.functions.banded import running_sums
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.text import (
     duck_rolling_fingerprint,
@@ -491,8 +492,8 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Buckets for the two-phase global shuffle rank; bounds the only
-# unpartitioned window at B rows regardless of corpus size.
+# Hash-range buckets for running_sums; bounds the only unpartitioned
+# window at B rows regardless of corpus size.
 SHUFFLE_BUCKETS = 64
 
 
@@ -516,15 +517,9 @@ def corpus_shuffle_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     across runs and engines.
 
     A naive row_number over the whole corpus is a single-partition
-    sort. Instead, two-phase numbering (the technique
-    sources/parquet.py uses for shard offsets, kept fully in-plan):
-    rank within hash-range buckets (window partitioned by bucket),
-    plus each bucket's global offset (cumulative counts over a
-    B=64-row aggregate — the only unpartitioned window runs on B rows,
-    bounded by construction, not by data). Equal-width hash buckets
-    are order-preserving, so bucket_offset + local_rank IS the global
-    rank. At 100 TB: one shuffle on bucket id, one B-row window, one
-    broadcast join."""
+    sort. Instead the position is functions/banded.running_sums over
+    B=64 equal-width hash-range buckets (order-preserving, so bucket
+    order is hash order; doc_id breaks hash ties)."""
     d = load_table(spark, sf_dir, "documents")
     h = rolling_fingerprint(F.split("text", " "))
     # FP_MOD-sized hash space split into equal-width buckets;
@@ -535,17 +530,9 @@ def corpus_shuffle_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = d.select("doc_id", h.alias("h")).withColumn(
         "bucket", (F.col("h") / width).cast("long")
     )
-    counts = hashed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    offsets = counts.select(
-        "bucket",
-        (F.sum("n").over(Window.orderBy("bucket")) - F.col("n")).alias("off"),
-    )
-    w_local = Window.partitionBy("bucket").orderBy("h", "doc_id")
-    ranked = hashed.withColumn("rk", F.row_number().over(w_local) - 1)
-    return (
-        ranked.join(F.broadcast(offsets), "bucket")
-        .select("doc_id", (F.col("off") + F.col("rk")).alias("shuffle_pos"))
-    )
+    return running_sums(
+        hashed, "bucket", ["h", "doc_id"], {"pos": F.lit(1)}
+    ).select("doc_id", (F.col("pos") - 1).alias("shuffle_pos"))
 
 
 # --------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.functions.banded import running_sums
 from alexandria_pipeline_spark.functions.exact import int_div, trunc_div
 from alexandria_pipeline_spark.registry import query, scoped_persist
 
@@ -297,23 +298,18 @@ def sql_api_revenue_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / first_value over supplier — WITHOUT
     the single-partition global window the naive form plans (supplier
-    grows with SF, unlike region/nation). Two-phase global rank, the
-    corpus_shuffle_rank technique (packing.py): range-bucket on the
-    order key, rank within buckets (partitioned window), add each
-    bucket's broadcast offset. The ORDER BY (s_acctbal, s_suppkey) is
-    a total order, so rank == row_number and the distribution
-    functions are closed forms: percent_rank = (rank-1)/(N-1),
-    cume_dist = rank/N. Bucket offsets come from a triangular
-    self-join over the B=64-row count aggregate (B² = 4096 joined
-    rows, constant), so the plan contains NO unpartitioned window at
-    all — every WindowExec is partitioned. At 100 TB: one shuffle on
-    bucket id, one constant-size join, one broadcast join."""
+    grows with SF, unlike region/nation). The global rank comes from
+    functions/banded.running_sums over B=64 equal-width s_acctbal
+    buckets (data-derived bounds, monotone in s_acctbal, so bucket
+    order is the global order); its only unpartitioned window runs on
+    the ≤64 bucket rows. The ORDER BY (s_acctbal, s_suppkey) is a
+    total order, so rank == row_number and the distribution functions
+    are closed forms: percent_rank = (rank-1)/(N-1), cume_dist =
+    rank/N."""
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
     B = 64
-    # data-derived equal-width range buckets: monotone in s_acctbal, so
-    # bucket order = global order; the 1-row stats frame is broadcast
     stats = s.agg(
         F.min("s_acctbal").alias("lo"),
         F.max("s_acctbal").alias("hi"),
@@ -329,20 +325,8 @@ def window_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = s.join(F.broadcast(stats)).select(
         "s_suppkey", "s_nationkey", "s_acctbal", "n_total", bucket
     )
-    counts = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    prior = counts.select(
-        F.col("bucket").alias("pb"), F.col("n").alias("pn")
-    )
-    offsets = (
-        counts.join(prior, F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("pn"), F.lit(0)).alias("off"))
-    )
-    w_local = Window.partitionBy("bucket").orderBy("s_acctbal", "s_suppkey")
-    ranked = (
-        bucketed.withColumn("rk", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), "bucket")
-        .withColumn("rank", F.col("off") + F.col("rk"))
+    ranked = running_sums(
+        bucketed, "bucket", ["s_acctbal", "s_suppkey"], {"rank": F.lit(1)}
     )
     w_nat = (
         Window.partitionBy("s_nationkey")
@@ -2060,7 +2044,7 @@ def diagnose_bucket_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARETO_BAND_CENTS = 5_000_000  # $50k revenue bands for the two-phase cumsum
+PARETO_BAND_CENTS = 5_000_000  # $50k revenue bands for running_sums
 PARETO_TARGET_PCT = 80
 
 
@@ -2094,13 +2078,9 @@ PARETO_TARGET_PCT = 80
 def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration (Pareto 80/20): how many customers does
     it take to cover 80% of revenue? Needs a GLOBAL cumulative sum in
-    revenue-descending order — the pattern that must NOT be a
-    single-partition window at scale. Two-phase rewrite (the
-    corpus_shuffle_rank technique): bucket customers into fixed $50k
-    revenue bands, compute per-band totals (bounded rows -> 1-row-able
-    broadcast), take the exclusive running offset over BANDS, and run
-    the within-band window PARTITIONED BY band — every window here is
-    either band-cardinality-bounded or partitioned. The count of
+    revenue-descending order, taken by functions/banded.running_sums
+    over fixed $50k revenue bands (negated, so the band ascends as
+    revenue descends); o_custkey breaks revenue ties. The count of
     customers whose exclusive cumulative stays under the 80% line is
     the answer; exact integer cents throughout."""
     o = load_table(spark, sf_dir, "orders")
@@ -2108,36 +2088,16 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")).alias("rev")
     )
     banded = per_cust.withColumn(
-        "band", F.expr(f"rev div {PARETO_BAND_CENTS}")
-    )
-    band_tot = banded.groupBy("band").agg(F.sum("rev").alias("band_rev"))
-    w_bands = (
-        Window.orderBy(F.desc("band"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = band_tot.select(
-        "band",
-        F.coalesce(F.sum("band_rev").over(w_bands), F.lit(0)).alias(
-            "band_offset"
-        ),
+        "band", F.expr(f"-(rev div {PARETO_BAND_CENTS})")
     )
     tot = per_cust.agg(
         F.sum("rev").alias("total_rev"), F.count(F.lit(1)).alias("n_cust")
     )
-    w_in = (
-        Window.partitionBy("band")
-        .orderBy(F.desc("rev"), "o_custkey")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     cum = (
-        banded.join(F.broadcast(offsets), "band")
-        .select(
-            "rev",
-            (
-                F.col("band_offset")
-                + F.coalesce(F.sum("rev").over(w_in), F.lit(0))
-            ).alias("cum_before"),
+        running_sums(
+            banded, "band", [F.desc("rev"), "o_custkey"], {"cum": F.col("rev")}
         )
+        .select("rev", (F.col("cum") - F.col("rev")).alias("cum_before"))
         .crossJoin(F.broadcast(tot))
     )
     # decimal(38,0): cum_before*100 passes int64 once total revenue

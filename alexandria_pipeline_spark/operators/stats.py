@@ -7,11 +7,8 @@ All three are single-digit-shuffle plans whose outputs are integers
   - OLS slope is the closed form (n·Σxy − Σx·Σy) / (n·Σxx − Σx²) with
     the day index REBASED to the first day so the moment sums stay
     small; the final division runs in decimal(38,0) / HUGEINT.
-  - Gini needs a GLOBAL ascending rank — computed with the two-phase
-    banded technique (orders_pareto_8020 / corpus_shuffle_rank), never
-    a single-partition window: per-band counts give exclusive offsets
-    over a value-range-bounded band list, the within-band row_number
-    is partitioned by band.
+  - Gini needs a GLOBAL ascending rank — functions/banded.running_sums
+    over value-range bands, never a single-partition window.
   - Join-cardinality estimation is the planner's |join| = Σ_k n_a(k)·
     n_b(k) histogram product, plus the max single-key contribution as
     a skew diagnostic — the numbers you need BEFORE launching a 100-TB
@@ -24,10 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.functions.banded import running_sums
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.registry import query
 
-GINI_BAND_CHARS = 256  # n_chars band width for the two-phase rank
+GINI_BAND_CHARS = 256  # n_chars band width for running_sums
 
 _DEC = "decimal(38,0)"
 
@@ -122,29 +120,15 @@ def orders_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini concentration of document lengths (how unequal is the
     corpus?) via G = (2·Σi·x_i − (n+1)·Σx) / (n·Σx) over the ascending
-    global rank i. The rank is the two-phase banded rewrite: n_chars
-    div 256 bands (value-range-bounded, ≤ a few hundred rows) carry
-    the exclusive count offsets through a band-only window, and the
-    within-band row_number is PARTITIONED BY band — no single-partition
-    window anywhere (the orders_pareto_8020 discipline). One fact
-    shuffle for the band group-by, one partitioned window exchange,
-    one final 1-row aggregate; Σi·x runs in decimal(38,0) because the
+    global rank i. The rank is functions/banded.running_sums over
+    n_chars div 256 bands (value-range-bounded, ≤ a few hundred rows),
+    doc_id breaking ties; Σi·x runs in decimal(38,0) because the
     rank-weighted sum is O(n²·x̄)."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("x")
     )
     banded = d.withColumn("band", F.expr(f"x div {GINI_BAND_CHARS}"))
-    band_cnt = banded.groupBy("band").agg(F.count(F.lit(1)).alias("bn"))
-    w_bands = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = band_cnt.select(
-        "band", F.coalesce(F.sum("bn").over(w_bands), F.lit(0)).alias("off")
-    )
-    w_in = Window.partitionBy("band").orderBy("x", "doc_id")
-    ranked = (
-        banded.join(F.broadcast(offsets), "band")
-        .withColumn("i", F.col("off") + F.row_number().over(w_in))
-        .select("x", "i")
-    )
+    ranked = running_sums(banded, "band", ["x", "doc_id"], {"i": F.lit(1)})
     t = ranked.agg(
         F.count(F.lit(1)).cast(_DEC).alias("n"),
         F.sum("x").cast(_DEC).alias("s"),
@@ -659,7 +643,7 @@ def orders_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ABC_BAND_CENTS = 5_000_000  # $50k revenue bands for the two-phase cumsum
+ABC_BAND_CENTS = 5_000_000  # $50k revenue bands for running_sums
 ABC_A_PCT = 80
 ABC_B_PCT = 95
 
@@ -699,43 +683,23 @@ def orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC inventory classification of parts by revenue: class A
     covers the first 80% of cumulative revenue (descending), B the
     next 15%, C the tail — the purchasing-priority cut every supply
-    chain runs. Needs the same GLOBAL descending cumulative sum as
-    orders_pareto_8020 and reuses its two-phase banded rewrite
-    verbatim: $50k revenue bands carry exclusive offsets through a
-    band-cardinality window, the within-band cumsum is PARTITIONED BY
-    band, and the class decision is pure integer cents — no
-    single-partition window, no float. One fact shuffle (per-part
-    rollup) + bounded-band exchanges."""
+    chain runs. The GLOBAL descending cumulative sum is
+    functions/banded.running_sums over negated $50k revenue bands,
+    l_partkey breaking revenue ties; the class decision is pure
+    integer cents, no float."""
     li = load_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.expr("CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)").alias(
             "rev"
         )
     )
-    banded = per_part.withColumn("band", F.expr(f"rev div {ABC_BAND_CENTS}"))
-    band_tot = banded.groupBy("band").agg(F.sum("rev").alias("band_rev"))
-    w_bands = Window.orderBy(F.desc("band")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = band_tot.select(
-        "band",
-        F.coalesce(F.sum("band_rev").over(w_bands), F.lit(0)).alias("band_offset"),
-    )
+    banded = per_part.withColumn("band", F.expr(f"-(rev div {ABC_BAND_CENTS})"))
     tot = per_part.agg(F.sum("rev").alias("total_rev"))
-    w_in = (
-        Window.partitionBy("band")
-        .orderBy(F.desc("rev"), "l_partkey")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     cum = (
-        banded.join(F.broadcast(offsets), "band")
-        .select(
-            "rev",
-            (
-                F.col("band_offset")
-                + F.coalesce(F.sum("rev").over(w_in), F.lit(0))
-            ).alias("cum_before"),
+        running_sums(
+            banded, "band", [F.desc("rev"), "l_partkey"], {"cum": F.col("rev")}
         )
+        .select("rev", (F.col("cum") - F.col("rev")).alias("cum_before"))
         .crossJoin(F.broadcast(tot))
     )
     # All cross-class arithmetic widens to decimal(38,0) BEFORE the

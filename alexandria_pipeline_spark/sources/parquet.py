@@ -19,48 +19,37 @@ partitioned Parquet directory:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from alexandria_pipeline_spark.functions.banded import running_sums
 
 DEFAULT_ROWS_PER_SHARD = 100_000  # process.py:55
 
 
-def number_by_order(df: DataFrame, order_col: str) -> DataFrame:
+def number_by_order(df: DataFrame, order_col: str) -> tuple[DataFrame, DataFrame]:
     """Global 0-based row numbers by order_col WITHOUT a global sort.
 
-    repartitionByRange spreads the total order across partitions, each
-    partition numbers its own rows (a PARTITIONED window — never the
-    single-partition Window.orderBy that melts at 100 TB), and the
-    per-partition row counts (one tiny row per partition) turn into
-    broadcast offsets. The ranged frame is persisted so the range
-    boundaries sampled for the count job and the numbering job are the
-    same ones. order_col must be unique for the numbering to be
-    deterministic (true of every id column in this repo); ties would
-    be nondeterministic under ANY global-numbering scheme, including
-    the naive global window.
+    repartitionByRange spreads the total order across partitions, so
+    the partition id is a band that rises with order_col, and the
+    numbering is functions/banded.running_sums over it: per-partition
+    counts become offsets in-plan, with no driver action. The ranged
+    frame is persisted so the range boundaries sampled for the counts
+    and for the numbering are the same ones. order_col must be unique
+    for the numbering to be deterministic (true of every id column in
+    this repo); ties would be nondeterministic under ANY
+    global-numbering scheme, including the naive global window.
 
     Returns (numbered_df, persist_handle): the caller unpersists the
-    handle after its terminal action — the persist must stay alive so
-    the sampled range boundaries used for the offsets are the ones the
-    main job reads."""
+    handle after its terminal action — the persist must stay alive
+    until then so both reads of the ranged frame see one partitioning."""
     ranged = (
         df.repartitionByRange(F.col(order_col))
         .sortWithinPartitions(order_col)
         .withColumn("_pid", F.spark_partition_id())
     )
     ranged.persist()
-    counts = {r["_pid"]: r["count"] for r in ranged.groupBy("_pid").count().collect()}
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off = df.sparkSession.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(order_col)
-    numbered = (
-        ranged.join(F.broadcast(off), "_pid")
-        .withColumn("_rn", F.col("_off") + F.row_number().over(w) - 1)
-        .drop("_pid", "_off")
-    )
-    return numbered, ranged
+    numbered = running_sums(ranged, "_pid", [order_col], {"_rn": F.lit(1)})
+    return numbered.select(*df.columns, (F.col("_rn") - 1).alias("_rn")), ranged
 
 
 def write_sharded(

@@ -353,11 +353,14 @@ def test_jaccard_neighbors_sketches_above_gate(spark, monkeypatch):
 
 
 def test_window_distribution_has_no_unpartitioned_window(spark):
-    """window_distribution_funcs computes percent_rank/cume_dist via
-    two-phase bucket ranks + closed forms — the single-partition
-    global window (supplier grows with SF) must never reappear. Every
-    Window node in the plan must carry a partition spec, and the
-    native distribution window functions must be gone."""
+    """window_distribution_funcs computes percent_rank/cume_dist as
+    closed forms over a running_sums rank — the single-partition
+    global window over supplier rows (supplier grows with SF) must
+    never reappear. No window may be ordered by s_acctbal without the
+    s_nationkey partition (the only unpartitioned window is the
+    helper's offset window over ≤64 bucket rows, declared "banded" in
+    UNPART_WINDOW_BOUNDS), and the native distribution window
+    functions must be gone."""
     plan = formatted_plan(QUERIES["window_distribution_funcs"](spark, SF_SMOKE))
     # function-call form with paren — the output aliases legitimately
     # contain the substrings (bal_pct_rank / bal_cume_dist)
@@ -535,6 +538,7 @@ UNPART_WINDOW_BOUNDS = {
     "events_watermark_lateness_curve": "banded",
     "orders_abc_classification": "banded",
     "orders_pareto_8020": "banded",
+    "window_distribution_funcs": "banded",
     "events_changepoint_binseg": "calendar",
     "events_cumulative_distinct_users": "calendar",
     "events_peak_concurrency_daily": "calendar",

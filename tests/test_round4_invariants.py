@@ -1,7 +1,8 @@
 """Invariant tests for the round-4 operators — properties the DuckDB
 oracles can't express (they check equality, not internal consistency):
-compaction bin-packing bounds, snapshot-diff partition algebra, Pareto
-coverage guarantees, and feature-matrix non-negativity."""
+compaction bin-packing bounds, snapshot-diff partition algebra and
+feature-matrix non-negativity. The Pareto coverage guarantee is in
+test_banded.py."""
 
 from __future__ import annotations
 
@@ -51,29 +52,6 @@ def test_snapshot_diff_partition_algebra(spark):
     assert rows["deleted"]["n"] == k4
     assert rows["changed"]["n"] == k3
     assert rows["unchanged"]["n"] == total - k7 - k4 - k3
-
-
-def test_pareto_coverage_guarantee(spark):
-    register_all()
-    row = QUERIES["orders_pareto_8020"](spark, SF_SMOKE).collect()[0]
-    assert 0 < row["n_cust_for_80pct"] <= row["n_customers"]
-    # taking the top n_cust_for_80pct customers must reach >= 80% revenue:
-    import duckdb
-
-    got = duckdb.sql(
-        f"""
-        WITH per_cust AS (
-          SELECT o_custkey,
-                 sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev
-          FROM '{SF_SMOKE}/orders.parquet' GROUP BY 1
-        ), tot AS (SELECT sum(rev) AS t FROM per_cust)
-        SELECT sum(rev) FROM (
-          SELECT rev FROM per_cust ORDER BY rev DESC, o_custkey
-          LIMIT {row['n_cust_for_80pct']}
-        ), tot GROUP BY t HAVING sum(rev) * 100 >= t * 80
-        """
-    ).fetchall()
-    assert got, "top-k customers do not cover 80% of revenue"
 
 
 def test_feature_matrix_domains(spark):

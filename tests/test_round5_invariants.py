@@ -129,23 +129,6 @@ def test_type_affinity_bounds(spark):
         assert r["lift_ppm"] > 0
 
 
-def test_quality_decile_budget_partitions_corpus(spark):
-    from alexandria_pipeline_spark.catalog import load_table
-
-    rows = QUERIES["curation_quality_decile_budget"](spark, SF_SMOKE).collect()
-    n_docs = load_table(spark, SF_SMOKE, "documents").count()
-    assert sum(r["n_docs"] for r in rows) == n_docs
-    assert {r["decile"] for r in rows} <= set(range(10))
-    share = sum(r["token_share_ppm"] for r in rows)
-    assert 1_000_000 - len(rows) <= share <= 1_000_000
-    # deciles are quality-ordered: max quality of decile d cannot
-    # exceed min quality of decile d+2 (ties may straddle adjacent
-    # deciles but not skip one)
-    rows.sort(key=lambda r: r["decile"])
-    for a, b in zip(rows, rows[2:]):
-        assert a["max_quality_e6"] <= b["min_quality_e6"]
-
-
 def test_fulfillment_latency_ordering(spark):
     rows = QUERIES["orders_fulfillment_latency_percentiles"](
         spark, SF_SMOKE
@@ -204,19 +187,6 @@ def test_centroid_drift_consistency(spark):
     for r in rows:
         assert (r["n_even"], r["n_odd"]) == per_label[r["label"]]
         assert 0 <= r["max_dim_drift_e6"] <= r["l1_drift_e6"]
-
-
-def test_peak_concurrency_bounds(spark):
-    """Peak concurrency is at least the busiest second's session-start
-    count and at most the total session count; starts and ends
-    balance globally (every session emits exactly one +1 and one -1)."""
-    rows = QUERIES["events_peak_concurrency_daily"](spark, SF_SMOKE).collect()
-    assert rows
-    total_starts = sum(r["n_starts"] for r in rows)
-    total_ends = sum(r["n_ends"] for r in rows)
-    assert total_starts == total_ends
-    for r in rows:
-        assert 0 <= r["peak_concurrent"] <= total_starts
 
 
 def test_compression_ratio_invariants(spark):

@@ -351,31 +351,6 @@ def test_mix_temperature_compresses_shares(spark):
     assert 1_000_000 - len(rows) <= s <= 1_000_000
 
 
-def test_ccnet_terciles_are_balanced_and_ordered(spark):
-    """Per language: bucket sizes differ by at most 1 (exact integer
-    terciles), bucket surprisal ranges are non-overlapping up to ties,
-    and doc counts reconcile with the corpus."""
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    rows = QUERIES["corpus_ccnet_perplexity_buckets"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    by_lang: dict[str, list] = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append(r)
-    for lang, rs in by_lang.items():
-        rs = sorted(rs, key=lambda r: r["bucket"])
-        sizes = [r["n_docs"] for r in rs]
-        assert max(sizes) - min(sizes) <= 1, (lang, sizes)
-        for prev, cur in zip(rs, rs[1:]):
-            assert cur["min_mbits"] >= prev["max_mbits"] - 0, (
-                lang,
-                prev,
-                cur,
-            )
-
-
 def test_watermark_curve_is_monotone(spark):
     """More watermark delay can only drop FEWER events; W spans the
     candidate list; ppm is consistent with the raw count."""
@@ -867,75 +842,6 @@ def test_pareto_alpha_is_a_tail_exponent(spark):
     for r in rows:
         assert r["alpha_micro"] > 1_000_000
         assert r["sum_ln_micro"] > 0
-
-
-def test_quality_auc_matches_bruteforce_mann_whitney(spark):
-    """curation_quality_auc's banded rank-sum must equal the O(n_pos *
-    n_neg) pairwise definition (ties count half) computed in numpy from
-    the same scored frame."""
-    import numpy as np
-
-    from alexandria_pipeline_spark.operators.curation import _ql_feats, _ql_z_e6
-    from alexandria_pipeline_spark.catalog import load_table
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    sf = "/root/testdata/sf0.001"
-    d = load_table(spark, sf, "documents")
-    rows = _ql_feats(d).select("lang", _ql_z_e6().alias("z")).collect()
-    pos = np.array([r["z"] for r in rows if r["lang"] == "en"], dtype=np.int64)
-    neg = np.array([r["z"] for r in rows if r["lang"] != "en"], dtype=np.int64)
-    wins = (pos[:, None] > neg[None, :]).sum()
-    ties = (pos[:, None] == neg[None, :]).sum()
-    # doubled numerator keeps the half-tie credit integral
-    expect_ppm = (2 * int(wins) + int(ties)) * 1_000_000 // (2 * len(pos) * len(neg))
-
-    out = QUERIES["curation_quality_auc"](spark, sf).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["n_pos"] == len(pos) and r["n_neg"] == len(neg)
-    assert r["auc_ppm"] == expect_ppm, (r["auc_ppm"], expect_ppm)
-    assert 0 <= r["auc_ppm"] <= 1_000_000
-
-
-def test_score_ks_drift_matches_bruteforce_ecdf(spark):
-    """corpus_score_ks_drift's banded max-gap must equal the direct
-    ECDF scan over the same scored frame, including the earliest-score
-    tie-break."""
-    from collections import Counter
-
-    from alexandria_pipeline_spark.operators.curation import _ql_feats, _ql_z_e6
-    from alexandria_pipeline_spark.catalog import load_table
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-    from pyspark.sql import functions as F
-
-    register_all()
-    sf = "/root/testdata/sf0.001"
-    d = load_table(spark, sf, "documents")
-    rows = (
-        _ql_feats(d)
-        .select((F.col("doc_id") % 2).alias("snap"), _ql_z_e6().alias("z"))
-        .collect()
-    )
-    ca = Counter(r["z"] for r in rows if r["snap"] == 0)
-    cb = Counter(r["z"] for r in rows if r["snap"] == 1)
-    na, nb = sum(ca.values()), sum(cb.values())
-    cum_a = cum_b = 0
-    best_g, best_z = -1, None
-    for z in sorted(set(ca) | set(cb)):
-        cum_a += ca.get(z, 0)
-        cum_b += cb.get(z, 0)
-        g = abs(cum_a * nb - cum_b * na)
-        if g > best_g:
-            best_g, best_z = g, z
-
-    out = QUERIES["corpus_score_ks_drift"](spark, sf).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["n_a"], r["n_b"]) == (na, nb)
-    assert r["ks_gap_ppm"] == best_g * 1_000_000 // (na * nb)
-    assert r["at_score_e6"] == best_z
-    assert 0 <= r["ks_gap_ppm"] <= 1_000_000
 
 
 def test_bench_gate_parser_survives_gate_artifacts():
