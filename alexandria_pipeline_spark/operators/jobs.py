@@ -110,13 +110,16 @@ def run_chunked_embedding_job(
     spark: SparkSession,
     sf_dir: str,
     output_path: str,
-    chunk_tokens: int = 16,
 ) -> DataFrame:
     """§3.2 run_extra.py: chunk → embed → length-weighted mean pool →
     sharded sink. Reuses the chunk_embed_pool operator plan, then
     reassembles its exploded (doc_id, dim, v) exchange rows into the
-    array-per-doc product format the parquet sink ships."""
-    from alexandria_pipeline_spark.operators.pipeline import chunk_embed_pool
+    array-per-doc product format the parquet sink ships. The chunk width
+    is the pool's CHUNK_TOKENS, which the sidecar records."""
+    from alexandria_pipeline_spark.operators.pipeline import (
+        CHUNK_TOKENS,
+        chunk_embed_pool,
+    )
 
     pooled = (
         chunk_embed_pool(spark, sf_dir)
@@ -129,7 +132,7 @@ def run_chunked_embedding_job(
     write_sharded(pooled, output_path)
     _write_run_metadata(
         output_path,
-        {"job": "chunked_embedding", "source": sf_dir, "chunk_tokens": chunk_tokens},
+        {"job": "chunked_embedding", "source": sf_dir, "chunk_tokens": CHUNK_TOKENS},
     )
     return spark.read.parquet(output_path)
 

@@ -6,13 +6,33 @@ Vector math is pure `zip_with`/`aggregate` (JVM codegen, no UDF) from
 functions.vectors; a Pandas-UDF variant of the same dot product is
 unit-tested for parity in tests/test_functions.py (the slot where a
 BLAS batch kernel would go at very high dims).
+
+Every step the vector-search queries share has one definition per
+engine (Spark helper / DuckDB text helper):
+- `_queries` / `_duck_queries`: the QUERY_IDS query vectors;
+- `_seed` / `_duck_seed`: the seeded centroids (first N_CENTROIDS
+  vectors);
+- `_assign` / `_duck_assign`: nearest-centroid assignment, argmin of a
+  distance with ties to the lowest c_id (`_neg_dot` / `_duck_neg_dot`
+  turn the argmax-dot callers into argmin callers);
+- `_train_centroids` / `_duck_train_centroids`: the KMEANS_ITERS Lloyd
+  steps in exact integer micros;
+- `_probe_ranks` / `_duck_probes`: centroids ranked per query;
+- `_scan_corpus`, `_scan_clusters` / `_duck_scan_corpus`,
+  `_duck_scan_clusters`: (query, neighbor, score) candidates from the
+  whole corpus or from the probed clusters;
+- `_top_k` / `_duck_top_k`: the per-query top-k by (score desc,
+  neighbor_id), cos_sim = round(score, 6);
+- `_duck_recall`: the recall@k read-out, `_duck_knn_ranked`: the
+  knn-eval oracles' gated candidate ranking, `_PQ_ADC_SQL`: both PQ
+  oracles' ADC block.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from alexandria_pipeline_spark.catalog import load_table, spread_to_cores
+from alexandria_pipeline_spark.catalog import load_table
 from alexandria_pipeline_spark.functions.exact import int_div
 from alexandria_pipeline_spark.functions.vectors import (
     cosine,
@@ -35,29 +55,198 @@ QUERY_IDS = (0, 1, 2)
 N_CENTROIDS = 8
 
 
-@query(
-    "knn_brute_force",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS q_emb
-      FROM embeddings WHERE vec_id IN {QUERY_IDS}
-    ),
-    scored AS (
-      SELECT
-        q.query_id,
-        e.vec_id AS neighbor_id,
-        {duck_dot('q.q_emb', 'e.embedding')} AS score
-      FROM q CROSS JOIN embeddings e
-      WHERE e.vec_id <> q.query_id
+def _queries(df: DataFrame, *extra: Column, emb: Column | None = None) -> DataFrame:
+    """The QUERY_IDS rows of `df` as (query_id, q_emb, *extra)."""
+    return df.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
+        F.col("vec_id").alias("query_id"),
+        (F.col("embedding") if emb is None else emb).alias("q_emb"),
+        *extra,
     )
-    SELECT query_id, neighbor_id, round(score, 6) + 0 AS cos_sim, CAST(rk AS INT) AS rk
+
+
+def _duck_queries(src: str = "embeddings", extra: str = "", emb: str = "embedding") -> str:
+    return (
+        f"SELECT vec_id AS query_id, {emb} AS q_emb{extra} "
+        f"FROM {src} WHERE vec_id IN {QUERY_IDS}"
+    )
+
+
+def _seed(df: DataFrame) -> DataFrame:
+    """Deterministic centroid seed: the first N_CENTROIDS vectors of
+    `df` as (c_id, c_emb) — the oracle-expressible stand-in for a
+    k-means init."""
+    return df.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
+    )
+
+
+def _duck_seed(src: str = "embeddings") -> str:
+    return (
+        f"SELECT vec_id AS c_id, embedding AS c_emb "
+        f"FROM {src} WHERE vec_id < {N_CENTROIDS}"
+    )
+
+
+def _neg_dot(a, b) -> Column:
+    """Argmax-dot as an argmin distance: negation is exact, so -dot
+    ascending orders (and ties) exactly as dot descending."""
+    return -dot(a, b)
+
+
+def _duck_neg_dot(a: str, b: str) -> str:
+    return f"-({duck_dot(a, b)})"
+
+
+def _assign(src: DataFrame, cents: DataFrame, dist=l2_dist2) -> DataFrame:
+    """Nearest centroid of every `src` vector as (vec_id, cluster_id,
+    dist): argmin of dist(embedding, c_emb), ties to the lowest c_id.
+
+    One narrow grouped min(struct(dist, c_id)) over the broadcast
+    cross join — the struct order IS "lowest dist, then lowest c_id",
+    so it equals the row_number window on identical per-pair values.
+    Only (vec_id, c_id, dist) reach the aggregate: its map-side partial
+    collapses the K candidates of a vector before the exchange, which
+    carries one (vec_id, struct) row per vector and no array (a window
+    form shuffles all n·K crossed rows with the vector on each). The
+    struct buffer is not fixed-width, so Spark plans a SortAggregate.
+    Callers that need the vector back join `src` on vec_id."""
+    return (
+        src.crossJoin(F.broadcast(cents))
+        .select("vec_id", "c_id", dist("embedding", "c_emb").alias("dist"))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("dist", "c_id")).alias("m"))
+        .select(
+            "vec_id",
+            F.col("m.c_id").alias("cluster_id"),
+            F.col("m.dist").alias("dist"),
+        )
+    )
+
+
+def _duck_assign(src: str, cents: str, dist=duck_l2_dist2) -> str:
+    """`_assign` in DuckDB: (vec_id, embedding, cluster_id, dist)."""
+    d = dist("e.embedding", "c.c_emb")
+    return f"""
+      SELECT vec_id, embedding, c_id AS cluster_id, dist FROM (
+        SELECT e.vec_id, e.embedding, c.c_id, {d} AS dist,
+          row_number() OVER (PARTITION BY e.vec_id ORDER BY {d}, c.c_id) AS rn
+        FROM {src} e CROSS JOIN {cents} c
+      ) WHERE rn = 1"""
+
+
+def _probe_ranks(q: DataFrame, cents: DataFrame) -> DataFrame:
+    """Every centroid ranked per query by dot desc, ties to the lowest
+    c_id: (query_id, q_emb, probe_cluster, rn) — Q·K rows."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("p_score"), F.asc("c_id"))
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .withColumn("p_score", dot("q_emb", "c_emb"))
+        .withColumn("rn", F.row_number().over(w))
+        .select("query_id", "q_emb", F.col("c_id").alias("probe_cluster"), "rn")
+    )
+
+
+def _duck_probes(nprobe: int, q: str = "q", cents: str = "centroids") -> str:
+    return f"""
+      SELECT query_id, q_emb, c_id AS probe_cluster FROM (
+        SELECT q.query_id, q.q_emb, c.c_id,
+          row_number() OVER (
+            PARTITION BY q.query_id
+            ORDER BY {duck_dot('q.q_emb', 'c.c_emb')} DESC, c.c_id
+          ) AS rn
+        FROM {q} q CROSS JOIN {cents} c
+      ) WHERE rn <= {nprobe}"""
+
+
+def _scan_corpus(q: DataFrame, e: DataFrame, score: Column | None = None) -> DataFrame:
+    """Broadcast query vectors crossed with the whole corpus, self-pairs
+    dropped: (query_id, neighbor_id, score), score = dot by default."""
+    return (
+        F.broadcast(q)
+        .crossJoin(e)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            (dot("q_emb", "embedding") if score is None else score).alias("score"),
+        )
+    )
+
+
+def _duck_scan_corpus(score: str | None = None) -> str:
+    score = duck_dot("q.q_emb", "e.embedding") if score is None else score
+    return f"""
+      SELECT q.query_id, e.vec_id AS neighbor_id, {score} AS score
+      FROM q CROSS JOIN embeddings e
+      WHERE e.vec_id <> q.query_id"""
+
+
+def _scan_clusters(probes: DataFrame, assigned: DataFrame, probe_col: str) -> DataFrame:
+    """Score each query against the vectors of its probed cluster(s):
+    the (query, probe) rows broadcast-joined to the assigned corpus on
+    cluster_id — with the corpus bucketed by cluster_id, partition
+    pruning IS the probe. (query_id, neighbor_id, cluster_id, score)."""
+    return (
+        F.broadcast(probes)
+        .join(
+            assigned,
+            (F.col("cluster_id") == F.col(probe_col))
+            & (F.col("vec_id") != F.col("query_id")),
+        )
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "cluster_id",
+            dot("q_emb", "embedding").alias("score"),
+        )
+    )
+
+
+def _duck_scan_clusters(probes: str, assigned: str, probe_col: str) -> str:
+    return f"""
+      SELECT p.query_id, a.vec_id AS neighbor_id, a.cluster_id,
+             {duck_dot('p.q_emb', 'a.embedding')} AS score
+      FROM {probes} p JOIN {assigned} a
+        ON a.cluster_id = p.{probe_col} AND a.vec_id <> p.query_id"""
+
+
+def _top_k(scored: DataFrame, *keep: str) -> DataFrame:
+    """Per-query top-TOP_K of (query_id, neighbor_id, score) rows by
+    score desc, ties to the lowest neighbor_id, as (query_id,
+    neighbor_id, *keep, cos_sim, rk). Only k·Q rows survive the one
+    query_id exchange."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            *keep,
+            (F.round("score", 6) + 0.0).alias("cos_sim"),
+            F.col("rk").cast("int").alias("rk"),
+        )
+    )
+
+
+def _duck_top_k(scored: str, keep: str = "") -> str:
+    return f"""
+    SELECT query_id, neighbor_id, {keep}round(score, 6) + 0 AS cos_sim,
+           CAST(rk AS INT) AS rk
     FROM (
       SELECT *, row_number() OVER (
         PARTITION BY query_id ORDER BY score DESC, neighbor_id
-      ) AS rk
-      FROM scored
+      ) AS rk FROM {scored}
     )
-    WHERE rk <= {TOP_K}
+    WHERE rk <= {TOP_K}"""
+
+
+@query(
+    "knn_brute_force",
+    oracle=f"""
+    WITH q AS ({_duck_queries()}),
+    scored AS ({_duck_scan_corpus()})
+    {_duck_top_k('scored')}
     """,
 )
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,73 +257,23 @@ def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard exact-ANN baseline. Vectors are unit-norm so
     dot == cosine."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(e)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot("q_emb", "embedding").alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.round("score", 6) + 0.0).alias("cos_sim"),
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _top_k(_scan_corpus(_queries(e), e))
+
+
+def _duck_ivf_ctes() -> str:
+    """The seeded-centroid IVF oracles' `centroids` and `assigned` CTEs."""
+    return f"""
+    centroids AS ({_duck_seed()}),
+    assigned AS ({_duck_assign('embeddings', 'centroids', _duck_neg_dot)})"""
 
 
 @query(
     "knn_ivf_pruned",
     oracle=f"""
-    WITH centroids AS (
-      SELECT vec_id AS c_id, embedding AS c_emb
-      FROM embeddings WHERE vec_id < {N_CENTROIDS}
-    ),
-    assigned AS (
-      SELECT vec_id, embedding, c_id AS cluster_id
-      FROM (
-        SELECT
-          e.vec_id, e.embedding, c.c_id,
-          row_number() OVER (
-            PARTITION BY e.vec_id
-            ORDER BY {duck_dot('e.embedding', 'c.c_emb')} DESC, c.c_id
-          ) AS rn
-        FROM embeddings e CROSS JOIN centroids c
-      )
-      WHERE rn = 1
-    ),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS q_emb, cluster_id AS q_cluster
-      FROM assigned WHERE vec_id IN {QUERY_IDS}
-    ),
-    scored AS (
-      SELECT
-        q.query_id,
-        a.vec_id AS neighbor_id,
-        a.cluster_id,
-        {duck_dot('q.q_emb', 'a.embedding')} AS score
-      FROM q JOIN assigned a
-        ON a.cluster_id = q.q_cluster AND a.vec_id <> q.query_id
-    )
-    SELECT query_id, neighbor_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-           round(score, 6) + 0 AS cos_sim, CAST(rk AS INT) AS rk
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id
-      ) AS rk FROM scored
-    )
-    WHERE rk <= {TOP_K}
+    WITH {_duck_ivf_ctes()},
+    q AS ({_duck_queries('assigned', ', cluster_id AS q_cluster')}),
+    scored AS ({_duck_scan_clusters('q', 'assigned', 'q_cluster')})
+    {_duck_top_k('scored', 'CAST(cluster_id AS BIGINT) AS cluster_id, ')}
     """,
 )
 def knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,55 +283,15 @@ def knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each query searches only its own cluster.
 
     Scale path: centroid assignment is a broadcast NLJ (centroid table
-    is always tiny) + argmax window; the search join hits 1/n_clusters
-    of the corpus per query. At 100 TB this is the layout you'd persist
-    — corpus parquet *bucketed by cluster_id* — so a query reads one
-    bucket: partition pruning does the IVF probe."""
+    is always tiny) + the narrow argmax aggregate (_assign); the search
+    join hits 1/n_clusters of the corpus per query. At 100 TB this is
+    the layout you'd persist — corpus parquet *bucketed by cluster_id*
+    — so a query reads one bucket: partition pruning does the IVF
+    probe."""
     e = load_table(spark, sf_dir, "embeddings")
-    c = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("c_score"), F.asc("c_id")
-    )
-    assigned = (
-        e.crossJoin(F.broadcast(c))
-        .withColumn("c_score", dot("embedding", "c_emb"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", F.col("c_id").alias("cluster_id"))
-    )
-    q = assigned.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cluster_id").alias("q_cluster"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            assigned,
-            (assigned.cluster_id == F.col("q_cluster"))
-            & (assigned.vec_id != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cluster_id",
-            dot("q_emb", "embedding").alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-            (F.round("score", 6) + 0.0).alias("cos_sim"),
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    assigned = e.join(_assign(e, _seed(e), _neg_dot), "vec_id")
+    q = _queries(assigned, F.col("cluster_id").alias("q_cluster"))
+    return _top_k(_scan_clusters(q, assigned, "q_cluster"), "cluster_id")
 
 
 NPROBE = 3  # clusters searched per query in the multi-probe variant
@@ -201,57 +300,11 @@ NPROBE = 3  # clusters searched per query in the multi-probe variant
 @query(
     "knn_ivf_multiprobe",
     oracle=f"""
-    WITH centroids AS (
-      SELECT vec_id AS c_id, embedding AS c_emb
-      FROM embeddings WHERE vec_id < {N_CENTROIDS}
-    ),
-    assigned AS (
-      SELECT vec_id, embedding, c_id AS cluster_id
-      FROM (
-        SELECT
-          e.vec_id, e.embedding, c.c_id,
-          row_number() OVER (
-            PARTITION BY e.vec_id
-            ORDER BY {duck_dot('e.embedding', 'c.c_emb')} DESC, c.c_id
-          ) AS rn
-        FROM embeddings e CROSS JOIN centroids c
-      )
-      WHERE rn = 1
-    ),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS q_emb
-      FROM embeddings WHERE vec_id IN {QUERY_IDS}
-    ),
-    probes AS (
-      SELECT query_id, q_emb, c_id AS probe_cluster
-      FROM (
-        SELECT
-          q.query_id, q.q_emb, c.c_id,
-          row_number() OVER (
-            PARTITION BY q.query_id
-            ORDER BY {duck_dot('q.q_emb', 'c.c_emb')} DESC, c.c_id
-          ) AS rn
-        FROM q CROSS JOIN centroids c
-      )
-      WHERE rn <= {NPROBE}
-    ),
-    scored AS (
-      SELECT
-        p.query_id,
-        a.vec_id AS neighbor_id,
-        a.cluster_id,
-        {duck_dot('p.q_emb', 'a.embedding')} AS score
-      FROM probes p JOIN assigned a
-        ON a.cluster_id = p.probe_cluster AND a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-           round(score, 6) + 0 AS cos_sim, CAST(rk AS INT) AS rk
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id
-      ) AS rk FROM scored
-    )
-    WHERE rk <= {TOP_K}
+    WITH {_duck_ivf_ctes()},
+    q AS ({_duck_queries()}),
+    probes AS ({_duck_probes(NPROBE)}),
+    scored AS ({_duck_scan_clusters('probes', 'assigned', 'probe_cluster')})
+    {_duck_top_k('scored', 'CAST(cluster_id AS BIGINT) AS cluster_id, ')}
     """,
 )
 def knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,58 +322,10 @@ def knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus parquet bucketed by cluster_id a query reads exactly
     nprobe buckets — partition pruning IS the probe."""
     e = load_table(spark, sf_dir, "embeddings")
-    c = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("c_score"), F.asc("c_id")
-    )
-    assigned = (
-        e.crossJoin(F.broadcast(c))
-        .withColumn("c_score", dot("embedding", "c_emb"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", F.col("c_id").alias("cluster_id"))
-    )
-    q = e.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("p_score"), F.asc("c_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(c))
-        .withColumn("p_score", dot("q_emb", "c_emb"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= NPROBE)
-        .select("query_id", "q_emb", F.col("c_id").alias("probe_cluster"))
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(
-            assigned,
-            (assigned.cluster_id == F.col("probe_cluster"))
-            & (assigned.vec_id != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cluster_id",
-            dot("q_emb", "embedding").alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-            (F.round("score", 6) + 0.0).alias("cos_sim"),
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    c = _seed(e)
+    assigned = e.join(_assign(e, c, _neg_dot), "vec_id")
+    probes = _probe_ranks(_queries(e), c).filter(F.col("rn") <= NPROBE)
+    return _top_k(_scan_clusters(probes, assigned, "probe_cluster"), "cluster_id")
 
 
 # Lloyd iteration count for the oracle-checked k-means IVF: enough to
@@ -328,89 +333,78 @@ def knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the seed Voronoi cells), small enough that the unrolled oracle CTE
 # chain stays readable — the PageRank unrolled-iteration precedent.
 KMEANS_ITERS = 2
-KMEANS_DIM = 64  # embeddings table dimension (TESTDATA.md)
+
+
+def _train_centroids(src: DataFrame) -> DataFrame:
+    """The seeded centroids of `src` after KMEANS_ITERS Lloyd steps, as
+    (c_id, c_emb). Each step assigns by argmin squared-L2 (_assign),
+    re-attaches the vectors by one vec_id equi-join, and updates in the
+    repo's exact-integer convention: component sums in round(x*1e6)
+    micros (exact associative int64 — float sums over rows would
+    order-diverge across engines), truncating division by the member
+    count, /1e6 back to double. Empty clusters drop (inner-join
+    semantics in both engines). Nothing is persisted: a query reading
+    the trained centroids twice shares the chain's exchanges through
+    exchange reuse (persisting each step ran 9 more jobs and was no
+    faster at sf0.1)."""
+    cents = _seed(src)
+    for _ in range(KMEANS_ITERS):
+        upd = (
+            src.join(_assign(src, cents), "vec_id")
+            .select("cluster_id", F.posexplode("embedding").alias("d0", "x"))
+            .groupBy("cluster_id", (F.col("d0") + 1).alias("d"))
+            .agg(
+                F.sum(
+                    F.round(F.col("x").cast("double") * 1_000_000).cast("long")
+                ).alias("s"),
+                F.count(F.lit(1)).cast("long").alias("n"),
+            )
+        )
+        cents = (
+            upd.select(
+                "cluster_id",
+                F.struct(
+                    "d", (int_div(F.col("s"), F.col("n")) / 1e6).alias("c")
+                ).alias("dc"),
+            )
+            .groupBy(F.col("cluster_id").alias("c_id"))
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list("dc")), lambda s: s["c"]
+                ).alias("c_emb")
+            )
+        )
+    return cents
+
+
+def _duck_train_centroids(src: str) -> str:
+    """`_train_centroids` as CTEs c0 .. c{KMEANS_ITERS} over `src`."""
+    ctes = [f"c0 AS ({_duck_seed(src)})"]
+    for i in range(KMEANS_ITERS):
+        ctes.append(f"""a{i} AS ({_duck_assign(src, f'c{i}')}),
+    c{i + 1} AS (
+      SELECT cluster_id AS c_id,
+             list(CAST(s // n AS BIGINT) / 1000000.0 ORDER BY d) AS c_emb
+      FROM (
+        SELECT cluster_id, d,
+               CAST(sum(CAST(round(CAST(embedding[d] AS DOUBLE) * 1000000)
+                        AS BIGINT)) AS BIGINT) AS s,
+               CAST(count(*) AS BIGINT) AS n
+        FROM a{i}, (SELECT unnest(range(1, {EMBED_DIM} + 1)) AS d) dims
+        GROUP BY cluster_id, d
+      ) GROUP BY cluster_id
+    )""")
+    return ",\n    ".join(ctes)
 
 
 @query(
     "knn_ivf_kmeans",
-    oracle=f"""WITH c0 AS (
-      SELECT vec_id AS c_id, embedding AS c_emb
-      FROM embeddings WHERE vec_id < {N_CENTROIDS}
-    ),
-    a0 AS (
-      SELECT vec_id, embedding, c_id AS cluster_id FROM (
-        SELECT e.vec_id, e.embedding, c.c_id,
-          row_number() OVER (
-            PARTITION BY e.vec_id
-            ORDER BY {duck_l2_dist2('e.embedding', 'c.c_emb')} ASC, c.c_id
-          ) AS rn
-        FROM embeddings e CROSS JOIN c0 c
-      ) WHERE rn = 1
-    ),
-    u1 AS (
-      SELECT cluster_id, d,
-             CAST(sum(CAST(round(CAST(embedding[d] AS DOUBLE) * 1000000)
-                      AS BIGINT)) AS BIGINT) AS s,
-             CAST(count(*) AS BIGINT) AS n
-      FROM a0, (SELECT unnest(range(1, {KMEANS_DIM} + 1)) AS d) dims
-      GROUP BY cluster_id, d
-    ),
-    c1 AS (
-      SELECT cluster_id AS c_id,
-             list(CAST(s // n AS BIGINT) / 1000000.0 ORDER BY d) AS c_emb
-      FROM u1 GROUP BY cluster_id
-    ),
-    a1 AS (
-      SELECT vec_id, embedding, c_id AS cluster_id FROM (
-        SELECT e.vec_id, e.embedding, c.c_id,
-          row_number() OVER (
-            PARTITION BY e.vec_id
-            ORDER BY {duck_l2_dist2('e.embedding', 'c.c_emb')} ASC, c.c_id
-          ) AS rn
-        FROM embeddings e CROSS JOIN c1 c
-      ) WHERE rn = 1
-    ),
-    u2 AS (
-      SELECT cluster_id, d,
-             CAST(sum(CAST(round(CAST(embedding[d] AS DOUBLE) * 1000000)
-                      AS BIGINT)) AS BIGINT) AS s,
-             CAST(count(*) AS BIGINT) AS n
-      FROM a1, (SELECT unnest(range(1, {KMEANS_DIM} + 1)) AS d) dims
-      GROUP BY cluster_id, d
-    ),
-    c2 AS (
-      SELECT cluster_id AS c_id,
-             list(CAST(s // n AS BIGINT) / 1000000.0 ORDER BY d) AS c_emb
-      FROM u2 GROUP BY cluster_id
-    ),
-    fin AS (
-      SELECT vec_id, embedding, c_id AS cluster_id FROM (
-        SELECT e.vec_id, e.embedding, c.c_id,
-          row_number() OVER (
-            PARTITION BY e.vec_id
-            ORDER BY {duck_l2_dist2('e.embedding', 'c.c_emb')} ASC, c.c_id
-          ) AS rn
-        FROM embeddings e CROSS JOIN c2 c
-      ) WHERE rn = 1
-    ),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS q_emb, cluster_id AS q_cluster
-      FROM fin WHERE vec_id IN {QUERY_IDS}
-    ),
-    scored AS (
-      SELECT q.query_id, a.vec_id AS neighbor_id,
-             {duck_dot('q.q_emb', 'a.embedding')} AS score
-      FROM q JOIN fin a
-        ON a.cluster_id = q.q_cluster AND a.vec_id <> q.query_id
-    )
-    SELECT query_id, neighbor_id, round(score, 6) + 0 AS cos_sim,
-           CAST(rk AS INT) AS rk
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id
-      ) AS rk FROM scored
-    )
-    WHERE rk <= {TOP_K}
+    oracle=f"""
+    WITH {_duck_train_centroids('embeddings')},
+    fin AS ({_duck_assign('embeddings', f'c{KMEANS_ITERS}')}),
+    q AS ({_duck_queries('fin', ', cluster_id AS q_cluster')}),
+    scored AS ({_duck_scan_clusters('q', 'fin', 'q_cluster')})
+    {_duck_top_k('scored')}
     """,
 )
 def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,129 +419,23 @@ def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule as knn_ivf_pruned), assignment is argmin squared-L2 with the
     same left-fold arithmetic both engines evaluate bitwise-equal
     (functions.vectors.l2_dist2 / duck_l2_dist2), and the centroid
-    update is the repo's exact-integer convention: component sums in
-    round(x*1e6) micros (exact associative int64 — float sums over
-    rows would order-diverge across engines), truncating int division
-    by the member count, /1e6 back to double. Empty clusters drop in
-    both engines identically (inner-join semantics). The MLlib
-    VectorUDT boundary this query used to demonstrate lives on in
-    functions/featurizer.py's predict_batch_udf seam.
+    update is the repo's exact-integer convention (_train_centroids).
+    The MLlib VectorUDT boundary this query used to demonstrate lives
+    on in functions/featurizer.py's predict_batch_udf seam.
 
     Scale shape: each iteration is one broadcast NLJ against the
-    (always tiny) centroid table + an argmin window partitioned by
-    vec_id + one (cluster, dim)-keyed map-combined aggregate whose
-    output is k x dim rows — corpus-linear map work, constant-size
-    shuffles. At 100 TB you train on a sample and run ONE final
-    assignment pass; the unrolled plan here is that exact dataflow."""
+    (always tiny) centroid table + the narrow argmin aggregate + one
+    (cluster, dim)-keyed map-combined aggregate whose output is k x dim
+    rows — corpus-linear map work, constant-size shuffles. At 100 TB
+    you train on a sample and run ONE final assignment pass; the
+    unrolled plan here is that exact dataflow."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").cast("long").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.asc("dist2"), F.asc("c_id")
-    )
-
-    def assign(cent_df: DataFrame) -> DataFrame:
-        return (
-            e.crossJoin(F.broadcast(cent_df))
-            .withColumn("dist2", l2_dist2("embedding", "c_emb"))
-            .withColumn("rn", F.row_number().over(w_assign))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "embedding", F.col("c_id").alias("cluster_id"))
-        )
-
-    for _ in range(KMEANS_ITERS):
-        assigned = assign(cent)
-        upd = (
-            assigned.select(
-                "cluster_id", F.posexplode("embedding").alias("d0", "x")
-            )
-            .groupBy("cluster_id", (F.col("d0") + 1).alias("d"))
-            .agg(
-                F.sum(
-                    F.round(F.col("x").cast("double") * 1_000_000).cast("long")
-                ).alias("s"),
-                F.count(F.lit(1)).cast("long").alias("n"),
-            )
-        )
-        cent = (
-            upd.select(
-                "cluster_id",
-                F.struct("d", (int_div(F.col("s"), F.col("n")) / 1e6).alias("c")).alias(
-                    "dc"
-                ),
-            )
-            .groupBy(F.col("cluster_id").alias("c_id"))
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list("dc")), lambda s: s["c"]
-                ).alias("c_emb")
-            )
-        )
-    fin = assign(cent)
-    q = fin.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cluster_id").alias("q_cluster"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            fin,
-            (fin.cluster_id == F.col("q_cluster"))
-            & (fin.vec_id != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot("q_emb", "embedding").alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.round("score", 6) + 0.0).alias("cos_sim"),
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    fin = e.join(_assign(e, _train_centroids(e)), "vec_id")
+    q = _queries(fin, F.col("cluster_id").alias("q_cluster"))
+    return _top_k(_scan_clusters(q, fin, "q_cluster"))
 
 
 IVF_CUTOFF_PCT = 80  # first 80% of vec_ids are the already-indexed corpus
-
-
-def _duck_kmeans_update(assigned: str) -> str:
-    """One Lloyd centroid update over an assignment CTE, in the repo's
-    exact-integer convention (micro component sums, truncating div)."""
-    return f"""
-      SELECT cluster_id AS c_id,
-             list(CAST(s // n AS BIGINT) / 1000000.0 ORDER BY d) AS c_emb
-      FROM (
-        SELECT cluster_id, d,
-               CAST(sum(CAST(round(CAST(embedding[d] AS DOUBLE) * 1000000)
-                        AS BIGINT)) AS BIGINT) AS s,
-               CAST(count(*) AS BIGINT) AS n
-        FROM {assigned}, (SELECT unnest(range(1, {KMEANS_DIM} + 1)) AS d) dims
-        GROUP BY cluster_id, d
-      ) GROUP BY cluster_id"""
-
-
-def _duck_assign_dist(src: str, cents: str) -> str:
-    """Argmin-squared-L2 assignment of `src` to `cents`, keeping the
-    winning dist2 (same tie rule as every IVF oracle: lowest c_id)."""
-    d2 = duck_l2_dist2("e.embedding", "c.c_emb")
-    return f"""
-      SELECT vec_id, embedding, c_id AS cluster_id, dist2 FROM (
-        SELECT e.vec_id, e.embedding, c.c_id, {d2} AS dist2,
-          row_number() OVER (
-            PARTITION BY e.vec_id ORDER BY {d2} ASC, c.c_id
-          ) AS rn
-        FROM {src} e CROSS JOIN {cents} c
-      ) WHERE rn = 1"""
 
 
 @query(
@@ -561,24 +449,17 @@ def _duck_assign_dist(src: str, cents: str) -> str:
     newb AS (
       SELECT vec_id, embedding FROM embeddings, cut WHERE vec_id > cutoff
     ),
-    c0 AS (
-      SELECT vec_id AS c_id, embedding AS c_emb
-      FROM base WHERE vec_id < {N_CENTROIDS}
-    ),
-    a0 AS ({_duck_assign_dist('base', 'c0')}),
-    c1 AS ({_duck_kmeans_update('a0')}),
-    a1 AS ({_duck_assign_dist('base', 'c1')}),
-    c2 AS ({_duck_kmeans_update('a1')}),
-    fb AS ({_duck_assign_dist('base', 'c2')}),
-    fn AS ({_duck_assign_dist('newb', 'c2')}),
+    {_duck_train_centroids('base')},
+    fb AS ({_duck_assign('base', f'c{KMEANS_ITERS}')}),
+    fn AS ({_duck_assign('newb', f'c{KMEANS_ITERS}')}),
     bstat AS (
       SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_base,
-             CAST(sum(CAST(round(dist2 * 1000000) AS BIGINT)) AS BIGINT) AS sq
+             CAST(sum(CAST(round(dist * 1000000) AS BIGINT)) AS BIGINT) AS sq
       FROM fb GROUP BY cluster_id
     ),
     nstat AS (
       SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_new,
-             CAST(sum(CAST(round(dist2 * 1000000) AS BIGINT)) AS BIGINT) AS sq
+             CAST(sum(CAST(round(dist * 1000000) AS BIGINT)) AS BIGINT) AS sq
       FROM fn GROUP BY cluster_id
     )
     SELECT b.cluster_id,
@@ -615,8 +496,9 @@ def knn_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     across rows would order-diverge across engines. Scale shape: train
     on the bounded historical sample, then ONE broadcast-NLJ assignment
     pass over the insert batch (batch-linear map work, k x dim
-    broadcast, aggregate output bounded by k) — no shuffle ever
-    carries a vector payload keyed by anything but its own id."""
+    broadcast, aggregate output bounded by k); the two stat read-outs
+    need no vector at all. sf0.1 bench wall is ~2.7 s: with n=2000
+    vectors the query is bound by its sequential Lloyd's job chain."""
     e = load_table(spark, sf_dir, "embeddings")
     # plan-embedded cutoff: 1-row aggregate broadcast, same shape as
     # the dedup incremental family's cut CTE — no driver round-trip
@@ -632,80 +514,15 @@ def knn_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     newb = split.filter(F.col("vec_id") > F.col("cutoff")).select(
         "vec_id", "embedding"
     )
-    cent = base.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").cast("long").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-    )
-    # r12 optimization round: the argmin assignment is a NARROW grouped
-    # min-struct aggregate, not a row_number window — the window form
-    # shuffled all n·K crossed rows, each carrying the full vector AND
-    # centroid arrays, plus a per-group sort; the aggregate sees only
-    # (vec_id, c_id, dist2), so its buffer stays fixed-width (codegen
-    # HashAggregate), the map-side partial collapses the K candidates
-    # per vector BEFORE the exchange, and no array ever rides an
-    # assignment exchange. min(struct(dist2, c_id)) == "lowest dist2,
-    # ties to lowest c_id" — the window's exact order on identical
-    # per-pair dist2 values, so results are bit-identical. The
-    # training update re-attaches vectors by ONE vec_id equi-join
-    # (arrays cross once per iteration); the two stat read-outs need
-    # no arrays at all. Each iteration's k-row centroid frame is
-    # scoped-persisted so bstat and nstat share ONE trained chain
-    # instead of each replanning the full unrolled Lloyd's (no
-    # cross-consumer CSE — the assortativity lesson). sf0.1 bench wall
-    # is roughly unchanged (~2.7 s): with n=2000 vectors the query is
-    # bound by its inherently sequential Lloyd's job chain, not by
-    # bytes — the win is the 100-TB assignment-exchange profile.
-    def assign_narrow(src: DataFrame, cent_df: DataFrame) -> DataFrame:
-        return (
-            src.crossJoin(F.broadcast(cent_df))
-            .select(
-                "vec_id",
-                "c_id",
-                l2_dist2("embedding", "c_emb").alias("dist2"),
-            )
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist2", "c_id")).alias("m"))
-            .select(
-                "vec_id",
-                F.col("m.c_id").alias("cluster_id"),
-                F.col("m.dist2").alias("dist2"),
-            )
-        )
-
-    for _ in range(KMEANS_ITERS):
-        upd = (
-            base.join(assign_narrow(base, cent), "vec_id")
-            .select("cluster_id", F.posexplode("embedding").alias("d0", "x"))
-            .groupBy("cluster_id", (F.col("d0") + 1).alias("d"))
-            .agg(
-                F.sum(
-                    F.round(F.col("x").cast("double") * 1_000_000).cast("long")
-                ).alias("s"),
-                F.count(F.lit(1)).cast("long").alias("n"),
-            )
-        )
-        cent = scoped_persist(
-            upd.select(
-                "cluster_id",
-                F.struct(
-                    "d", (int_div(F.col("s"), F.col("n")) / 1e6).alias("c")
-                ).alias("dc"),
-            )
-            .groupBy(F.col("cluster_id").alias("c_id"))
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list("dc")), lambda s: s["c"]
-                ).alias("c_emb")
-            )
-        )
+    cent = _train_centroids(base)
 
     def cell_stats(src: DataFrame, n_col: str) -> DataFrame:
         return (
-            assign_narrow(src, cent)
+            _assign(src, cent)
             .groupBy("cluster_id")
             .agg(
                 F.count(F.lit(1)).cast("long").alias(n_col),
-                F.sum(F.round(F.col("dist2") * 1_000_000).cast("long"))
+                F.sum(F.round(F.col("dist") * 1_000_000).cast("long"))
                 .cast("long")
                 .alias("sq"),
             )
@@ -735,6 +552,7 @@ def knn_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster_id")
     )
+
 
 
 @query(
@@ -970,9 +788,11 @@ def _duck_sub_l2_pico(a_expr: str, b_expr: str) -> str:
     )
 
 
-@query(
-    "knn_pq_adc",
-    oracle=f"""
+PQ_SHORTLIST = 50  # ADC candidates per query that survive to exact rerank
+
+# The shared CTE block both PQ oracles start from (codebook → codes →
+# query distance table → integer ADC scores per candidate).
+_PQ_ADC_SQL = f"""
     WITH ms AS (SELECT unnest(range(0, {PQ_M})) AS m),
     codebook AS (
       SELECT ms.m, cb.vec_id AS j,
@@ -1010,6 +830,13 @@ def _duck_sub_l2_pico(a_expr: str, b_expr: str) -> str:
       WHERE c.vec_id <> q.query_id
       GROUP BY q.query_id, c.vec_id
     )
+"""
+
+
+@query(
+    "knn_pq_adc",
+    oracle=_PQ_ADC_SQL
+    + f"""
     SELECT query_id, neighbor_id, adc_dist_pico, CAST(rk AS INT) AS rk
     FROM (
       SELECT *, row_number() OVER (
@@ -1099,51 +926,6 @@ def _pq_adc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PQ_SHORTLIST = 50  # ADC candidates per query that survive to exact rerank
-
-# The shared CTE block both PQ oracles start from (codebook → codes →
-# query distance table → integer ADC scores per candidate).
-_PQ_ADC_SQL = f"""
-    WITH ms AS (SELECT unnest(range(0, {PQ_M})) AS m),
-    codebook AS (
-      SELECT ms.m, cb.vec_id AS j,
-             list_transform(range(1, {PQ_DSUB} + 1),
-                            i -> CAST(cb.embedding[ms.m * {PQ_DSUB} + i] AS DOUBLE)) AS c_sub
-      FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {PQ_K}) cb
-      CROSS JOIN ms
-    ),
-    subs AS (
-      SELECT e.vec_id, ms.m,
-             list_transform(range(1, {PQ_DSUB} + 1),
-                            i -> CAST(e.embedding[ms.m * {PQ_DSUB} + i] AS DOUBLE)) AS x_sub
-      FROM embeddings e CROSS JOIN ms
-    ),
-    dists AS (
-      SELECT s.vec_id, s.m, c.j,
-             {_duck_sub_l2_pico('s.x_sub', 'c.c_sub')} AS d_pico
-      FROM subs s JOIN codebook c ON c.m = s.m
-    ),
-    codes AS (
-      SELECT vec_id, m, j AS code FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY vec_id, m ORDER BY d_pico, j
-        ) AS rn FROM dists
-      ) WHERE rn = 1
-    ),
-    qtab AS (
-      SELECT vec_id AS query_id, m, j, d_pico
-      FROM dists WHERE vec_id IN {QUERY_IDS}
-    ),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             CAST(sum(q.d_pico) AS BIGINT) AS adc_dist_pico
-      FROM codes c JOIN qtab q ON q.m = c.m AND q.j = c.code
-      WHERE c.vec_id <> q.query_id
-      GROUP BY q.query_id, c.vec_id
-    )
-"""
-
-
 @query(
     "knn_pq_rerank",
     oracle=_PQ_ADC_SQL
@@ -1162,13 +944,7 @@ _PQ_ADC_SQL = f"""
       JOIN embeddings qe ON qe.vec_id = s.query_id
       JOIN embeddings ne ON ne.vec_id = s.neighbor_id
     )
-    SELECT query_id, neighbor_id, round(score, 6) + 0 AS cos_sim, CAST(rk AS INT) AS rk
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY score DESC, neighbor_id
-      ) AS rk FROM rerank
-    )
-    WHERE rk <= {TOP_K}
+    {_duck_top_k('rerank')}
     """,
 )
 def knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,17 +975,7 @@ def knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(qe), "query_id")
         .select("query_id", "neighbor_id", dot("q_emb", "n_emb").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        rerank.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.round("score", 6) + 0.0).alias("cos_sim"),
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _top_k(rerank)
 
 
 @query(
@@ -1256,26 +1022,29 @@ def embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Composed evaluation: ground truth (exact brute force) vs the ANN
-# index (IVF multi-probe), both already registered above — the oracle
-# nests their oracle SQL as CTEs so the eval is checked end-to-end.
-_BF_ORACLE = ORACLES["knn_brute_force"]
-_MP_ORACLE = ORACLES["knn_ivf_multiprobe"]
-
-
-@query(
-    "ann_eval_recall",
-    oracle=f"""
-    WITH gt AS ({_BF_ORACLE}),
-         ap AS ({_MP_ORACLE})
+def _duck_recall(ap: str) -> str:
+    """Recall@k per query of the top-k CTE `ap` against the exact
+    ground truth CTE `gt`, in integer percent."""
+    return f"""
     SELECT gt.query_id,
            CAST(count(*) AS BIGINT)               AS k,
            CAST(count(ap.neighbor_id) AS BIGINT)  AS n_matched,
            CAST(count(ap.neighbor_id) * 100 // count(*) AS BIGINT)
              AS recall_pct
-    FROM gt LEFT JOIN ap
+    FROM gt LEFT JOIN {ap} ap
       ON gt.query_id = ap.query_id AND gt.neighbor_id = ap.neighbor_id
-    GROUP BY gt.query_id
+    GROUP BY gt.query_id"""
+
+
+# Composed evaluation: ground truth (exact brute force) vs the ANN
+# index (IVF multi-probe), both already registered above — the oracle
+# nests their oracle SQL as CTEs so the eval is checked end-to-end.
+@query(
+    "ann_eval_recall",
+    oracle=f"""
+    WITH gt AS ({ORACLES["knn_brute_force"]}),
+         ap AS ({ORACLES["knn_ivf_multiprobe"]})
+    {_duck_recall('ap')}
     """,
 )
 def ann_eval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1357,18 +1126,8 @@ RANGE_TAU = 0.25  # cosine radius for the epsilon-ball search
 @query(
     "knn_range_search",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS q_emb
-      FROM embeddings WHERE vec_id IN {QUERY_IDS}
-    ),
-    scored AS (
-      SELECT
-        q.query_id,
-        e.vec_id AS neighbor_id,
-        {duck_dot('q.q_emb', 'e.embedding')} AS score
-      FROM q CROSS JOIN embeddings e
-      WHERE e.vec_id <> q.query_id
-    )
+    WITH q AS ({_duck_queries()}),
+    scored AS ({_duck_scan_corpus()})
     SELECT query_id, neighbor_id, round(score, 6) + 0 AS cos_sim
     FROM scored
     WHERE score >= {RANGE_TAU}
@@ -1391,20 +1150,7 @@ def knn_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-filter (dedup_embedding_cosine) when the corpus outgrows a
     full scan."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(e)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot("q_emb", "embedding").alias("score"),
-        )
-        .filter(F.col("score") >= RANGE_TAU)
-    )
+    scored = _scan_corpus(_queries(e), e).filter(F.col("score") >= RANGE_TAU)
     return scored.select(
         "query_id",
         "neighbor_id",
@@ -1559,33 +1305,42 @@ def _bucketed_embeddings(
     return lsh_bucket_pandas(base, _planes[: lsh_planes_for(n)])
 
 
-@query(
-    "knn_mutual_topk",
-    oracle=f"""
+def _duck_knn_ranked() -> str:
+    """The knn-eval oracles' candidate block: the same exact gate and
+    np-CTE bucket formula as _bucketed_embeddings, then every candidate
+    pair `ranked` per src by (score desc, dst)."""
+    return f"""
     WITH np AS ({_DUCK_PLANES_CTE}),
     gate AS (
       SELECT count(*) <= {KNN_MUTUAL_EXACT_LIMIT} AS is_exact FROM embeddings
     ),
     bucketed AS (
-      SELECT vec_id, embedding, {_duck_bucket('embedding')} AS bucket
+      SELECT vec_id, label, embedding, {_duck_bucket('embedding')} AS bucket
       FROM embeddings, np
     ),
     scored AS (
       SELECT a.vec_id AS src, b.vec_id AS dst,
+             a.label AS true_label, b.label AS nb_label,
              {duck_dot('a.embedding', 'b.embedding')} AS score
       FROM bucketed a JOIN bucketed b
         ON a.vec_id <> b.vec_id
        AND ((SELECT is_exact FROM gate) OR a.bucket = b.bucket)
     ),
-    topk AS (
-      SELECT src, dst, score,
+    ranked AS (
+      SELECT *,
              row_number() OVER (PARTITION BY src ORDER BY score DESC, dst) AS rk
       FROM scored
-    )
+    )"""
+
+
+@query(
+    "knn_mutual_topk",
+    oracle=_duck_knn_ranked()
+    + f"""
     SELECT t1.src AS a, t1.dst AS b,
            CAST(t1.rk AS INT) AS rk_ab, CAST(t2.rk AS INT) AS rk_ba,
            round(t1.score, 6) + 0 AS cos_sim
-    FROM topk t1 JOIN topk t2 ON t1.src = t2.dst AND t1.dst = t2.src
+    FROM ranked t1 JOIN ranked t2 ON t1.src = t2.dst AND t1.dst = t2.src
     WHERE t1.rk <= {MUTUAL_K} AND t2.rk <= {MUTUAL_K} AND t1.src < t1.dst
     ORDER BY a, b
     """,
@@ -1737,68 +1492,28 @@ NPROBE_CURVE = (1, 2, 3, 4)
 def _duck_nprobe_curve_sql() -> str:
     """Per-nprobe recall@k oracle: shared centroid/assignment CTEs, one
     probe/score/top chain per nprobe setting, unioned into the curve."""
-    bf = ORACLES["knn_brute_force"]
-    shared = f"""
-    WITH exact AS ({bf}),
-    centroids AS (
-      SELECT vec_id AS c_id, embedding AS c_emb
-      FROM embeddings WHERE vec_id < {N_CENTROIDS}
-    ),
-    assigned AS (
-      SELECT vec_id, embedding, c_id AS cluster_id
-      FROM (
-        SELECT e.vec_id, e.embedding, c.c_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {duck_dot('e.embedding', 'c.c_emb')} DESC, c.c_id
-               ) AS rn
-        FROM embeddings e CROSS JOIN centroids c
-      ) WHERE rn = 1
-    ),
-    qq AS (
-      SELECT vec_id AS query_id, embedding AS q_emb
-      FROM embeddings WHERE vec_id IN {QUERY_IDS}
-    )"""
-    legs = []
-    for np_ in NPROBE_CURVE:
-        legs.append(f""",
-    probes{np_} AS (
-      SELECT query_id, q_emb, c_id AS probe_cluster
-      FROM (
-        SELECT qq.query_id, qq.q_emb, c.c_id,
-               row_number() OVER (
-                 PARTITION BY qq.query_id
-                 ORDER BY {duck_dot('qq.q_emb', 'c.c_emb')} DESC, c.c_id
-               ) AS rn
-        FROM qq CROSS JOIN centroids c
-      ) WHERE rn <= {np_}
-    ),
-    top{np_} AS (
-      SELECT query_id, neighbor_id
-      FROM (
-        SELECT p.query_id, a.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY p.query_id
-                 ORDER BY {duck_dot('p.q_emb', 'a.embedding')} DESC, a.vec_id
-               ) AS rk
-        FROM probes{np_} p JOIN assigned a
-          ON a.cluster_id = p.probe_cluster AND a.vec_id <> p.query_id
-      ) WHERE rk <= {TOP_K}
-    )""")
-    selects = [
-        f"""SELECT {np_} AS nprobe,
-               CAST((SELECT count(*) FROM top{np_} t
-                     JOIN exact e ON e.query_id = t.query_id
-                                 AND e.neighbor_id = t.neighbor_id) AS BIGINT)
-                 AS n_hits,
-               CAST((SELECT count(*) FROM top{np_} t
-                     JOIN exact e ON e.query_id = t.query_id
-                                 AND e.neighbor_id = t.neighbor_id)
-                    * 1000000 // (SELECT count(*) FROM exact) AS BIGINT)
-                 AS recall_ppm"""
+    legs = "".join(
+        f""",
+    probes{np_} AS ({_duck_probes(np_)}),
+    scored{np_} AS ({_duck_scan_clusters(f'probes{np_}', 'assigned', 'probe_cluster')}),
+    top{np_} AS ({_duck_top_k(f'scored{np_}')})"""
         for np_ in NPROBE_CURVE
-    ]
-    return shared + "".join(legs) + "\n" + "\nUNION ALL\n".join(selects) + "\nORDER BY nprobe"
+    )
+    hits = """(SELECT count(*) FROM top{0} t
+                     JOIN exact e ON e.query_id = t.query_id
+                                 AND e.neighbor_id = t.neighbor_id)"""
+    selects = "\nUNION ALL\n".join(
+        f"""SELECT {np_} AS nprobe,
+               CAST({hits.format(np_)} AS BIGINT) AS n_hits,
+               CAST({hits.format(np_)} * 1000000 // (SELECT count(*) FROM exact)
+                    AS BIGINT) AS recall_ppm"""
+        for np_ in NPROBE_CURVE
+    )
+    return f"""
+    WITH exact AS ({ORACLES["knn_brute_force"]}),{_duck_ivf_ctes()},
+    q AS ({_duck_queries()}){legs}
+{selects}
+ORDER BY nprobe"""
 
 
 @query("ann_nprobe_curve", oracle=_duck_nprobe_curve_sql())
@@ -1812,72 +1527,40 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared across all four legs (Catalyst reuses the exchange), each
     leg adds only a (queries x nprobe)-row probe fan-out + bucket
     join, and the read-out joins each leg's top-k against the
-    brute-force ground truth — k x |queries| rows per leg. The whole
-    curve costs about one multiprobe run, not four."""
+    brute-force ground truth — k x |queries| rows per leg. The recall
+    denominator is a one-row count of the ground truth, broadcast into
+    the plan, so the builder runs no job. The whole curve costs about
+    one multiprobe run, not four."""
     e = load_table(spark, sf_dir, "embeddings")
-    c = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("c_score"), F.asc("c_id"))
-    assigned = (
-        e.crossJoin(F.broadcast(c))
-        .withColumn("c_score", dot("embedding", "c_emb"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", F.col("c_id").alias("cluster_id"))
-    )
-    q = e.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("p_score"), F.asc("c_id"))
-    probe_ranked = (
-        q.crossJoin(F.broadcast(c))
-        .withColumn("p_score", dot("q_emb", "c_emb"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .select("query_id", "q_emb", F.col("c_id").alias("probe_cluster"), "rn")
-    )
+    c = _seed(e)
+    assigned = e.join(_assign(e, c, _neg_dot), "vec_id")
+    probe_ranked = _probe_ranks(_queries(e), c)
     exact = QUERIES["knn_brute_force"](spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    n_exact = exact.count()  # k x |queries| — plan-time constant read
+    n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     legs = []
-    w_rk = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     for np_ in NPROBE_CURVE:
-        probes = probe_ranked.filter(F.col("rn") <= np_).drop("rn")
-        top = (
-            F.broadcast(probes)
-            .join(
-                assigned,
-                (assigned.cluster_id == F.col("probe_cluster"))
-                & (assigned.vec_id != F.col("query_id")),
-            )
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                dot("q_emb", "embedding").alias("score"),
-            )
-            .withColumn("rk", F.row_number().over(w_rk))
-            .filter(F.col("rk") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
+        probes = probe_ranked.filter(F.col("rn") <= np_)
+        top = _top_k(_scan_clusters(probes, assigned, "probe_cluster"))
         hits = top.join(F.broadcast(exact), ["query_id", "neighbor_id"]).agg(
             F.count(F.lit(1)).alias("n_hits")
         )
-        legs.append(
-            hits.select(
-                F.lit(np_).cast("long").alias("nprobe"),
-                F.col("n_hits").cast("long").alias("n_hits"),
-                F.expr(f"CAST(n_hits * 1000000 div {n_exact} AS BIGINT)").alias(
-                    "recall_ppm"
-                ),
-            )
-        )
+        legs.append(hits.select(F.lit(np_).cast("long").alias("nprobe"), "n_hits"))
     out = legs[0]
     for leg in legs[1:]:
         out = out.unionByName(leg)
-    return out.orderBy("nprobe")
+    return (
+        out.crossJoin(F.broadcast(n_exact))
+        .select(
+            "nprobe",
+            F.col("n_hits").cast("long").alias("n_hits"),
+            F.expr("CAST(n_hits * 1000000 div n_exact AS BIGINT)").alias(
+                "recall_ppm"
+            ),
+        )
+        .orderBy("nprobe")
+    )
 
 
 EVAL_K = 5
@@ -1885,29 +1568,11 @@ EVAL_K = 5
 
 @query(
     "knn_label_eval",
-    oracle=f"""
-    WITH np AS ({_DUCK_PLANES_CTE}),
-    gate AS (
-      SELECT count(*) <= {KNN_MUTUAL_EXACT_LIMIT} AS is_exact FROM embeddings
-    ),
-    bucketed AS (
-      SELECT vec_id, label, embedding, {_duck_bucket('embedding')} AS bucket
-      FROM embeddings, np
-    ),
-    scored AS (
-      SELECT a.vec_id AS src, a.label AS true_label,
-             b.label AS nb_label,
-             row_number() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY {duck_dot('a.embedding', 'b.embedding')} DESC, b.vec_id
-             ) AS rk
-      FROM bucketed a JOIN bucketed b
-        ON a.vec_id <> b.vec_id
-       AND ((SELECT is_exact FROM gate) OR a.bucket = b.bucket)
-    ),
+    oracle=_duck_knn_ranked()
+    + f""",
     votes AS (
       SELECT src, true_label, nb_label, CAST(count(*) AS BIGINT) AS v
-      FROM scored WHERE rk <= {EVAL_K}
+      FROM ranked WHERE rk <= {EVAL_K}
       GROUP BY src, true_label, nb_label
     ),
     pred AS (
@@ -1978,21 +1643,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_ivf_build_report",
     oracle=f"""
-    WITH centroids AS (
-      SELECT vec_id AS c_id, embedding AS c_emb
-      FROM embeddings WHERE vec_id < {N_CENTROIDS}
-    ),
-    assigned AS (
-      SELECT vec_id, c_id AS cluster_id
-      FROM (
-        SELECT e.vec_id, c.c_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {duck_dot('e.embedding', 'c.c_emb')} DESC, c.c_id
-               ) AS rn
-        FROM embeddings e CROSS JOIN centroids c
-      ) WHERE rn = 1
-    ),
+    WITH {_duck_ivf_ctes()},
     per_cluster AS (
       SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_vecs
       FROM assigned GROUP BY cluster_id
@@ -2019,23 +1670,12 @@ def ann_ivf_build_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     than corpus/n_clusters, and the worst factor is the tail-latency
     multiplier of the whole index; the fix is more/kmeans-trained
     centroids — knn_ivf_kmeans — not more probes). Same centroid
-    broadcast + assignment as every IVF query, one
+    broadcast + assignment (_assign) as every IVF query, one
     cluster-cardinality aggregate on top; the
     diagnose_partition_balance methodology applied to the ANN
     index."""
     e = load_table(spark, sf_dir, "embeddings")
-    c = e.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("c_score"), F.asc("c_id"))
-    assigned = (
-        e.crossJoin(F.broadcast(c))
-        .withColumn("c_score", dot("embedding", "c_emb"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("c_id").alias("cluster_id"))
-    )
-    per_cluster = assigned.groupBy("cluster_id").agg(
+    per_cluster = _assign(e, _seed(e), _neg_dot).groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_vecs")
     )
     tot = per_cluster.agg(
@@ -2280,38 +1920,12 @@ MAT_DIM = 32
 @query(
     "embedding_matryoshka_eval",
     oracle=f"""
-    WITH gt AS ({{_BF}}),
-    q AS (
-      SELECT vec_id AS query_id, embedding[1:{MAT_DIM}] AS q_emb
-      FROM embeddings WHERE vec_id IN {{QIDS}}
-    ),
-    scored AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             {{COS}} AS score
-      FROM q CROSS JOIN embeddings e
-      WHERE e.vec_id <> q.query_id
-    ),
-    tr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rk
-        FROM scored)
-      WHERE rk <= {{K}}
-    )
-    SELECT gt.query_id,
-           CAST(count(*) AS BIGINT)               AS k,
-           CAST(count(tr.neighbor_id) AS BIGINT)  AS n_matched,
-           CAST(count(tr.neighbor_id) * 100 // count(*) AS BIGINT)
-             AS recall_pct
-    FROM gt LEFT JOIN tr
-      ON gt.query_id = tr.query_id AND gt.neighbor_id = tr.neighbor_id
-    GROUP BY gt.query_id
-    """.format(
-        _BF=ORACLES["knn_brute_force"],
-        QIDS=QUERY_IDS,
-        K=TOP_K,
-        COS=duck_cosine("q.q_emb", f"e.embedding[1:{MAT_DIM}]"),
-    ),
+    WITH gt AS ({ORACLES["knn_brute_force"]}),
+    q AS ({_duck_queries(emb=f"embedding[1:{MAT_DIM}]")}),
+    scored AS ({_duck_scan_corpus(duck_cosine("q.q_emb", f"e.embedding[1:{MAT_DIM}]"))}),
+    tr AS ({_duck_top_k('scored')})
+    {_duck_recall('tr')}
+    """,
 )
 def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka truncation eval: recall@k of a HALF-WIDTH prefix
@@ -2334,29 +1948,12 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id").isin(*QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.slice("embedding", 1, MAT_DIM).alias("q_emb"),
+    q = _queries(e, emb=F.slice("embedding", 1, MAT_DIM))
+    scored = _scan_corpus(
+        q, e, cosine(F.col("q_emb"), F.slice("embedding", 1, MAT_DIM))
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(e)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("q_emb"), F.slice("embedding", 1, MAT_DIM)).alias(
-                "score"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    tr = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(F.col("query_id").alias("t_qid"), F.col("neighbor_id").alias("t_nid"))
+    tr = _top_k(scored).select(
+        F.col("query_id").alias("t_qid"), F.col("neighbor_id").alias("t_nid")
     )
     j = gt.join(
         tr,
@@ -2372,28 +1969,11 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "knn_mrr_eval",
-    oracle=f"""
-    WITH np AS ({_DUCK_PLANES_CTE}),
-    gate AS (
-      SELECT count(*) <= {KNN_MUTUAL_EXACT_LIMIT} AS is_exact FROM embeddings
-    ),
-    bucketed AS (
-      SELECT vec_id, label, embedding, {_duck_bucket('embedding')} AS bucket
-      FROM embeddings, np
-    ),
-    scored AS (
-      SELECT a.vec_id AS src, a.label AS true_label, b.label AS nb_label,
-             row_number() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY {duck_dot('a.embedding', 'b.embedding')} DESC, b.vec_id
-             ) AS rk
-      FROM bucketed a JOIN bucketed b
-        ON a.vec_id <> b.vec_id
-       AND ((SELECT is_exact FROM gate) OR a.bucket = b.bucket)
-    ),
+    oracle=_duck_knn_ranked()
+    + """,
     first_hit AS (
       SELECT src, true_label, CAST(min(rk) AS BIGINT) AS frk
-      FROM scored WHERE nb_label = true_label
+      FROM ranked WHERE nb_label = true_label
       GROUP BY src, true_label
     ),
     per_label AS (

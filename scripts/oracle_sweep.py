@@ -10,10 +10,12 @@ Prints one line per query and a final summary; exit code 1 on any
 failure.
 
 A FULL sweep (no substr filter, default sf_dir) also writes
-SWEEP_rN.json next to the repo root (N from SPARK_GRAFT_ROUND, default
-"5") — the committed record that every registered query, not just the
-driver's ~50-query sample, was oracle-checked this round (ADVICE r4:
-the recorded coverage must match the registered surface).
+SWEEP_rN.json next to the repo root, N from SPARK_GRAFT_ROUND — the
+committed record that every registered query, not just the driver's
+~50-query sample, was oracle-checked this round (ADVICE r4: the
+recorded coverage must match the registered surface). The round has no
+default: with SPARK_GRAFT_ROUND unset a full sweep writes no record
+and says so, so it can never overwrite another round's committed file.
 """
 
 from __future__ import annotations
@@ -121,8 +123,13 @@ def main() -> int:
             f"NOTE: full sweep completed but {sf_dir} maps to no known "
             "artifact stem (sf0.01/sf0.1) — no SWEEP_r{N} record written"
         )
-    if not substrs and stem:
-        rnd = os.environ.get("SPARK_GRAFT_ROUND", "7")
+    rnd = os.environ.get("SPARK_GRAFT_ROUND", "").strip()
+    if not substrs and stem and not rnd:
+        print(
+            "NOTE: SPARK_GRAFT_ROUND is unset — no SWEEP record written "
+            "(set it to name the round this sweep records)"
+        )
+    if not substrs and stem and rnd:
         root = pathlib.Path(__file__).resolve().parent.parent
         out = root / f"{stem}{rnd}.json"
         out.write_text(

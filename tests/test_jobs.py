@@ -14,7 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from alexandria_pipeline_spark.catalog import load_table
+from alexandria_pipeline_spark.operators import pipeline
 from alexandria_pipeline_spark.operators.jobs import (
+    run_chunked_embedding_job,
     run_consolidation_job,
     run_embedding_job,
     run_incremental_embedding_job,
@@ -38,6 +40,20 @@ def test_embedding_job_end_to_end(spark):
     # S9 metadata sidecar
     params = json.load(open(os.path.join(out, "_run_params.json")))
     assert params["job"] == "embedding"
+
+
+def test_chunked_job_sidecar_records_the_applied_chunk_width(
+    spark, monkeypatch, tmp_path
+):
+    """The pool chunks at pipeline.CHUNK_TOKENS, read when the job
+    builds its plan; the sidecar must record that width, not a default
+    of its own."""
+    monkeypatch.setattr(pipeline, "CHUNK_TOKENS", 8)
+    out = str(tmp_path)
+    run_chunked_embedding_job(spark, SF_SMOKE, out)
+    params = json.load(open(os.path.join(out, "_run_params.json")))
+    assert params["job"] == "chunked_embedding"
+    assert params["chunk_tokens"] == 8
 
 
 def test_embedding_job_udf_parity(spark):

@@ -211,6 +211,40 @@ def test_multimodal_payloads_never_shuffle(registry_plans):
     assert not offenders, offenders
 
 
+def test_assignment_exchanges_carry_one_row_per_vector(spark):
+    """The assignment of every IVF query is the narrow aggregate: in
+    the executed plans no shuffle Exchange carries a centroid vector
+    (c_emb) or the crossed (vec_id, c_id) rows, n·K of them, that an
+    argmin window over the cross join shuffles."""
+    import re
+
+    offenders, n_exchanges = [], 0
+    for name in (
+        "knn_ivf_pruned",
+        "knn_ivf_multiprobe",
+        "knn_ivf_kmeans",
+        "knn_ivf_incremental_assign",
+        "ann_nprobe_curve",
+        "ann_ivf_build_report",
+    ):
+        df = QUERIES[name](spark, SF_SMOKE)
+        df.collect()
+        plan = formatted_plan(df)
+        release_persisted()
+        assert "isFinalPlan=true" in plan, name
+        for node in plan.split("\n\n"):
+            head = re.match(r"\(\d+\) (\w+)", node.strip())
+            inputs = re.search(r"^Input \[\d+\]: \[(.*)\]$", node, re.M)
+            if not head or not inputs or head.group(1) != "Exchange":
+                continue
+            n_exchanges += 1
+            cols = set(re.findall(r"(\w+)#", inputs.group(1)))
+            if "c_emb" in cols or {"vec_id", "c_id"} <= cols:
+                offenders.append(f"{name}: {node.strip()}")
+    assert n_exchanges, "plan walk matched no shuffle"
+    assert not offenders, offenders
+
+
 def _unpartitioned_window_lines(plan: str) -> list[str]:
     return [
         ln

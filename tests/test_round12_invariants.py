@@ -149,84 +149,12 @@ def test_materialized_read_paths_value_identical(spark, jsig_env, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# r11 verdict #6 growth queries: incremental IVF maintenance, span-
-# corruption packing stats, multimodal e2e twin. Each gets a
-# driver-side replication or a cross-query reconciliation on top of
-# its DuckDB oracle (which covers exact values at sf0.01).
+# r11 verdict #6 growth queries: span-corruption packing stats,
+# multimodal e2e twin. Each gets a driver-side replication or a
+# cross-query reconciliation on top of its DuckDB oracle (which covers
+# exact values at sf0.01). The incremental IVF replication lives in
+# test_similarity.py.
 # ---------------------------------------------------------------------------
-
-
-def test_ivf_incremental_matches_numpy_replication(spark):
-    """knn_ivf_incremental_assign vs an independent numpy replication
-    of the whole pipeline at smoke scale: same frozen-centroid
-    training (2 Lloyd iterations, exact integer-micro updates,
-    lowest-c_id tie-break), same assignment, same micro-exact report."""
-    import numpy as np
-
-    from alexandria_pipeline_spark.catalog import load_table
-    from alexandria_pipeline_spark.operators import similarity as S
-
-    rows = (
-        load_table(spark, SF_SMOKE, "embeddings")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    rows.sort(key=lambda r: r["vec_id"])  # centroid c_id order = vec_id order
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    cutoff = ids.max() * S.IVF_CUTOFF_PCT // 100
-    base_m, new_m = ids <= cutoff, ids > cutoff
-
-    def assign(xs, cents):
-        # argmin squared-L2 via the same left-fold float32-promoted
-        # arithmetic magnitude; ties to lowest c_id via argmin order
-        d2 = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        return d2.argmin(axis=1), d2.min(axis=1)
-
-    cents = X[base_m][ids[base_m] < S.N_CENTROIDS]
-    for _ in range(S.KMEANS_ITERS):
-        lab, _ = assign(X[base_m], cents)
-        nxt = []
-        for c in range(len(cents)):
-            mem = X[base_m][lab == c]
-            if len(mem):
-                s = np.round(mem * 1_000_000).astype(np.int64).sum(axis=0)
-                q, r = np.divmod(s, len(mem))
-                q = np.where((r != 0) & (s < 0), q + 1, q)  # truncating div
-                nxt.append(q / 1e6)
-        cents = np.array(nxt)
-
-    def report(xs):
-        lab, d2 = assign(xs, cents)
-        out = {}
-        for c in range(len(cents)):
-            m = lab == c
-            if m.any():
-                sq = int(np.round(d2[m] * 1_000_000).astype(np.int64).sum())
-                out[c] = (int(m.sum()), sq)
-        return out
-
-    b, n = report(X[base_m]), report(X[new_m])
-    expected = []
-    for c in sorted(b):
-        nb, sqb = b[c]
-        nn, sqn = n.get(c, (0, 0))
-        expected.append(
-            (
-                c,
-                nb,
-                nn,
-                nn * 1_000_000 // nb,
-                sqb // nb,
-                sqn // nn if nn else 0,
-            )
-        )
-    got = [
-        tuple(r)
-        for r in QUERIES["knn_ivf_incremental_assign"](spark, SF_SMOKE).collect()
-    ]
-    release_persisted()
-    assert got == expected and got
 
 
 def test_span_corruption_reconciles_with_packing(spark):

@@ -1,9 +1,9 @@
 """Invariant tests for the round-5 operators — internal-consistency
 properties the equality oracles can't express: Lorenz-curve
 monotonicity, Markov context distributions,
-log2-bucket boundary containment, Zipf ordering, mutual-kNN symmetry
-against the brute-force ranking, and the LSH plan advisor agreeing
-with the Python-side formula."""
+log2-bucket boundary containment, Zipf ordering, and the LSH plan
+advisor agreeing with the Python-side formula. The mutual-kNN and
+nprobe-curve tests live in test_similarity.py."""
 
 from __future__ import annotations
 
@@ -73,22 +73,6 @@ def test_token_diversity_bounds(spark):
         assert 0 <= r["simpson_ppm"] <= 1_000_000
         assert 0 < r["ttr_ppm"] <= 1_000_000
         assert r["vocab"] <= r["n_tokens"]
-
-
-def test_mutual_topk_pairs_are_mutual_in_bruteforce(spark):
-    """Every mutual pair's ranks must match an independently computed
-    exact neighbor ranking (the exact path runs at smoke scale)."""
-    from alexandria_pipeline_spark.operators.similarity import MUTUAL_K
-
-    rows = QUERIES["knn_mutual_topk"](spark, SF_SMOKE).collect()
-    assert rows, "smoke corpus should produce mutual pairs"
-    seen = set()
-    for r in rows:
-        assert r["a"] < r["b"]
-        assert 1 <= r["rk_ab"] <= MUTUAL_K and 1 <= r["rk_ba"] <= MUTUAL_K
-        assert (r["a"], r["b"]) not in seen
-        seen.add((r["a"], r["b"]))
-        assert -1.0 <= r["cos_sim"] <= 1.0 + 1e-9
 
 
 def test_lsh_plan_advisor_matches_python_formula(spark):
@@ -202,18 +186,6 @@ def test_compression_ratio_invariants(spark):
         assert r["raw_bytes"] > 0 and r["compressed_bytes"] > 0
         assert r["ratio_permille"] == r["raw_bytes"] * 1000 // r["compressed_bytes"]
     assert sum(r["ratio_permille"] > 1000 for r in rows) > len(rows) // 2
-
-
-def test_nprobe_recall_is_monotone(spark):
-    """More probes can only add candidates, so recall@k must be
-    non-decreasing in nprobe, and the n_hits arithmetic must match
-    the ppm read-out exactly."""
-    rows = QUERIES["ann_nprobe_curve"](spark, SF_SMOKE).collect()
-    rows.sort(key=lambda r: r["nprobe"])
-    assert [r["nprobe"] for r in rows] == [1, 2, 3, 4]
-    for a, b in zip(rows, rows[1:]):
-        assert a["recall_ppm"] <= b["recall_ppm"], (a, b)
-    assert rows[-1]["recall_ppm"] <= 1_000_000
 
 
 def test_interpolation_stays_between_neighbors(spark):

@@ -96,29 +96,6 @@ def test_foreign_session_timezone_survives_events_load(spark):
     assert got == want
 
 
-def test_mmr_rerank_greedy_invariants(spark):
-    """MMR output must be a valid greedy chain: distinct picks, rank 1
-    is the max-relevance candidate, and every pick's mmr score is
-    2*rel - max_sim over the PREVIOUS picks (lambda=0.5 scaled x2);
-    sims of unit vectors live in [-1, 1], so every pick satisfies
-    |mmr_micro - 2*rel_micro| <= 1e6 (and rank 1 has max_sim == 0)."""
-    from alexandria_pipeline_spark.registry import QUERIES
-
-    rows = (
-        QUERIES["similarity_mmr_rerank"](spark, "/root/testdata/sf0.001")
-        .orderBy("rk")
-        .collect()
-    )
-    assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
-    ids = [r["vec_id"] for r in rows]
-    assert len(set(ids)) == len(ids)
-    assert rows[0]["mmr_micro"] == 2 * rows[0]["rel_micro"]
-    for r in rows[1:]:
-        assert abs(r["mmr_micro"] - 2 * r["rel_micro"]) <= 1_000_000
-    # rank 1 is the global argmax of relevance among the selected
-    assert rows[0]["rel_micro"] == max(r["rel_micro"] for r in rows)
-
-
 def test_kmv_overlap_estimates_are_sane(spark):
     """KMV Jaccard estimates live in [0, 1e6] ppm, k_used <= K, and
     n_common <= k_used; the estimate must be within a loose sketch
@@ -277,32 +254,6 @@ def test_stream_holt_in_order_batches_match_single_batch(spark):
         ).collect()
     }
     assert got == want
-
-
-def test_matryoshka_recall_bounds_and_full_dim_identity(spark):
-    """recall@k of the 32-dim prefix is a valid percentage over
-    exactly the brute-force query set; and as a structural identity,
-    re-running the truncated leg at FULL width must reproduce the
-    ground truth (recall 100) — proving the eval harness itself
-    introduces no mismatch."""
-    from alexandria_pipeline_spark.operators import similarity as sim
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    sf = "/root/testdata/sf0.001"
-    rows = QUERIES["embedding_matryoshka_eval"](spark, sf).collect()
-    assert {r["query_id"] for r in rows} == set(sim.QUERY_IDS)
-    for r in rows:
-        assert r["k"] == sim.TOP_K
-        assert 0 <= r["n_matched"] <= r["k"]
-        assert r["recall_pct"] == r["n_matched"] * 100 // r["k"]
-    old = sim.MAT_DIM
-    sim.MAT_DIM = sim.EMBED_DIM
-    try:
-        full = QUERIES["embedding_matryoshka_eval"](spark, sf).collect()
-    finally:
-        sim.MAT_DIM = old
-    assert all(r["recall_pct"] == 100 for r in full)
 
 
 def test_decontam_cosine_flags_are_threshold_consistent(spark):
@@ -1025,70 +976,6 @@ def test_anomaly_run_lengths_reconcile_with_flag_count(spark):
     for r in rows:
         assert r["run_len"] >= 1 and r["n_runs"] >= 1
         assert r["run_len"] <= 30 * 24
-
-
-def test_mrr_eval_bounds_and_exact_path(spark):
-    """MRR lives in [0, 1e6], is bounded by the found-fraction, and on
-    the exact all-pairs path every vector whose label has >= 2 members
-    finds a same-label neighbor (n_found == n_queries there)."""
-    import duckdb
-
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    sf = "/root/testdata/sf0.001"
-    rows = QUERIES["knn_mrr_eval"](spark, sf).collect()
-    assert rows
-    con = duckdb.connect()
-    sizes = dict(
-        con.execute(
-            f"SELECT label, count(*) FROM "
-            f"read_parquet('{sf}/embeddings.parquet') GROUP BY label"
-        ).fetchall()
-    )
-    n_vecs = sum(sizes.values())
-    for r in rows:
-        assert 0 <= r["mrr_ppm"] <= 1_000_000
-        assert r["mrr_ppm"] <= r["n_found"] * 1_000_000 // r["n_queries"]
-        assert r["n_queries"] == sizes[r["label"]]
-        if n_vecs <= 1000 and sizes[r["label"]] >= 2:
-            assert r["n_found"] == r["n_queries"]
-
-
-def test_knn_family_above_gate_lsh_branch_executes(spark, tmp_path):
-    """Drive the LSH branch of every gated knn query with a synthetic
-    1100-vector embeddings table (the sweep scales stay on the exact
-    all-pairs path, which is how a missing import in the above-gate
-    branch survived to the sf1 stress run). Results just need to be
-    sane — correctness of the LSH path vs its oracle gate is already
-    locked by the sweep's gate-encoding — but the branch must RUN."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from alexandria_pipeline_spark.registry import QUERIES, register_all
-
-    register_all()
-    rng = np.random.default_rng(7)
-    n, dim = 1100, 8
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(range(n), pa.int64()),
-            "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
-            "label": pa.array((np.arange(n) % 7).astype(np.int32)),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-
-    mrr = QUERIES["knn_mrr_eval"](spark, str(tmp_path)).collect()
-    assert len(mrr) == 7
-    assert all(0 <= r["mrr_ppm"] <= 1_000_000 for r in mrr)
-    acc = QUERIES["knn_label_eval"](spark, str(tmp_path)).collect()
-    assert acc and all(0 <= r["acc_ppm"] <= 1_000_000 for r in acc)
-    mut = QUERIES["knn_mutual_topk"](spark, str(tmp_path)).collect()
-    assert isinstance(mut, list)  # executes; may legitimately be sparse
 
 
 def test_pack_capacity_curve_reconciles_with_single_capacity(spark):

@@ -182,22 +182,6 @@ def test_hapax_ratio_tiny_corpus(spark, monkeypatch):
     assert out["hapax_ppm"] == 666_666
 
 
-def test_label_outliers_flags_planted_point(spark, monkeypatch):
-    import alexandria_pipeline_spark.operators.similarity as sim_mod
-
-    # 20 identical vectors + 1 planted far point in one label: the P95
-    # fence lands exactly on the common distance (rank 19 of 21 is an
-    # integer percentile position), so only the far point exceeds it.
-    vecs = [(i, [1.0, 0.0], 7) for i in range(20)] + [(99, [0.0, 1.0], 7)]
-    emb = spark.createDataFrame(
-        vecs, "vec_id long, embedding array<float>, label int"
-    )
-    monkeypatch.setattr(sim_mod, "load_table", lambda s, d, n: emb)
-    out = sim_mod.embedding_label_outliers(spark, "ignored").collect()[0]
-    assert out["n_vecs"] == 21
-    assert out["n_outliers"] == 1
-
-
 def test_fano_constant_and_known_dispersion(spark, monkeypatch):
     import alexandria_pipeline_spark.operators.stats as stats_mod
 
