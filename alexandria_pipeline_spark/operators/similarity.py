@@ -554,7 +554,6 @@ def knn_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 @query(
     "vector_stats",
     oracle=f"""
